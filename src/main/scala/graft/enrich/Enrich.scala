@@ -200,49 +200,55 @@ object Enrich {
     override def extractBatch(headlines: Seq[Headline]): Seq[Topic] = headlines.map(extract)
   }
 
-  /** mapPartitions wiring: score a SentimentInput dataset in batches of
-    * `batchSize` (reference: 10, raw_content_consumer.go:63), left-join
-    * semantics by content_id — a missing score keeps the row zero-valued
-    * (sentiment_analysis_consumer.go:66-79). */
-  def scoreDataset(ds: Dataset[SentimentInput], scorer: SentimentScorer,
-      batchSize: Int = 10): Dataset[SentimentResult] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { group =>
-        val scores = scorer.scoreBatch(group.map(si => (si.content_id, si.text)))
-          .map(r => r._1 -> r).toMap
-        group.map { si =>
-          scores.get(si.content_id) match {
-            case Some((_, s, l, c)) => SentimentResult(
-              si.content_id, si.source, si.topic, si.text, si.metadata,
-              si.was_summarized, si.original_text, s, l, c)
-            case None => SentimentResult(
-              si.content_id, si.source, si.topic, si.text, si.metadata,
-              si.was_summarized, si.original_text, 0.0, "", 0.0)
-          }
-        }
+  /** Items per enrich call (reference: 10, raw_content_consumer.go:63). */
+  val BatchSize = 10
+
+  /** Score one batch with left-join semantics by content_id: a missing
+    * score keeps the row zero-valued (sentiment_analysis_consumer.go:66-79).
+    * One `scoreBatch` call per group. */
+  def scoreGroup(group: Seq[SentimentInput], scorer: SentimentScorer): Seq[SentimentResult] = {
+    val scores = scorer.scoreBatch(group.map(si => (si.content_id, si.text)))
+      .map(r => r._1 -> r).toMap
+    group.map { si =>
+      scores.get(si.content_id) match {
+        case Some((_, s, l, c)) => SentimentResult(
+          si.content_id, si.source, si.topic, si.text, si.metadata,
+          si.was_summarized, si.original_text, s, l, c)
+        case None => SentimentResult(
+          si.content_id, si.source, si.topic, si.text, si.metadata,
+          si.was_summarized, si.original_text, 0.0, "", 0.0)
       }
     }
   }
 
-  /** Summarize the long branch: text > threshold (strict, reference
+  /** Summarize one batch's long branch: text > threshold (strict, reference
     * raw_content_consumer.go:55) is replaced by its summary; original kept
     * in original_text; was_summarized set. Low-value summaries (empty or
-    * identical, summary_consumer.go:100-104) pass through unsummarized. */
-  def summarizeDataset(ds: Dataset[SentimentInput], summarizer: Summarizer,
-      batchSize: Int = 10): Dataset[SentimentInput] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { group =>
-        val (long, short) = group.partition(_.text.length > SummaryThreshold)
-        val summaries = summarizer.summarizeBatch(long.map(si => (si.content_id, si.text))).toMap
-        short ++ long.map { si =>
-          summaries.get(si.content_id).filter(su => su.nonEmpty && su != si.text) match {
-            case Some(su) => si.copy(text = su, original_text = si.text, was_summarized = true)
-            case None     => si
-          }
-        }
+    * identical, summary_consumer.go:100-104) pass through unsummarized.
+    * One `summarizeBatch` call per group (empty when no text is long);
+    * short rows come first, so the output has the group's size. */
+  def summarizeGroup(group: Seq[SentimentInput], summarizer: Summarizer): Seq[SentimentInput] = {
+    val (long, short) = group.partition(_.text.length > SummaryThreshold)
+    val summaries = summarizer.summarizeBatch(long.map(si => (si.content_id, si.text))).toMap
+    short ++ long.map { si =>
+      summaries.get(si.content_id).filter(su => su.nonEmpty && su != si.text) match {
+        case Some(su) => si.copy(text = su, original_text = si.text, was_summarized = true)
+        case None     => si
       }
     }
+  }
+
+  /** mapPartitions wiring of [[scoreGroup]] in batches of `batchSize`. */
+  def scoreDataset(ds: Dataset[SentimentInput], scorer: SentimentScorer,
+      batchSize: Int = BatchSize): Dataset[SentimentResult] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions(_.grouped(batchSize).flatMap(scoreGroup(_, scorer)))
+  }
+
+  /** mapPartitions wiring of [[summarizeGroup]] in batches of `batchSize`. */
+  def summarizeDataset(ds: Dataset[SentimentInput], summarizer: Summarizer,
+      batchSize: Int = BatchSize): Dataset[SentimentInput] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions(_.grouped(batchSize).flatMap(summarizeGroup(_, summarizer)))
   }
 }

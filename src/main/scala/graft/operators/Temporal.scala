@@ -1641,7 +1641,9 @@ object Temporal {
         // (keyless: one global battery over the bounded delay-second grid).
         gridPercentiles(delays, Seq.empty, col("delay_s"),
             Seq("p50_s" -> 0.5, "p90_s" -> 0.9))
-          .select(col("__n").as("n_converted"), col("__min").as("min_s"),
+          // keyless aggregate over an empty conversion set: __n is NULL
+          // where the oracle's count(*) reads 0 (the rest stay NULL)
+          .select(coalesce(col("__n"), lit(0L)).as("n_converted"), col("__min").as("min_s"),
             col("p50_s"), col("p90_s"), col("__max").as("max_s"),
             expr("__sum * 1000 div __n").as("mean_milli_s"))
       },

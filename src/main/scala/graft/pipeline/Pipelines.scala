@@ -65,15 +65,21 @@ object Pipelines {
 
   /** §3.2 router + scoring: RawContent → SentimentInput (T9,
     * raw_to_sa_input.go:7-13) → summarize the long branch (T10/T12/T14) →
-    * lexicon-score (T15) with left-join-by-content_id semantics (T16). */
+    * lexicon-score (T15) with left-join-by-content_id semantics (T16).
+    * One typed pass: each batch of [[BatchSize]] rows is summarized and
+    * then scored by the same kernels as `scoreDataset(summarizeDataset(..))`.
+    * Summarizing keeps a batch's size, so the scorer sees the same batches
+    * the two-pass form gives it. */
   def score(raw: Dataset[RawContent],
       summarizer: Summarizer = ExtractiveSummarizer(),
       scorer: SentimentScorer = LexiconScorer): Dataset[SentimentResult] = {
     import raw.sparkSession.implicits._
-    val inputs = raw.map(rc => SentimentInput(
-      rc.content_id, rc.source, rc.topic, rc.text, rc.metadata,
-      was_summarized = false, original_text = null))
-    scoreDataset(summarizeDataset(inputs, summarizer), scorer)
+    raw.mapPartitions(_.grouped(BatchSize).flatMap { group =>
+      val inputs = group.map(rc => SentimentInput(
+        rc.content_id, rc.source, rc.topic, rc.text, rc.metadata,
+        was_summarized = false, original_text = null))
+      scoreGroup(summarizeGroup(inputs, summarizer), scorer)
+    })
   }
 
   /** End-to-end: ingest → route/summarize → score. */

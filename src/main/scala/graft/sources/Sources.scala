@@ -4,6 +4,7 @@ import graft.schema.Models
 import graft.schema.Models._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 /** Batch sources and TTL'd table sinks (reference S1/S2/S6 + K3/K4).
   *
@@ -59,22 +60,38 @@ object Sources {
     * already exists (unexpired) in the table are skipped first — the
     * reference's check-Valkey-before-publish flow
     * (producer/fetch.go:155-173) and the write discipline that makes
-    * at-least-once streaming delivery exactly-once-by-key at the store. */
+    * at-least-once streaming delivery exactly-once-by-key at the store.
+    * The skip set is [[liveKeys]], not `readCurrent(...).select(pk)`: the
+    * same keys without the keep-latest window. */
   def upsertWithTtl(df: DataFrame, table: String, pk: String, ttlHours: Int = 24): Unit = {
     // fsExists: a local-File check would silently skip the anti-join and
     // degrade upsert to plain append on non-local schemes
     val fresh =
-      if (fsExists(df.sparkSession, table)) {
-        val existing = readCurrent(df.sparkSession, table, pk).select(pk)
-        df.join(existing, Seq(pk), "left_anti")
-      } else df
+      if (fsExists(df.sparkSession, table))
+        df.join(liveKeys(df.sparkSession, table, df.schema(pk)), Seq(pk), "left_anti")
+      else df
     appendWithTtl(fresh, table, pk, ttlHours)
   }
+
+  /** The keys of a TTL'd table that have an unexpired row: a key-only
+    * probe reading `(pk, expires_at)` under an explicit schema (no
+    * schema-inference job), TTL-filtered, projected to the key. It needs
+    * no keep-latest window: a key has a surviving [[readCurrent]] row
+    * exactly when it has ANY unexpired row, so this key set equals
+    * `readCurrent(...).select(pk)` without a shuffle and sort of the
+    * whole (ever-growing) table. May repeat a key. */
+  private[graft] def liveKeys(spark: SparkSession, table: String, pk: StructField): DataFrame =
+    spark.read.schema(StructType(Seq(pk, StructField("expires_at", TimestampType))))
+      .parquet(table)
+      .filter(col("expires_at") > current_timestamp())
+      .select(pk.name)
 
   /** S6 — snapshot read of a TTL'd table: expired rows are invisible, and
     * PK-dedup keeps the LATEST surviving row (upsert read semantics). The
     * TTL filter prunes at scan time; the keep-latest window shuffles on
-    * the PK — the same key the table is written by. */
+    * the PK — the same key the table is written by. The window picks ONE
+    * row per key; a read that only asks which keys survive
+    * ([[liveKeys]], the [[upsertWithTtl]] probe) does not need it. */
   def readCurrent(spark: SparkSession, table: String, pk: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     spark.read.parquet(table)
@@ -96,10 +113,15 @@ object Sources {
 
   /** T1 — parse Kafka wire rows back to typed columns; malformed value →
     * null struct, dropped (drop-on-parse-failure,
-    * utils/kafka_helpers.go:18-26 + raw_content_consumer.go:42-44). */
-  def fromWire(df: DataFrame, schema: org.apache.spark.sql.types.StructType,
-      requiredField: String): DataFrame =
-    df.select(from_json(col("value").cast("string"), schema).as("r"))
-      .filter(col(s"r.$requiredField").isNotNull)
-      .select("r.*")
+    * utils/kafka_helpers.go:18-26 + raw_content_consumer.go:42-44).
+    *
+    * The parsed struct is expanded by a generator (`inline` of a
+    * one-element array) rather than a projection: filters on its fields —
+    * the required-field check here, ingest's text filter downstream —
+    * cannot be pushed below a Generate, so `from_json` runs once per
+    * record instead of once per filter that references it. A null struct
+    * inlines to an all-null row, which the required-field check drops. */
+  def fromWire(df: DataFrame, schema: StructType, requiredField: String): DataFrame =
+    df.select(inline(array(from_json(col("value").cast("string"), schema))))
+      .filter(col(requiredField).isNotNull)
 }

@@ -6,6 +6,9 @@ import graft.enrich.Enrich._
 import graft.pipeline.Pipelines
 import graft.schema.Models._
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
+
+import scala.jdk.CollectionConverters._
 
 /** Enrichment traits (T12/T15/T17) + pipeline assembly (§3). */
 class EnrichSpec extends SparkSpec {
@@ -105,5 +108,57 @@ class EnrichSpec extends SparkSpec {
     assert(out("p1").sentiment_label == "POSITIVE")
     assert(out("p2").sentiment_label == "NEGATIVE")
     assert(out.values.forall(r => !r.was_summarized))
+  }
+
+  test("Pipelines.score equals scoreDataset(summarizeDataset(..)) row for row, call for call") {
+    val meta = ContentMetadata(ts, "a", "s", "p", null)
+    val long = (1 to 60).map(i => s"Sentence $i is good or bad.").mkString(" ")
+    val raw = (0 until 57).map { i =>
+      val text = if (i % 3 == 0) s"$long tail $i" else s"short good post $i"
+      RawContent(f"id$i%02d", "reddit", "t", text, meta)
+    }.toDS().coalesce(2) // partitions longer than a batch, each with a short tail
+    // both forms must call the enrich models with the same batches
+    def sizes(tag: String) = spark.sparkContext.collectionAccumulator[Int](tag)
+    val (fs, fc, ss, sc) = (sizes("fs"), sizes("fc"), sizes("ss"), sizes("sc"))
+    val fused = Pipelines.score(raw, EnrichSpec.LowValueSummarizer(fs),
+      EnrichSpec.DroppingScorer(fc)).collect().toSeq
+    val inputs = raw.map(rc => SentimentInput(rc.content_id, rc.source, rc.topic, rc.text,
+      rc.metadata, was_summarized = false, original_text = null))
+    val split = scoreDataset(summarizeDataset(inputs, EnrichSpec.LowValueSummarizer(ss)),
+      EnrichSpec.DroppingScorer(sc)).collect().toSeq
+    assert(fused == split)
+    assert(fused.map(_.content_id).sorted == raw.collect().map(_.content_id).toSeq.sorted)
+    assert(fused.exists(r => r.sentiment_label == "" && r.sentiment_score == 0.0), "zero fill")
+    assert(fused.exists(_.was_summarized), "a real summary is kept")
+    assert(fused.filter(r => r.content_id.endsWith("0") || r.content_id.endsWith("1"))
+      .forall(!_.was_summarized), "empty and identical summaries pass through")
+    def calls(a: CollectionAccumulator[Int]) =
+      a.value.asScala.toSeq.map(_.intValue).sorted
+    assert(calls(fs) == calls(ss) && calls(fc) == calls(sc))
+    assert(calls(fc).sum == 57 && (calls(fs) ++ calls(fc)).forall(_ <= BatchSize))
+  }
+}
+
+object EnrichSpec {
+  /** Summarizer with every low-value branch: ids ending in 0 get an empty
+    * summary, ids ending in 1 the text itself, the rest a real summary.
+    * Records each call's batch size. */
+  final case class LowValueSummarizer(sizes: CollectionAccumulator[Int]) extends Summarizer {
+    override def summarizeBatch(b: Seq[(String, String)]): Seq[(String, String)] = {
+      sizes.add(b.size)
+      b.map { case (id, text) =>
+        id -> (if (id.endsWith("0")) "" else if (id.endsWith("1")) text
+          else ExtractiveSummarizer().summarize(text))
+      }
+    }
+  }
+
+  /** Scorer that returns nothing for ids ending in 2 or 5 (the zero-fill
+    * path). Records each call's batch size. */
+  final case class DroppingScorer(sizes: CollectionAccumulator[Int]) extends SentimentScorer {
+    override def scoreBatch(b: Seq[(String, String)]): Seq[(String, Double, String, Double)] = {
+      sizes.add(b.size)
+      LexiconScorer.scoreBatch(b.filterNot(p => p._1.endsWith("2") || p._1.endsWith("5")))
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.schema.Models
+import graft.pipeline.Pipelines
 import graft.schema.Models._
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
@@ -68,5 +69,45 @@ class SourcesSpec extends SparkSpec {
     val back = Sources.fromWire(withJunk, Models.rawContentSchema, "content_id")
     val rows = back.as[RawContent].collect()
     assert(rows.length == 1 && rows.head == raw.head())
+  }
+
+  test("upsert sink contract: missing table, unexpired skip, expired rewrite, in-batch dup") {
+    val table = tmp("graft_upsert_") + "/t"
+    def rows(pk: String) = spark.read.parquet(table).filter(col("pk") === pk)
+      .select("v").as[String].collect().toSeq.sorted
+    // missing table: plain append, a pk repeated inside the batch written once
+    Sources.upsertWithTtl(Seq(("k1", "a"), ("k1", "a"), ("k2", "b")).toDF("pk", "v"), table, "pk")
+    assert(rows("k1") == Seq("a") && rows("k2") == Seq("b"))
+    // an unexpired stored pk is skipped; a new pk is written
+    Sources.upsertWithTtl(Seq(("k1", "a2"), ("k3", "c")).toDF("pk", "v"), table, "pk")
+    assert(rows("k1") == Seq("a") && rows("k3") == Seq("c"))
+    // a pk whose only row has expired is written again, and reads as the new row
+    Sources.appendWithTtl(Seq(("k4", "old")).toDF("pk", "v"), table, "pk", ttlHours = -1)
+    Sources.upsertWithTtl(Seq(("k4", "new"), ("k4", "new")).toDF("pk", "v"), table, "pk")
+    assert(rows("k4") == Seq("new", "old"))
+    val cur = Sources.readCurrent(spark, table, "pk").select("pk", "v").as[(String, String)]
+    assert(cur.collect().toMap == Map("k1" -> "a", "k2" -> "b", "k3" -> "c", "k4" -> "new"))
+    // the probe's key set is readCurrent's, read key-only and without a window
+    val probe = Sources.liveKeys(spark, table, Seq("x").toDF("pk").schema("pk"))
+    assert(probe.as[String].collect().toSet ==
+      Sources.readCurrent(spark, table, "pk").select("pk").as[String].collect().toSet)
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("ReadSchema: struct<pk:string,expires_at:timestamp>"), plan)
+    assert(!plan.contains("Window"), plan)
+  }
+
+  test("fromWire parses each record once; malformed and null-required rows dropped (T1)") {
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:09:58")
+    val ok = RedditPost("ai", "technology", "u1", "t", "some text", 3, ts, "p1")
+    val blank = ok.copy(post_content = "   ", id = "p2")
+    val noId = ok.copy(id = null)
+    val wire = Sources.toWire(Seq(ok, blank, noId).toDF(), "id")
+      .unionByName(Seq(("junk", "not json"), ("cut", "{\"topic\": \"ai\", \"id\"")).toDF("key", "value"))
+    val posts = Sources.fromWire(wire, Models.redditPostSchema, "id").as[RedditPost]
+    assert(posts.collect().toSet == Set(ok, blank))
+    val ingested = Pipelines.ingest(posts)
+    val plan = ingested.queryExecution.executedPlan.toString
+    assert("from_json\\(".r.findAllIn(plan).size == 1, plan)
+    assert(ingested.collect().map(_.metadata.post_id).toSeq == Seq("p1"))
   }
 }

@@ -123,4 +123,18 @@ class TemporalEdgeSpec extends SparkSpec {
     assert(out(("b", "a")) == (1L, 1L, 1000000000L))
     assert(out.size == 3)
   }
+
+  test("q89_funnel_latency: signups with no purchase read n_converted 0, not NULL") {
+    val dir = mkEvents(Seq(
+      (1L, 1L, 1000000L, "signup", 0.0),
+      (2L, 2L, 1000060L, "signup", 0.0),
+      (3L, 2L, 1000120L, "click", 1.0)))
+    val rows = SparkEntry.queries("q89_funnel_latency")(spark, dir).collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    val n = r.fieldIndex("n_converted")
+    assert(!r.isNullAt(n) && r.getLong(n) == 0L, s"n_converted: ${r.get(n)}")
+    Seq("min_s", "p50_s", "p90_s", "max_s", "mean_milli_s").foreach(c =>
+      assert(r.isNullAt(r.fieldIndex(c)), s"$c must stay NULL, as the oracle's"))
+  }
 }
