@@ -389,6 +389,13 @@ object Qh {
     val spark = df.sparkSession
     val m = metrics.length
     val nBuckets = spark.conf.get("spark.graft.rank.buckets", "256").toLong
+    // the bucket-offset read below is bounded by nBuckets·m rows, which
+    // must fit boundedCollect's control-plane bound — checked up front,
+    // in Long, before any job runs
+    require(nBuckets >= 1L && nBuckets * m <= (1L << 22),
+      s"spark.graft.rank.buckets=$nBuckets with $m ranked metric(s) needs " +
+        s"${nBuckets * m} bucket-offset rows, past the ${1L << 22}-row bound of the " +
+        "driver-side offset read; lower spark.graft.rank.buckets")
     var tagged = df.withColumn("__grk_t", tie.cast("long"))
     metrics.zipWithIndex.foreach { case ((v, _), i) =>
       tagged = tagged.withColumn(s"__grk_v$i", v.cast("long")) }
@@ -482,12 +489,13 @@ object Qh {
     *
     * Returns one row per key: the key columns, `__n` (row count), `__min`,
     * `__max`, `__sum` (exact long stats over v), and one double column per
-    * requested (name, p). `value` must be long-valued and NON-NULL (all
-    * call sites derive it from non-null testdata columns — the ClfProfile
-    * non-null-text invariant class): a null v would be counted by `__n`
-    * here but ignored by the aggregate battery this replaces. Keys may be
-    * empty (global battery) — the grid window then runs single-task, but
-    * over the bounded value domain, never the corpus. */
+    * requested (name, p). `value` must be long-valued; NULL values are
+    * ignored as `percentile()` ignores them — they count in neither `__n`
+    * nor the covering-row search, and a key whose values are all NULL
+    * reads NULL in `__n`, the stats and the percentiles (as a keyless
+    * battery over no rows does). Keys may be empty
+    * (global battery) — the grid window then runs single-task, but over
+    * the bounded value domain, never the corpus. */
   def gridPercentiles(df: DataFrame, keys: Seq[String], value: Column,
       ps: Seq[(String, Double)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -496,9 +504,10 @@ object Qh {
       .agg(count(lit(1)).as("__c"))
     val wOrd = Window.partitionBy(kc: _*).orderBy(col("__v"))
     val wAll = Window.partitionBy(kc: _*)
+    val nonNull = when(col("__v").isNotNull, col("__c"))
     val cum = grid
-      .withColumn("__cum", sum(col("__c")).over(wOrd))
-      .withColumn("__n", sum(col("__c")).over(wAll))
+      .withColumn("__cum", sum(nonNull).over(wOrd))
+      .withColumn("__n", sum(nonNull).over(wAll))
     val pickCols = ps.flatMap { case (name, p) =>
       val pos = lit(p) * (col("__n") - 1L).cast("double")
       val lower = floor(pos)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-exponent audit main (r11, VERDICT item 2): times every
   * registered query at several scale factors IN ONE SESSION and prints
@@ -44,17 +43,7 @@ object Scaling {
     }
     val sfDirs = if (dirArgs.nonEmpty) dirArgs
       else Seq("/root/testdata/sf0.1", "/root/testdata/sf0.01", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     spark.range(100000).selectExpr("id % 32 AS k", "id AS v")
       .groupBy("k").count().write.format("noop").mode("overwrite").save()
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALING_RUNS", "3").toInt)
@@ -96,7 +85,7 @@ object Scaling {
       }.mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"scaling","runs":$repeats,"cpus":$cpus,"sfs":$perSf,"failed":$failedJson}""")
+    println(s"""{"metric":"scaling","runs":$repeats,"cpus":${GraftSession.cpus},"sfs":$perSf,"failed":$failedJson}""")
     spark.stop()
   }
 }

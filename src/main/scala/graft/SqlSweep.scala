@@ -6,19 +6,9 @@ package graft
   */
 object SqlSweep {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR")
     val dir = "/root/testdata/sf0.001"
     Tables.registerAll(spark, dir)
-    sys.env.get("SQLSWEEP_NO_BROADCAST").foreach(_ =>
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1"))
     spark.conf.set("spark.sql.cteRecursionLevelLimit", "4096")
     val names =
       if (args.nonEmpty) args.toSeq

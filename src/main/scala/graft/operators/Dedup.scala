@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.{QueryDef, Qh}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operator family over `documents` — the LLM-training-data
   * pipeline mandate: exact (hash groupBy), MinHash+LSH (shingle → minhash
@@ -101,6 +102,20 @@ object Dedup {
 
   def bandKeySql(j: Int): String =
     "concat_ws(':', " + (0 until RowsPerBand).map(r => s"mh${j * RowsPerBand + r}").mkString(", ") + ")"
+
+  /** The MinHash oracle's `sig` and `banded` CTEs (comma-separated, no
+    * trailing comma) over the CTE `src`: `sig` holds the `carry` columns
+    * plus the [[MinHashes]] minhashes mh0.. of the hash-array column
+    * `hashCol`, and `banded` one row per (doc, band) with the `carry`
+    * columns, `band` and `bkey` — the DuckDB mirror of
+    * [[minhashSig]] + [[bandExplode]] every banded oracle shares. */
+  private def bandOracleSql(src: String, hashCol: String, carry: Seq[String]): String = {
+    val cs = carry.mkString(", ")
+    val mhs = (0 until MinHashes).map(i => s"${minhashSql(hashCol, i)} AS mh$i").mkString(",\n    ")
+    val bandRows = (0 until Bands).map(j => s"SELECT $cs, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
+      .mkString("\nUNION ALL\n")
+    s"sig AS (SELECT $cs,\n    $mhs\n  FROM $src),\nbanded AS ($bandRows)"
+  }
 
   /** SimHash: 60-bit fingerprint = 4 bands × 15 bits (Manku et al.,
     * "Detecting Near-Duplicates for Web Crawling", WWW'07 shape: wide
@@ -430,15 +445,9 @@ object Dedup {
           .orderBy("doc_id")
       },
       Some {
-        val mhs = (0 until MinHashes).map(i => s"${minhashSql("th", i)} AS mh$i").mkString(",\n    ")
-        val bandRows = (0 until Bands).map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-          .mkString("\nUNION ALL\n")
         s"""WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tk,
            |    ${tokHashesSql("text")} AS th FROM documents),
-           |sig AS (SELECT doc_id,
-           |    $mhs
-           |  FROM base),
-           |banded AS ($bandRows),
+           |${bandOracleSql("base", "th", Seq("doc_id"))},
            |bucket_min AS (SELECT band, bkey, MIN(doc_id) AS min_id FROM banded GROUP BY band, bkey),
            |cand AS (SELECT DISTINCT b.doc_id, m.min_id FROM banded b
            |         JOIN bucket_min m ON b.band = m.band AND b.bkey = m.bkey
@@ -512,18 +521,11 @@ object Dedup {
           .orderBy("matches")
       },
       Some {
-        val mhs = (0 until MinHashes).map(i => s"${minhashSql("th", i)} AS mh$i").mkString(",\n    ")
-        val bandRows = (0 until Bands).map(j =>
-          s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-          .mkString("\nUNION ALL\n")
         val eq = (0 until MinHashes).map(i =>
           s"CASE WHEN x.mh$i = y.mh$i THEN 1 ELSE 0 END").mkString(" + ")
         s"""WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tk,
            |    ${tokHashesSql("text")} AS th FROM documents),
-           |sig AS (SELECT doc_id, tk,
-           |    $mhs
-           |  FROM base),
-           |banded AS ($bandRows),
+           |${bandOracleSql("base", "th", Seq("doc_id", "tk"))},
            |bucket_min AS (SELECT band, bkey, MIN(doc_id) AS a FROM banded GROUP BY band, bkey),
            |cand AS (SELECT DISTINCT m.a, b.doc_id AS b
            |  FROM banded b JOIN bucket_min m ON b.band = m.band AND b.bkey = m.bkey
@@ -598,130 +600,90 @@ object Dedup {
     // this catches re-orderings the unigram Jaccard (q28a) misses. The
     // oracle applies the identical prefilter — candidate-generation is part
     // of the declared operator semantics (as with any LSH method, a pair
-    // that collides in no band is not reported).
+    // that collides in no band is not reported). Each candidate is decided
+    // once, inside its first colliding bucket ([[verifyInBucket]]);
+    // rounded J ≥ 0.3 is the integer test jaccard4 ≥ 3000.
     "dedup_ngram_jaccard" -> QueryDef(
       (s, d) => {
+        import s.implicits._
         val base = tbl(s, d, "documents")
           .select(col("source"), col("doc_id"), shingles3(tokHashesSeq(col("text"))).as("sh"))
           .filter(size(col("sh")) > 0)
-          // materialized once (r13 optimization round): banding + both
-          // verification array fetches re-ran the tokenize-shingle chain
-          // per consumer - four corpus passes (plan-audited) for one
-          // reusable (source, doc_id, sh) projection
-          .localCheckpoint()
-        val sig = base.withColumn("mhs", minhashSig(col("sh")))
-        val banded = bandExplode(sig, "mhs", Seq("source", "doc_id"))
-        // candidate id-pairs first (distinct across bands), THEN fetch the
-        // shingle arrays and compute Jaccard exactly once per pair
-        val pairs = banded.select(col("source"), col("band"), col("bkey"), col("doc_id").as("a"))
-          .join(banded.select(col("source"), col("band"), col("bkey"), col("doc_id").as("b")),
-            Seq("source", "band", "bkey"))
-          .filter(col("a") < col("b"))
-          .select("source", "a", "b").distinct()
-        val shOf = base.select(col("doc_id"), col("sh"))
-        pairs
-          .join(shOf.select(col("doc_id").as("a"), col("sh").as("sa")), Seq("a"))
-          .join(shOf.select(col("doc_id").as("b"), col("sh").as("sb")), Seq("b"))
-          .select(col("source"), col("a"), col("b"), jaccard(col("sa"), col("sb")).as("jaccard"))
-          .filter(col("jaccard") >= 0.3)
-          .orderBy("source", "a", "b")
+        verifyInBucket("dedup_ngram_jaccard", base, col("source"), col("sh"),
+            size(col("sh")), sort_array(col("sh")), window = jaccardWindow(3000)) { (x, y) =>
+          val j4 = jaccard4(x, y)
+          if (j4 < 3000L) None
+          else Some((x.scope, math.min(x.id, y.id), math.max(x.id, y.id), j4 / 10000.0))
+        }.toDF("source", "a", "b", "jaccard").orderBy("source", "a", "b")
       },
-      Some {
-        val mhs = (0 until MinHashes).map(i => s"${minhashSql("sh", i)} AS mh$i").mkString(",\n    ")
-        val bandRows = (0 until Bands).map(j =>
-          s"SELECT source, doc_id, sh, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-          .mkString("\nUNION ALL\n")
-        s"""WITH base AS (SELECT source, doc_id, ${shingles3Sql(tokHashesSeqSql("text"))} AS sh FROM documents),
-           |nonempty AS (SELECT * FROM base WHERE len(sh) > 0),
-           |sig AS (SELECT source, doc_id, sh,
-           |    $mhs
-           |  FROM nonempty),
-           |banded AS ($bandRows)
-           |SELECT DISTINCT x.source AS source, x.doc_id AS a, y.doc_id AS b,
-           |  ${jaccardSql("x.sh", "y.sh")} AS jaccard
-           |FROM banded x JOIN banded y
-           |  ON x.source = y.source AND x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-           |WHERE ${jaccardSql("x.sh", "y.sh")} >= 0.3
-           |ORDER BY source, a, b""".stripMargin
-      }),
+      Some(s"""WITH base AS (SELECT source, doc_id, ${shingles3Sql(tokHashesSeqSql("text"))} AS sh FROM documents),
+              |nonempty AS (SELECT * FROM base WHERE len(sh) > 0),
+              |${bandOracleSql("nonempty", "sh", Seq("source", "doc_id", "sh"))}
+              |SELECT DISTINCT x.source AS source, x.doc_id AS a, y.doc_id AS b,
+              |  ${jaccardSql("x.sh", "y.sh")} AS jaccard
+              |FROM banded x JOIN banded y
+              |  ON x.source = y.source AND x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
+              |WHERE ${jaccardSql("x.sh", "y.sh")} >= 0.3
+              |ORDER BY source, a, b""".stripMargin)),
 
     // Character-level fuzzy dedup: exact Levenshtein edit RATE over the
     // same MinHash-LSH candidates the shingle methods use. Token-set
     // Jaccard is blind to character-level corruption (OCR noise, typo
     // farms, template fills) because one flipped char destroys the whole
     // token; edit distance sees it. Cost control at scale is structural:
-    // (a) candidates come from the band equi-join, never all-pairs; (b)
-    // the O(len²) DP runs on a 256-char prefix (bounded constant work per
-    // pair, and a prefix edit is a lower bound on the full-doc edit for
-    // same-prefix-length docs); (c) rate = dist × 1000 div max(len) in
-    // exact integer permille — both operands non-negative, so the one
-    // engine-divergent division (negative truncation) cannot occur.
+    // (a) candidates are verified inside their band bucket, never
+    // all-pairs; (b) the O(len²) DP runs on a 256-char prefix (bounded
+    // constant work per pair, and a prefix edit is a lower bound on the
+    // full-doc edit for same-prefix-length docs); (c) rate = dist × 1000
+    // div max(len) in exact integer permille — both operands
+    // non-negative, so the one engine-divergent division (negative
+    // truncation) cannot occur. Lengths and distances are in code points
+    // (UTF8String numChars / levenshteinDistance — what Spark's length
+    // and levenshtein evaluate).
     "dedup_edit_distance" -> QueryDef(
       (s, d) => {
+        import s.implicits._
         val base = tbl(s, d, "documents")
           .select(col("source"), col("doc_id"),
             substring(col("text"), 1, 256).as("pfx"),
             shingles3(tokHashesSeq(col("text"))).as("sh"))
           .filter(size(col("sh")) > 0)
-        val sig = base.withColumn("mhs", minhashSig(col("sh")))
-        val banded = bandExplode(sig, "mhs", Seq("source", "doc_id"))
-        val pairs = banded.select(col("source"), col("band"), col("bkey"), col("doc_id").as("a"))
-          .join(banded.select(col("source"), col("band"), col("bkey"), col("doc_id").as("b")),
-            Seq("source", "band", "bkey"))
-          .filter(col("a") < col("b"))
-          .select("source", "a", "b").distinct()
-        val pOf = base.select(col("doc_id"), col("pfx"))
-        pairs
-          .join(pOf.select(col("doc_id").as("a"), col("pfx").as("pa")), Seq("a"))
-          .join(pOf.select(col("doc_id").as("b"), col("pfx").as("pb")), Seq("b"))
-          // Exact pre-prune (r12, flagged by the 4th-decade scaling
-          // audit): edit distance is >= the length gap and the permille
-          // rate d*1000 div L is monotone in d, so a pair whose GAP rate
-          // already floor-divides past 200 cannot pass the final filter
-          // — its DP never runs. The prune uses THE SAME floor-div
-          // expression as the final filter (not exact arithmetic, which
-          // would drop true rates in the open interval (200, 201)
-          // permille that floor to exactly 200 and belong in the
-          // oracle-exact result).
-          .filter(expr("abs(length(pa) - length(pb)) * 1000 " +
-            "div greatest(length(pa), length(pb)) <= 200"))
-          // Banded DP for the survivors: only distances <= 51
-          // (= floor(0.200 * 256), the loosest bound any 256-char
-          // prefix pair can pass) survive the rate filter, so the
-          // threshold form computes O(threshold * len) cells instead of
-          // O(len^2) and returns -1 past the band — and a -1 pair has
-          // dist > 51 >= 200 permille of max(len), so dropping it is
-          // again exact.
-          .withColumn("edit_dist", levenshtein(col("pa"), col("pb"), 51).cast("long"))
-          .filter(col("edit_dist") >= 0)
-          .withColumn("edit_rate_milli",
-            expr("edit_dist * 1000 div greatest(length(pa), length(pb))"))
-          .filter(col("edit_rate_milli") <= 200)
-          .select("source", "a", "b", "edit_dist", "edit_rate_milli")
-          .orderBy("source", "a", "b")
+        // Window = the exact length-gap prune (r12): edit distance is ≥
+        // the gap and d*1000 div L is monotone in d, so a pair whose GAP
+        // rate already floor-divides past 200 cannot pass — and with
+        // members sorted by length the gap rate only grows along the
+        // inner loop. It uses THE SAME floor-div as the final test (exact
+        // arithmetic would drop true rates in (200, 201) permille that
+        // floor to 200 and belong in the result).
+        verifyInBucket("dedup_edit_distance", base, col("source"), col("sh"),
+            length(col("pfx")), lit(null).cast("array<bigint>"), col("pfx"),
+            window = (na, nb) => nb == 0L || (nb - na) * 1000L / nb <= 200L) { (x, y) =>
+          val a = if (x.id < y.id) x else y
+          val b = if (x.id < y.id) y else x
+          // Banded DP: only distances ≤ 51 (= floor(0.200 * 256), the
+          // loosest bound any 256-char prefix pair can pass) can survive
+          // the rate test, so the threshold form computes O(51 * len)
+          // cells and returns -1 past the band — such a pair has
+          // dist > 51 ≥ 200 permille of max(len), so dropping it is exact.
+          val dist = UTF8String.fromString(a.pfx).levenshteinDistance(UTF8String.fromString(b.pfx), 51)
+          val rate = dist * 1000L / math.max(a.n, b.n)
+          if (dist < 0 || rate > 200L) None
+          else Some((a.scope, a.id, b.id, dist.toLong, rate))
+        }.toDF("source", "a", "b", "edit_dist", "edit_rate_milli").orderBy("source", "a", "b")
       },
-      Some {
-        val mhs = (0 until MinHashes).map(i => s"${minhashSql("sh", i)} AS mh$i").mkString(",\n    ")
-        val bandRows = (0 until Bands).map(j =>
-          s"SELECT source, doc_id, pfx, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-          .mkString("\nUNION ALL\n")
-        s"""WITH base AS (SELECT source, doc_id, substring(text, 1, 256) AS pfx,
-           |    ${shingles3Sql(tokHashesSeqSql("text"))} AS sh FROM documents),
-           |nonempty AS (SELECT * FROM base WHERE len(sh) > 0),
-           |sig AS (SELECT source, doc_id, pfx, sh,
-           |    $mhs
-           |  FROM nonempty),
-           |banded AS ($bandRows)
-           |SELECT DISTINCT x.source AS source, x.doc_id AS a, y.doc_id AS b,
-           |  CAST(levenshtein(x.pfx, y.pfx) AS BIGINT) AS edit_dist,
-           |  CAST(divide(levenshtein(x.pfx, y.pfx) * 1000,
-           |       greatest(length(x.pfx), length(y.pfx))) AS BIGINT) AS edit_rate_milli
-           |FROM banded x JOIN banded y
-           |  ON x.source = y.source AND x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-           |WHERE divide(levenshtein(x.pfx, y.pfx) * 1000,
-           |      greatest(length(x.pfx), length(y.pfx))) <= 200
-           |ORDER BY source, a, b""".stripMargin
-      },
+      Some(s"""WITH base AS (SELECT source, doc_id, substring(text, 1, 256) AS pfx,
+              |    ${shingles3Sql(tokHashesSeqSql("text"))} AS sh FROM documents),
+              |nonempty AS (SELECT * FROM base WHERE len(sh) > 0),
+              |${bandOracleSql("nonempty", "sh", Seq("source", "doc_id", "pfx"))}
+              |SELECT DISTINCT x.source AS source, x.doc_id AS a, y.doc_id AS b,
+              |  CAST(levenshtein(x.pfx, y.pfx) AS BIGINT) AS edit_dist,
+              |  CAST(divide(levenshtein(x.pfx, y.pfx) * 1000,
+              |       greatest(length(x.pfx), length(y.pfx))) AS BIGINT) AS edit_rate_milli
+              |FROM banded x JOIN banded y
+              |  ON x.source = y.source AND x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
+              |WHERE divide(levenshtein(x.pfx, y.pfx) * 1000,
+              |      greatest(length(x.pfx), length(y.pfx))) <= 200
+              |ORDER BY source, a, b""".stripMargin),
       doc = "Levenshtein edit-rate dedup over LSH candidates: the character-level " +
         "near-dup signal token-set Jaccard cannot see; 256-char prefix bounds the DP"),
 
@@ -733,59 +695,39 @@ object Dedup {
     // generation (MinHash band collision) is part of the declared
     // semantics — containment-heavy pairs with tiny Jaccard may not
     // collide, which a dedicated containment sketch would fix at the cost
-    // of a second index.
+    // of a second index. No size window: a short doc inside a long one
+    // has containment 1 at any size gap.
     "dedup_containment" -> QueryDef(
       (s, d) => {
+        import s.implicits._
         val base = tbl(s, d, "documents")
           .select(col("source"), col("doc_id"), shingles3(tokHashesSeq(col("text"))).as("sh"))
           .filter(size(col("sh")) > 0)
-          // materialized once (r13 optimization round): banding + both
-          // verification array fetches re-ran the tokenize-shingle chain
-          // per consumer - four corpus passes (plan-audited) for one
-          // reusable (source, doc_id, sh) projection
-          .localCheckpoint()
-        val sig = base.withColumn("mhs", minhashSig(col("sh")))
-        val banded = bandExplode(sig, "mhs", Seq("source", "doc_id"))
-        val pairs = banded.select(col("source"), col("band"), col("bkey"), col("doc_id").as("a"))
-          .join(banded.select(col("source"), col("band"), col("bkey"), col("doc_id").as("b")),
-            Seq("source", "band", "bkey"))
-          .filter(col("a") < col("b"))
-          .select("source", "a", "b").distinct()
-        val shOf = base.select(col("doc_id"), col("sh"))
-        pairs
-          .join(shOf.select(col("doc_id").as("a"), col("sh").as("sa")), Seq("a"))
-          .join(shOf.select(col("doc_id").as("b"), col("sh").as("sb")), Seq("b"))
-          .select(col("source"), col("a"), col("b"),
-            size(array_intersect(col("sa"), col("sb"))).cast("long").as("inter"),
-            size(col("sa")).cast("long").as("na"), size(col("sb")).cast("long").as("nb"))
-          .withColumn("cont_ab_milli", expr("inter * 1000 div na"))
-          .withColumn("cont_ba_milli", expr("inter * 1000 div nb"))
-          .filter(greatest(col("cont_ab_milli"), col("cont_ba_milli")) >= 600)
+        verifyInBucket("dedup_containment", base, col("source"), col("sh"),
+            size(col("sh")), sort_array(col("sh"))) { (x, y) =>
+          val a = if (x.id < y.id) x else y
+          val b = if (x.id < y.id) y else x
+          val inter = intersectCount(a.tks, b.tks)
+          val (ab, ba) = (inter * 1000L / a.n, inter * 1000L / b.n)
+          if (math.max(ab, ba) < 600L) None
+          else Some((a.scope, a.id, b.id, inter, a.n, b.n, ab, ba))
+        }.toDF("source", "a", "b", "inter", "na", "nb", "cont_ab_milli", "cont_ba_milli")
           .orderBy("source", "a", "b")
       },
-      Some {
-        val mhs = (0 until MinHashes).map(i => s"${minhashSql("sh", i)} AS mh$i").mkString(",\n    ")
-        val bandRows = (0 until Bands).map(j =>
-          s"SELECT source, doc_id, sh, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-          .mkString("\nUNION ALL\n")
-        s"""WITH base AS (SELECT source, doc_id, ${shingles3Sql(tokHashesSeqSql("text"))} AS sh FROM documents),
-           |nonempty AS (SELECT * FROM base WHERE len(sh) > 0),
-           |sig AS (SELECT source, doc_id, sh,
-           |    $mhs
-           |  FROM nonempty),
-           |banded AS ($bandRows),
-           |cand AS (SELECT DISTINCT x.source AS source, x.doc_id AS a, y.doc_id AS b,
-           |    CAST(len(list_intersect(x.sh, y.sh)) AS BIGINT) AS inter,
-           |    CAST(len(x.sh) AS BIGINT) AS na, CAST(len(y.sh) AS BIGINT) AS nb
-           |  FROM banded x JOIN banded y
-           |    ON x.source = y.source AND x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id)
-           |SELECT source, a, b, inter, na, nb,
-           |  divide(inter * 1000, na) AS cont_ab_milli,
-           |  divide(inter * 1000, nb) AS cont_ba_milli
-           |FROM cand
-           |WHERE greatest(divide(inter * 1000, na), divide(inter * 1000, nb)) >= 600
-           |ORDER BY source, a, b""".stripMargin
-      },
+      Some(s"""WITH base AS (SELECT source, doc_id, ${shingles3Sql(tokHashesSeqSql("text"))} AS sh FROM documents),
+              |nonempty AS (SELECT * FROM base WHERE len(sh) > 0),
+              |${bandOracleSql("nonempty", "sh", Seq("source", "doc_id", "sh"))},
+              |cand AS (SELECT DISTINCT x.source AS source, x.doc_id AS a, y.doc_id AS b,
+              |    CAST(len(list_intersect(x.sh, y.sh)) AS BIGINT) AS inter,
+              |    CAST(len(x.sh) AS BIGINT) AS na, CAST(len(y.sh) AS BIGINT) AS nb
+              |  FROM banded x JOIN banded y
+              |    ON x.source = y.source AND x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id)
+              |SELECT source, a, b, inter, na, nb,
+              |  divide(inter * 1000, na) AS cont_ab_milli,
+              |  divide(inter * 1000, nb) AS cont_ba_milli
+              |FROM cand
+              |WHERE greatest(divide(inter * 1000, na), divide(inter * 1000, nb)) >= 600
+              |ORDER BY source, a, b""".stripMargin),
       doc = "asymmetric shingle containment (partial-dup / quote detection) over LSH candidates"),
 
     // Containment with a DEDICATED index — prefix-filtered, EXACT recall.
@@ -829,50 +771,39 @@ object Dedup {
     // analog of incrementalNearDup's persistent index).
     "dedup_cross_corpus" -> QueryDef(
       (s, d) => {
-        // In-bucket verification (r13 optimization round — the same
-        // reshape [[bucketSpanningEdges]] gave clusterDocs): the former
-        // plan materialized the band-collision candidate pair list, ran
-        // a corpus-wide distinct over it, then attached BOTH token
-        // arrays via two more joins — tokenizing the corpus four times
-        // and, because the verify predicate sat in a join condition AND
-        // the output projection, evaluating JaccardSim TWICE per
-        // surviving pair. On a near-dup-heavy corpus the pair rows
-        // carrying a full token array each dominate every exchange
-        // (guide §2.3/§8: the decision needs only sizes + sorted
-        // arrays, so move them ONCE). Now: one tokenize pass, one
-        // posting-table shuffle on (band, bkey) — 4 rows/doc — and each
-        // bucket task verifies its A×B members in place with the exact
-        // integer size prune + sorted-merge intersect; jaccard is
-        // computed once per candidate with the identical HALF_UP
-        // rounding as JaccardSim. Cross-band duplicates collapse in the
-        // final distinct (same pair ⇒ bit-identical jaccard).
-        val sig = tbl(s, d, "documents")
-          .select(col("doc_id"), tokHashes(col("text")).as("tk"))
-          .withColumn("mhs", minhashSig(col("tk")))
-          .withColumn("tks", sort_array(col("tk")))
-          .withColumn("n", size(col("tk")).cast("long"))
-        val banded = bandExplode(sig, "mhs", Seq("doc_id", "tks", "n", "mhs"))
-        bucketCrossVerified(banded).orderBy("a", "b")
+        import s.implicits._
+        // In-bucket verification ([[verifyInBucket]]): one tokenize pass,
+        // one posting-table shuffle on (band, bkey) — 4 rows/doc — and
+        // each bucket task verifies its A×B members in place with the
+        // exact integer size window + sorted-merge intersect, once per
+        // candidate pair (first colliding band), with JaccardSim's
+        // HALF_UP rounding. No pair list, distinct or attach join.
+        // Java remainder like Spark's %: a negative doc_id is in NEITHER
+        // corpus (doc_id % 2 = -1), exactly as the oracle's parity test.
+        val docs = tbl(s, d, "documents").select(col("doc_id"), tokHashes(col("text")).as("tk"))
+        verifyInBucket("dedup_cross_corpus", docs, lit(""), col("tk"), size(col("tk")),
+            sort_array(col("tk")), window = jaccardWindow(8000)) { (x, y) =>
+          val px = x.id % 2L
+          val py = y.id % 2L
+          if (!((px == 0L && py == 1L) || (px == 1L && py == 0L))) None
+          else {
+            val j4 = jaccard4(x, y)
+            if (j4 < 8000L) None
+            else if (px == 0L) Some((x.id, y.id, j4 / 10000.0))
+            else Some((y.id, x.id, j4 / 10000.0))
+          }
+        }.toDF("a", "b", "jaccard").orderBy("a", "b")
       },
-      Some {
-        val mhs = (0 until MinHashes).map(i => s"${minhashSql("tk", i)} AS mh$i").mkString(",\n    ")
-        val bandRows = (0 until Bands).map(j =>
-          s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-          .mkString("\nUNION ALL\n")
-        s"""WITH t AS (SELECT doc_id, ${tokHashesSql("text")} AS tk FROM documents),
-           |sig AS (SELECT doc_id,
-           |    $mhs
-           |  FROM t),
-           |banded AS ($bandRows),
-           |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-           |  FROM banded x JOIN banded y
-           |    ON x.band = y.band AND x.bkey = y.bkey
-           |   AND x.doc_id % 2 = 0 AND y.doc_id % 2 = 1)
-           |SELECT a, b, jaccard FROM (
-           |  SELECT c.a, c.b, ${jaccardSql("x.tk", "y.tk")} AS jaccard
-           |  FROM cand c JOIN t x ON x.doc_id = c.a JOIN t y ON y.doc_id = c.b)
-           |WHERE jaccard >= 0.8 ORDER BY a, b""".stripMargin
-      },
+      Some(s"""WITH t AS (SELECT doc_id, ${tokHashesSql("text")} AS tk FROM documents),
+              |${bandOracleSql("t", "tk", Seq("doc_id"))},
+              |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+              |  FROM banded x JOIN banded y
+              |    ON x.band = y.band AND x.bkey = y.bkey
+              |   AND x.doc_id % 2 = 0 AND y.doc_id % 2 = 1)
+              |SELECT a, b, jaccard FROM (
+              |  SELECT c.a, c.b, ${jaccardSql("x.tk", "y.tk")} AS jaccard
+              |  FROM cand c JOIN t x ON x.doc_id = c.a JOIN t y ON y.doc_id = c.b)
+              |WHERE jaccard >= 0.8 ORDER BY a, b""".stripMargin),
       doc = "asymmetric cross-corpus near-dup join (new crawl vs training set) " +
         "via the LSH band equi-join — never all-pairs across corpora"),
 
@@ -1414,10 +1345,6 @@ object Dedup {
           .orderBy("source")
       },
       Some {
-        val mhs = (0 until MinHashes).map(i => s"${minhashSql("th", i)} AS mh$i").mkString(",\n    ")
-        val bandRows = (0 until Bands).map(j =>
-          s"SELECT doc_id, source, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-          .mkString("\nUNION ALL\n")
         s"""WITH base AS (SELECT doc_id, source, list_distinct(string_split(text, ' ')) AS tk,
            |    ${tokHashesSql("text")} AS th FROM documents),
            |panel AS (SELECT doc_id, source, tk FROM base
@@ -1426,10 +1353,7 @@ object Dedup {
            |truth AS (SELECT DISTINCT p.source, p.doc_id AS b
            |          FROM panel p JOIN base x ON x.source = p.source AND x.doc_id < p.doc_id
            |          WHERE ${jaccardSql("x.tk", "p.tk")} >= 0.7),
-           |sig AS (SELECT doc_id, source,
-           |    $mhs
-           |  FROM base),
-           |banded AS ($bandRows),
+           |${bandOracleSql("base", "th", Seq("doc_id", "source"))},
            |bucket_min AS (SELECT source, band, bkey, MIN(doc_id) AS min_id
            |               FROM banded GROUP BY source, band, bkey),
            |cand AS (SELECT DISTINCT b.source, b.doc_id, m.min_id FROM banded b
@@ -1549,16 +1473,9 @@ object Dedup {
     * `clusters(doc_id, cluster)` — prefix with `WITH RECURSIVE`. Used by
     * the dedup_cluster and sample_split oracles so both grade against
     * the identical closure. */
-  private def clusterCteSql: String = {
-    val mhs = (0 until MinHashes).map(i => s"${minhashSql("tk", i)} AS mh$i").mkString(",\n    ")
-    val bandRows = (0 until Bands).map(j =>
-      s"SELECT source, doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM sig")
-      .mkString("\nUNION ALL\n")
+  private def clusterCteSql: String =
     s"""t AS (SELECT source, doc_id, ${tokHashesSql("text")} AS tk FROM documents),
-       |sig AS (SELECT source, doc_id,
-       |    $mhs
-       |  FROM t),
-       |banded AS ($bandRows),
+       |${bandOracleSql("t", "tk", Seq("source", "doc_id"))},
        |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
        |  FROM banded x JOIN banded y
        |    ON x.source = y.source AND x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
@@ -1572,7 +1489,6 @@ object Dedup {
        |  UNION
        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
        |clusters AS (SELECT a AS doc_id, MIN(b) AS cluster FROM reach GROUP BY a)""".stripMargin
-  }
 
   /** Transitive near-dup clustering: connected components over
     * LSH-candidate + Jaccard-verified edges (the dedup_cluster query).
@@ -1587,6 +1503,8 @@ object Dedup {
   def clusterDocs(raw: org.apache.spark.sql.DataFrame,
       checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
     checkpointDir.foreach(d => Qh.setReliableCheckpointDir(raw.sparkSession, d))
+    val spark = raw.sparkSession
+    import spark.implicits._
     def mat(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
     val docs = raw.select(col("doc_id"), col("source"), tokHashes(col("text")).as("tk"))
@@ -1609,26 +1527,24 @@ object Dedup {
     val reps = withRep.filter(col("doc_id") === col("rep"))
       .select(col("source"), col("doc_id"), col("tk"))
     // In-bucket verified spanning forest (r13, the dedup_cluster_build
-    // 4th-decade fix — see [[bucketSpanningEdges]] for the algorithm and
-    // the exactness argument). The former shape materialized the band-
-    // collision CANDIDATE pair list, ran a corpus-wide distinct over it,
-    // then fetched both token sets back via two wide shuffle joins: on a
+    // 4th-decade fix): the former shape materialized the band-collision
+    // CANDIDATE pair list, ran a corpus-wide distinct over it, then
+    // fetched both token sets back via two wide shuffle joins — on a
     // corpus whose ambient similarity makes band collisions ~all-pairs
-    // (the synthetic 30-token vocabulary: ~83% of within-source pairs
-    // collide, measured 1.5k/148k/15.3M true edges across three decades
-    // — the INPUT GRAPH is Θ(n²)), that is three shuffles of an Θ(n²)
-    // row set plus one Jaccard evaluation and two row copies per
-    // candidate. The grouped form shuffles only the linear posting table
-    // (4 rows/doc), verifies inside the task with a union-find that
-    // skips pairs already connected, and emits per bucket a spanning
-    // FOREST of its verified subgraph — ≤ members−1 edges — so the
-    // propagation input stays linear even when the true edge multiset is
-    // quadratic.
-    val sig = reps.withColumn("mhs", minhashSig(col("tk")))
-      .withColumn("n", size(col("tk")).cast("long"))
-    val banded = bandExplode(sig.withColumn("tks", sort_array(col("tk"))),
-      "mhs", Seq("source", "doc_id", "tks", "n"))
-    val pairs = bucketSpanningEdges(banded).distinct()
+    // (the synthetic 30-token vocabulary: measured 1.5k/148k/15.3M true
+    // edges across three decades, the INPUT GRAPH is Θ(n²)) three
+    // shuffles of a Θ(n²) row set. [[verifyInBucket]] in forest mode
+    // shuffles only the linear posting table and emits per bucket task a
+    // spanning forest of its verified edges — ≤ members−1 rows, each pair
+    // decided once — so the propagation input stays linear with the same
+    // components. The union-find short-circuit skips the intersect for
+    // a pair already connected in its task (most pairs of a clique).
+    // J = round(inter/denom, 4) ≥ 0.8 is the integer test jaccard4 ≥ 8000.
+    val pairs = verifyInBucket("clusterDocs", reps, col("source"), col("tk"),
+        size(col("tk")), sort_array(col("tk")), window = jaccardWindow(8000),
+        forest = true) { (x, y) =>
+      if (jaccard4(x, y) < 8000L) None else Some((math.min(x.id, y.id), math.max(x.id, y.id)))
+    }.toDF("a", "b")
     val labels = propagateMin(pairs, mat)
     membership
       .join(labels.select(col("doc_id").as("rep"), col("label")), Seq("rep"), "left")
@@ -1636,30 +1552,6 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Min-label propagation to convergence over an undirected edge list
-    * `pairs(a, b)` — the iterative core shared by [[clusterDocs]] (corpus
-    * closure) and [[mergeClusters]] (batch-sized affected graph). Returns
-    * (doc_id, label) for every vertex APPEARING IN AN EDGE; isolated
-    * vertices are the caller's business (they can never change label).
-    *
-    * Iterates ONLY over vertices that have an edge: isolated docs (the
-    * overwhelming majority of a 100 TB corpus) can never change label,
-    * so keeping them in the loop would shuffle the whole corpus every
-    * round.
-    *
-    * Each vertex also gets a flagged SELF-loop, which buys one round =
-    * exactly TWO shuffles: min(lb) over the closed neighborhood is the
-    * new label, and the self row carries the vertex's previous label —
-    * so convergence detection needs no second join against the prior
-    * state (a third shuffle per round in the naive formulation).
-    *
-    * Loops to convergence — the dedup_cluster oracle's recursive CTE
-    * computes the UNBOUNDED closure, so a round cap would diverge on long
-    * chains. Each round combines neighbor-min propagation with POINTER
-    * JUMPING (label := min(label, label(label))), so chains converge in
-    * O(log eccentricity) rounds, not O(eccentricity) — a 10k-link drift
-    * chain needs ~14 rounds, not 10k sequential jobs. The cap is a pure
-    * runaway guard and exits LOUDLY. */
   /** Hybrid component labeling for MICRO-BATCH graphs (the mergeClusters
     * path): a batch's verified near-dup edge set is usually tiny — one
     * checkpoint + count decide, and under `spark.graft.merge
@@ -1712,73 +1604,98 @@ object Dedup {
     }
   }
 
-  /** Per-band-bucket verified SPANNING FOREST — the candidate-verification
-    * core of [[clusterDocs]] (r13). Input: the banded posting table with
-    * each posting carrying its doc's SORTED distinct-token-hash array
-    * `tks` and set size `n`. Output: (a, b) edges, a < b.
+  /** One LSH posting as [[verifyInBucket]] sees it: doc `id` of `scope`
+    * (its source, or "" when the query is unscoped) in bucket (`band`,
+    * `bkey`), with its size `n`, its SORTED hash set `tks` (null when the
+    * pair rule reads none), its full MinHash signature `mhs` and its text
+    * prefix `pfx` (null unless the rule reads it). `uv` and `slice` tag a
+    * hot bucket's slice-pair sub-task; both are 0 in a cold bucket. */
+  private[graft] case class Posting(scope: String, band: Int, bkey: String, id: Long,
+      n: Long, tks: Array[Long], mhs: Array[Long], pfx: String, uv: Int, slice: Int)
+
+  /** The one LSH candidate verifier of the dedup family (dedup_cross_corpus,
+    * clusterDocs, dedup_ngram_jaccard, dedup_containment,
+    * dedup_edit_distance). `docs` carries `doc_id`; `set` is the hash array
+    * the MinHash signature is taken over, `n` the member size the `window`
+    * reads, `tks` the sorted duplicate-free set [[intersectCount]] reads
+    * and `pfx` the optional text prefix. Each caller supplies only its
+    * per-pair `rule`, called with x before y in (n, doc_id) order; `Some`
+    * emits.
     *
-    * Inside each (source, band, bkey) group the task enumerates member
-    * pairs ascending by set size with three exact prunes:
+    * Shape: one posting row per (doc, band), ONE shuffle of that linear
+    * table on (scope, band, bkey), and every candidate pair is verified
+    * inside its bucket's task — no pair list is ever materialized, so
+    * there is no band self-join, no distinct over pairs and no join that
+    * fetches the verified arrays back. Inside a task the members are
+    * sorted by (n asc, doc_id asc) and the inner loop stops at the first
+    * member the `window` rejects: callers pass a window that is monotone
+    * in the larger size and false only where the rule must fail.
     *
-    *  1. SIZE WINDOW: J = round(|∩|/|∪|, 4) ≥ 0.8 requires the true
-    *     rational |∩|/|∪| ≥ 0.79995 (HALF_UP), and |∩| ≤ min(na,nb),
-    *     |∪| ≥ max(na,nb) — so na·100000 < nb·79995 (members sorted by
-    *     n, na ≤ nb) makes the predicate impossible and, n being sorted,
-    *     ends the inner loop.
-    *  2. UNION-FIND SHORT-CIRCUIT: a pair already connected within the
-    *     bucket's verified subgraph is skipped WITHOUT computing the
-    *     intersection — correctness below. On a clique-heavy corpus this
-    *     removes almost all true-pair verifications (the clique's edges
-    *     collapse to a path).
-    *  3. MERGE INTERSECT: both arrays are sorted and duplicate-free
-    *     ([[tokHashes]] distinct=true), so |∩| is one allocation-free
-    *     linear merge — no per-pair hash set, no joined-row copy.
+    * FIRST-BAND UNIQUENESS: a pair is verified only in the first band
+    * where it collides — both signatures' band-k halves equal for no
+    * k < this bucket's band. Two docs share at most one bucket per band
+    * (the band key is a function of the signature halves, and the scope
+    * is part of the bucket), so the pair's first colliding band names
+    * exactly one bucket, and each pair is decided once in the corpus.
+    * Output therefore needs no distinct, and a rule's output rows are
+    * globally unique whenever they are unique per pair.
     *
-    * The verification predicate is the INTEGER form
-    * `inter·100000 ≥ 79995·(na+nb−inter) ∧ denom > 0` — exactly
-    * [[graft.plans.JaccardSim]]'s `round(inter/denom, 4) ≥ 0.8`: the
-    * rounded predicate holds iff the true rational ≥ 0.79995 (HALF_UP on
-    * the shortest-decimal rendering of the correctly-rounded double can
-    * only disagree with the rational if the double error ≥ the rational's
-    * distance to the boundary, which is ≥ 1/(100000·denom) — double ulp
-    * near 0.8 is ~1.1e-16, so disagreement needs denom > 10¹¹); the
-    * denom=0 guard mirrors JaccardSim's NULL for two empty sets.
+    * HOT-BUCKET SPLIT (guide §2.5): a bucket with more than
+    * `spark.graft.dedup.sliceThreshold` members (the ≤ 64 hot keys are a
+    * bounded driver-side list; past that the split is skipped) is cut S =
+    * `spark.graft.dedup.bucketSlices` ways by pmod(doc_id, S). Each member
+    * is copied to the S sub-tasks (min(s, w), max(s, w)): (u, u) verifies
+    * within-slice pairs, (u, v ≠ u) only cross-slice pairs, so every
+    * unordered pair lands in exactly one sub-task and the quadratic
+    * spreads over S(S+1)/2 tasks. Cold buckets run single-task. Every
+    * task buffers its members under `spark.graft.dedup.maxBucket`
+    * ([[boundedBucket]]).
     *
-    * EXACTNESS of the forest: the verified edge set of the corpus is
-    * E = ∪_buckets E_bucket (every J≥0.8 pair band-collides somewhere, and
-    * each bucket sees the SAME predicate). Replacing each E_bucket with a
-    * spanning forest of (bucket members, E_bucket) preserves that
-    * bucket-subgraph's connectivity, hence preserves connectivity of the
-    * union — the connected components, which are all [[clusterDocs]]
-    * consumes, are IDENTICAL. The union-find emits an edge exactly when
-    * it merges two in-bucket components, so the emitted set IS such a
-    * forest (≤ members−1 edges per bucket — LINEAR in postings even when
-    * |E| is quadratic, which is precisely what the 30-token synthetic
-    * corpus produces: measured 1.5k/148k/15.3M true edges across three
-    * decades).
-    *
-    * Scale shape: one linear shuffle of the posting table on the bucket
-    * key; per-task memory is one bucket's member arrays (a band bucket of
-    * m docs × ~k tokens ≈ 8·m·k bytes — a 100k-doc hot bucket with
-    * 100-token sets is ~80 MB, within executor budget; the worst case is
-    * CPU: Σ C(m,2) size-window survivors that stay cross-component, the
-    * irreducible certification cost of an ambient-similar corpus). */
-  private def bucketSpanningEdges(banded: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = banded.sparkSession
+    * FOREST mode (clusterDocs): a union-find over the task's members
+    * skips a pair already connected in the task and links the two ends of
+    * each emitted pair, so a task emits a spanning forest of the verified
+    * edges it decides (≤ members − 1 rows). Components are unchanged:
+    * every verified edge of the corpus is decided in exactly one task
+    * (first band, then one slice pair), and in that task it is either
+    * emitted or its ends are already joined by emitted edges of the same
+    * task. So the union of the per-task forests has the same connected
+    * components as the full verified edge set, per bucket and per slice
+    * pair alike. */
+  private def verifyInBucket[R: Encoder](who: String, docs: DataFrame, scope: Column,
+      set: Column, n: Column, tks: Column, pfx: Column = lit(null).cast("string"),
+      window: (Long, Long) => Boolean = (_, _) => true, forest: Boolean = false)(
+      rule: (Posting, Posting) => Option[R]): Dataset[R] = {
+    val spark = docs.sparkSession
     import spark.implicits._
     val maxBucket = spark.conf.get("spark.graft.dedup.maxBucket", "262144").toInt
-    banded.select(col("source"), col("band"), col("bkey"),
-        col("doc_id"), col("n"), col("tks"))
-      .as[(String, Int, String, Long, Long, Array[Long])]
-      .groupByKey { case (source, band, bkey, _, _, _) => (source, band, bkey) }
+    val sliceThreshold = spark.conf.get("spark.graft.dedup.sliceThreshold", "4096").toLong
+    val s = spark.conf.get("spark.graft.dedup.bucketSlices", "8").toInt
+    val sig = docs.select(scope.as("scope"), col("doc_id").as("id"),
+        n.cast("long").as("n"), tks.as("tks"), minhashSig(set).as("mhs"), pfx.as("pfx"))
+      .filter(col("scope").isNotNull) // a NULL source pairs with nothing
+    val posts = bandExplode(sig, "mhs", Seq("scope", "id", "n", "tks", "mhs", "pfx"))
+    val hotKeys: Set[(String, Int, String)] = Qh.collectIfBounded(
+        posts.groupBy("scope", "band", "bkey").agg(count(lit(1)).as("__c"))
+          .filter(col("__c") > sliceThreshold).select("scope", "band", "bkey"),
+        64, "dedup hot-bucket key list (skew split, guide §2.5)")
+      .map(_.map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet)
+      .getOrElse(Set.empty)
+    val tasks =
+      if (hotKeys.isEmpty) posts.withColumn("uv", lit(0)).withColumn("slice", lit(0))
+      else {
+        val isHot = hotKeys.toSeq.map { case (sc, b, k) =>
+          col("scope") === sc && col("band") === b && col("bkey") === k }.reduce(_ || _)
+        val sid = pmod(col("id"), lit(s.toLong)).cast("int")
+        posts.withColumn("slice", when(isHot, sid).otherwise(0))
+          .withColumn("uv", explode(when(isHot, transform(sequence(lit(0), lit(s - 1)),
+            w => least(col("slice"), w) * s + greatest(col("slice"), w))).otherwise(array(lit(0)))))
+      }
+    tasks.groupBy("scope", "band", "bkey", "uv").as[(String, Int, String, Int), Posting]
       .flatMapGroups { (key, it) =>
-        val ms = boundedBucket(key, it, maxBucket, "bucketSpanningEdges")
-          .sortBy(m => (m._5, m._4)) // (n asc, doc_id asc): deterministic
-        val ids = ms.map(_._4)
-        val ns = ms.map(_._5)
-        val tks = ms.map(_._6)
-        val parent = Array.tabulate(ms.length)(identity)
+        val ms = boundedBucket(key, it, maxBucket, who).sortBy(p => (p.n, p.id))
+        val ns = ms.map(_.n)
+        val crossSliceOnly = key._4 / s != key._4 % s
+        val parent = if (forest) Array.tabulate(ms.length)(identity) else null
         def find(x: Int): Int = {
           var r = x
           while (parent(r) != r) r = parent(r)
@@ -1786,18 +1703,20 @@ object Dedup {
           while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
           r
         }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+        val out = scala.collection.mutable.ArrayBuffer.empty[R]
         var i = 0
         while (i < ms.length) {
+          val x = ms(i)
           var j = i + 1
-          while (j < ms.length && ns(i) * 100000L >= ns(j) * 79995L) {
-            val (ri, rj) = (find(i), find(j))
-            if (ri != rj) {
-              val inter = intersectCount(tks(i), tks(j))
-              val denom = ns(i) + ns(j) - inter
-              if (denom > 0L && inter * 100000L >= 79995L * denom) {
-                parent(rj) = ri
-                out += ((math.min(ids(i), ids(j)), math.max(ids(i), ids(j))))
+          while (j < ms.length && window(ns(i), ns(j))) {
+            val y = ms(j)
+            if ((!crossSliceOnly || x.slice != y.slice) &&
+                !collidesEarlier(key._2, x.mhs, y.mhs)) {
+              if (!forest) rule(x, y).foreach(out += _)
+              else {
+                val ri = find(i)
+                val rj = find(j)
+                if (ri != rj) rule(x, y).foreach { r => parent(rj) = ri; out += r }
               }
             }
             j += 1
@@ -1806,170 +1725,45 @@ object Dedup {
         }
         out.iterator
       }
-      .toDF("a", "b")
   }
 
-  /** All VERIFIED cross-corpus near-dup pairs within each LSH band
-    * bucket, for dedup_cross_corpus: corpus A = even doc_ids, corpus
-    * B = odd (the registered query's declared split). Input rows are
-    * `(band, bkey, doc_id, n, tks)` with `tks` the SORTED distinct
-    * token-hash array and `n` its length. Each bucket task sorts its
-    * members by (n, doc_id), applies the exact integer size prune
-    * (J ≤ min/max, and rounded-J ≥ 0.8 needs the rational ≥ 0.79995;
-    * 79990/100000 leaves a deliberate safety margin far wider than any
-    * double-vs-rational slack, so no qualifying pair can be pruned),
-    * and computes the exact Jaccard once per opposite-parity pair via
-    * the sorted-merge [[intersectCount]] with [[graft.plans.JaccardSim]]'s
-    * identical HALF_UP 4-decimal rounding.
-    *
-    * Cross-band dedup happens IN-TASK, not in a downstream distinct: a
-    * near-identical pair collides in ~all 4 bands, so naive per-bucket
-    * emission would verify it 4× and need a corpus-wide distinct to
-    * collapse the copies. Each row instead carries its full 8-long
-    * MinHash signature, and a pair is verified/emitted only in its
-    * FIRST colliding band (both rows' band-k key halves equal for no
-    * k < this bucket's band — the same pair occupies at most one bucket
-    * per band, so first-band emission is globally unique). The integer
-    * signature compare is ~free next to one sorted-merge intersect,
-    * verification cost drops to once per candidate pair overall, and
-    * the output needs NO distinct — one whole exchange of the pair
-    * list gone. Unlike [[bucketSpanningEdges]] there is no union-find
-    * shortcut: the query's OUTPUT is the full verified pair list, so
-    * every passing pair must be emitted — the cost is the declared
-    * output-bound quadratic, now with no pair-row exchanges at all. */
-  /** The per-bucket (or per-sub-bucket) verification loop shared by the
-    * cold and hot paths below: members sorted by (n asc, doc_id asc),
-    * exact integer size-window prune, first-colliding-band dedup,
-    * opposite-parity check, sorted-merge intersect, HALF_UP 4-decimal
-    * jaccard. `crossSliceOnly` restricts emission to pairs whose slice
-    * tags differ — the hot-bucket triangle split's (u, v) sub-task with
-    * u ≠ v, where same-slice pairs belong to the (u, u)/(v, v) tasks. */
-  private def verifyCrossMembers(band: Int,
-      ms: Array[(Long, Long, Array[Long], Array[Long], Int)],
-      crossSliceOnly: Boolean): Iterator[(Long, Long, Double)] = {
-    val ids = ms.map(_._1)
-    val ns = ms.map(_._2)
-    val tks = ms.map(_._3)
-    val sigs = ms.map(_._4)
-    val sl = ms.map(_._5)
-    // Java remainder like Spark's %: a negative doc_id is in NEITHER
-    // corpus (doc_id % 2 = -1), exactly as the former even/odd filters.
-    val par = ids.map(_ % 2L)
-    def collidesEarlier(x: Array[Long], y: Array[Long]): Boolean = {
-      var b = 0
-      while (b < band) {
-        if (x(2 * b) == y(2 * b) && x(2 * b + 1) == y(2 * b + 1)) return true
-        b += 1
-      }
-      false
+  /** True when signatures x and y agree on both rows of some band
+    * k < `band` — the pair then belongs to that earlier band's bucket. */
+  private def collidesEarlier(band: Int, x: Array[Long], y: Array[Long]): Boolean = {
+    var k = 0
+    while (k < band) {
+      var r = 0
+      while (r < RowsPerBand && x(k * RowsPerBand + r) == y(k * RowsPerBand + r)) r += 1
+      if (r == RowsPerBand) return true
+      k += 1
     }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    var i = 0
-    while (i < ms.length) {
-      var j = i + 1
-      while (j < ms.length && ns(i) * 100000L >= ns(j) * 79990L) {
-        if ((!crossSliceOnly || sl(i) != sl(j)) &&
-            ((par(i) == 0L && par(j) == 1L) || (par(i) == 1L && par(j) == 0L)) &&
-            !collidesEarlier(sigs(i), sigs(j))) {
-          val inter = intersectCount(tks(i), tks(j))
-          val denom = ns(i) + ns(j) - inter
-          if (denom > 0L) {
-            // r14: exact integer HALF_UP of inter·10⁴/denom — replaces a
-            // per-candidate BigDecimal.valueOf(...).setScale(4) (one
-            // allocation + decimal rendering per candidate pair; ~3·10⁸
-            // of them on the sf1 decade). Equivalence: valueOf renders
-            // the shortest decimal identifying the IEEE quotient, which
-            // HALF_UP-rounds at 4 decimals identically to the exact
-            // rational for any denom ≪ 10¹¹ (the JaccardSim boundary
-            // argument above, including exact .00005 ties — those have
-            // lowest-terms denominator dividing 20000, and the shortest
-            // decimal of their nearest double is the tie value itself);
-            // r4/10000.0 is the correctly-rounded double of r4·10⁻⁴,
-            // which is exactly what setScale(4).doubleValue() returned.
-            val r4 = (20000L * inter + denom) / (2L * denom)
-            if (r4 >= 8000L) {
-              val jd = r4 / 10000.0
-              val (a, b) = if (par(i) == 0L) (ids(i), ids(j)) else (ids(j), ids(i))
-              out += ((a, b, jd))
-            }
-          }
-        }
-        j += 1
-      }
-      i += 1
-    }
-    out.iterator
+    false
   }
 
-  private def bucketCrossVerified(banded: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    val maxBucket = spark.conf.get("spark.graft.dedup.maxBucket", "262144").toInt
-    // Hot-bucket triangle split (r14, guide §2.5 "split the hot key"):
-    // one degenerate band bucket runs its whole quadratic verify in ONE
-    // task — measured at the synthetic sf1 decade: a 36,787-member
-    // bucket made dedup_cross_corpus a 261 s single-core straggler while
-    // 31 cores idled. Buckets past `spark.graft.dedup.sliceThreshold`
-    // members (a bounded driver-side key list — the hot-key special-case
-    // pattern) are split S ways by pmod(doc_id, S): each member is
-    // replicated to the S sub-tasks (min(s,w), max(s,w)), so every
-    // unordered pair lands in EXACTLY one sub-task — (u, u) tasks verify
-    // within-slice pairs, (u, v≠u) tasks only cross-slice pairs — and
-    // the quadratic spreads over S(S+1)/2 tasks at the cost of an S×
-    // replication of the hot bucket's postings only. Cold buckets keep
-    // the single-task path and, below the threshold, an UNCHANGED plan
-    // (sf0.1's largest bucket is 3,699 < the 4,096 default). If the
-    // hot-key list itself exceeds its control-plane bound, the split is
-    // skipped (old behavior; the maxBucket cap still guards memory).
-    val sliceThreshold = spark.conf
-      .get("spark.graft.dedup.sliceThreshold", "4096").toLong
-    val nSlices = spark.conf.get("spark.graft.dedup.bucketSlices", "8").toInt
-    val hotKeys: Set[(Int, String)] = Qh.collectIfBounded(
-        banded.groupBy("band", "bkey").agg(count(lit(1)).as("__c"))
-          .filter(col("__c") > sliceThreshold).select("band", "bkey"),
-        64, "dedup hot-bucket key list (skew split, guide §2.5)")
-      .map(_.map(r => (r.getInt(0), r.getString(1))).toSet)
-      .getOrElse(Set.empty)
-    val rows = banded.select(col("band"), col("bkey"), col("doc_id"),
-        col("n"), col("tks"), col("mhs"))
-      .as[(Int, String, Long, Long, Array[Long], Array[Long])]
-    val isHot = (band: Int, bkey: String) => hotKeys.contains((band, bkey))
-    val cold = rows.filter(r => !isHot(r._1, r._2))
-      .groupByKey { case (band, bkey, _, _, _, _) => (band, bkey) }
-      .flatMapGroups { (key, it) =>
-        val ms = boundedBucket(key, it, maxBucket, "bucketCrossVerified")
-          .sortBy(m => (m._4, m._3)) // (n asc, doc_id asc)
-          .map(m => (m._3, m._4, m._5, m._6, 0))
-        verifyCrossMembers(key._1, ms, crossSliceOnly = false)
-      }
-    val verified =
-      if (hotKeys.isEmpty) cold
-      else {
-        val s = nSlices
-        val hot = rows.filter(r => isHot(r._1, r._2))
-          .flatMap { case (band, bkey, id, n, tks, mhs) =>
-            val sid = ((id % s) + s).toInt % s
-            (0 until s).iterator.map { w =>
-              val (u, v) = (math.min(sid, w), math.max(sid, w))
-              (band, bkey, u * s + v, id, n, tks, mhs, sid)
-            }
-          }
-          .groupByKey { case (band, bkey, uv, _, _, _, _, _) => (band, bkey, uv) }
-          .flatMapGroups { (key, it) =>
-            val (band, _, uv) = key
-            val ms = boundedBucket(key, it, maxBucket, "bucketCrossVerified(hot)")
-              .sortBy(m => (m._5, m._4)) // (n asc, doc_id asc)
-              .map(m => (m._4, m._5, m._6, m._7, m._8))
-            verifyCrossMembers(band, ms, crossSliceOnly = uv / s != uv % s)
-          }
-        cold.union(hot)
-      }
-    verified.toDF("a", "b", "jaccard")
+  /** Jaccard of two postings' sorted sets, HALF_UP-rounded to 4 decimals,
+    * in exact integer ten-thousandths — −1 for two empty sets (where
+    * [[graft.plans.JaccardSim]] returns NULL). This is JaccardSim's value
+    * exactly: `round(J, 4) ≥ t/10⁴` holds iff 20000·inter ≥ (2t−1)·denom,
+    * and BigDecimal.valueOf on the IEEE quotient HALF_UP-rounds like the
+    * rational unless the double error reaches the rational's distance to
+    * a rounding boundary, ≥ 1/(20000·denom) — impossible for denom ≪ 10¹¹
+    * (exact .00005 ties have a lowest-terms denominator dividing 20000,
+    * and their nearest double renders as the tie itself). So
+    * `jaccard4 / 10000.0` is the bit-identical double. */
+  private def jaccard4(x: Posting, y: Posting): Long = {
+    val inter = intersectCount(x.tks, y.tks)
+    val denom = x.n + y.n - inter
+    if (denom == 0L) -1L else (20000L * inter + denom) / (2L * denom)
   }
+
+  /** Size window for `jaccard4 ≥ t4`: with na ≤ nb, inter ≤ na and
+    * denom ≥ nb, so the rule needs 20000·na ≥ (2·t4 − 1)·nb — exact, and
+    * monotone in nb. */
+  private def jaccardWindow(t4: Long): (Long, Long) => Boolean =
+    (na, nb) => 20000L * na >= (2L * t4 - 1L) * nb
 
   /** Collect one LSH bucket's members into task memory under a declared
-    * cap (r14, VERDICT item 6 / guide §5): the in-bucket verifiers buffer
+    * cap (r14, VERDICT item 6 / guide §5): the in-bucket verifier buffers
     * every member's full sorted token array in ONE task, so a degenerate
     * bucket (boilerplate-heavy sources sharing a band key) would OOM an
     * executor where the former join-based plans spilled. The cap makes
@@ -2006,6 +1800,30 @@ object Dedup {
     c
   }
 
+  /** Min-label propagation to convergence over an undirected edge list
+    * `pairs(a, b)` — the iterative core shared by [[clusterDocs]] (corpus
+    * closure) and [[mergeClusters]] (batch-sized affected graph). Returns
+    * (doc_id, label) for every vertex APPEARING IN AN EDGE; isolated
+    * vertices are the caller's business (they can never change label).
+    *
+    * Iterates ONLY over vertices that have an edge: isolated docs (the
+    * overwhelming majority of a 100 TB corpus) can never change label,
+    * so keeping them in the loop would shuffle the whole corpus every
+    * round.
+    *
+    * Each vertex also gets a flagged SELF-loop, which buys one round =
+    * exactly TWO shuffles: min(lb) over the closed neighborhood is the
+    * new label, and the self row carries the vertex's previous label —
+    * so convergence detection needs no second join against the prior
+    * state (a third shuffle per round in the naive formulation).
+    *
+    * Loops to convergence — the dedup_cluster oracle's recursive CTE
+    * computes the UNBOUNDED closure, so a round cap would diverge on long
+    * chains. Each round combines neighbor-min propagation with POINTER
+    * JUMPING (label := min(label, label(label))), so chains converge in
+    * O(log eccentricity) rounds, not O(eccentricity) — a 10k-link drift
+    * chain needs ~14 rounds, not 10k sequential jobs. The cap is a pure
+    * runaway guard and exits LOUDLY. */
   private def propagateMin(pairs: org.apache.spark.sql.DataFrame,
       mat: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

@@ -41,7 +41,10 @@ object Pipelines {
   def ingest(posts: Dataset[RedditPost]): Dataset[RawContent] = {
     import posts.sparkSession.implicits._
     posts
-      .filter(length(trim(col("post_content"))) > 0)
+      // blank = nothing left after stripping U+0000..U+0020 (Scala's
+      // String.trim); Spark's trim strips only spaces, so a tab- or
+      // newline-only post would pass it. The kept text is not changed.
+      .filter(col("post_content").rlike("[^\\x00-\\x20]"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("topic", "id")

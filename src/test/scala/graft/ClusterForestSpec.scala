@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 
-/** Pins the r13 clusterDocs rewrite ([[Dedup.bucketSpanningEdges]] + the
-  * exact-dup collapse) against the definition it must preserve: connected
+/** Pins the r13 clusterDocs rewrite (the in-bucket verifier's spanning
+  * forest, `Dedup.verifyInBucket` in forest mode, + the exact-dup collapse) against the definition it must preserve: connected
   * components of the FULL verified edge multiset
   * E = { (a,b) : same source, some band bucket contains both,
   *        round(J(tk_a, tk_b), 4) ≥ 0.8 }.
@@ -122,8 +122,33 @@ class ClusterForestSpec extends SparkSpec {
     assert(got(15L) != got(16L), "identical text, different source: separate")
   }
 
+  // The hot-bucket split is shared by every in-bucket verify, so
+  // clusterDocs gets it too: each slice-pair task emits a spanning forest
+  // of the edges it decides. Forcing the threshold to 4 routes the
+  // ambient block's buckets through the split; the clusters must not move.
+  test("forced hot-bucket split leaves every cluster unchanged") {
+    val docs = plantedCorpus.localCheckpoint(true)
+    val maxBucket = Dedup.bandExplode(docs.select(col("source"), col("doc_id"),
+          Dedup.minhashSig(Dedup.tokHashes(col("text"))).as("mhs")),
+        "mhs", Seq("source", "doc_id"))
+      .groupBy("source", "band", "bkey").count().agg(max("count")).as[Long].head()
+    assert(maxBucket > 4, s"a bucket past the forced threshold (max $maxBucket)")
+    val unsplit = Dedup.clusterDocs(docs).as[(Long, Long)].collect().toMap
+    spark.conf.set("spark.graft.dedup.sliceThreshold", "4")
+    spark.conf.set("spark.graft.dedup.bucketSlices", "3")
+    try {
+      val split = Dedup.clusterDocs(docs).as[(Long, Long)].collect().toMap
+      val diff = unsplit.keys.filter(k => split.get(k) != unsplit.get(k)).toSeq.sorted
+      assert(split.keySet == unsplit.keySet && diff.isEmpty,
+        s"split clusters differ on docs $diff")
+    } finally {
+      spark.conf.unset("spark.graft.dedup.sliceThreshold")
+      spark.conf.unset("spark.graft.dedup.bucketSlices")
+    }
+  }
+
   test("integer verification predicate ≡ JaccardSim rounding at every small size") {
-    // bucketSpanningEdges decides edges by inter·100000 ≥ 79995·denom;
+    // the forest verifier decides edges by inter·100000 ≥ 79995·denom;
     // JaccardSim (and the DuckDB oracle) decide by round(inter/denom,4)
     // ≥ 0.8. Exhaustively equal for all set sizes ≤ 60 — includes every
     // boundary rational reachable in the planted and testdata corpora.

@@ -43,6 +43,19 @@ class PipelineE2ESpec extends SparkSpec {
     assert(byPost("p3")._3, "long post must be summarized")
   }
 
+  test("ingest drops a post blank after stripping U+0000..U+0020 and keeps other text as is") {
+    val in = Seq(
+      post("b1", "\t\n "),          // tabs/newlines only: blank under String.trim
+      post("b2", "\u0000\r\u001f"), // control chars only
+      post("k1", " \tgood "),        // kept verbatim, surrounding blanks included
+      post("k2", "\uD83D\uDE00"))    // a non-BMP char alone is content
+    val kept = Pipelines.ingest(in.toDS())
+      .select(col("metadata.post_id"), col("text")).as[(String, String)].collect().toMap
+    assert(kept == Map("k1" -> " \tgood ", "k2" -> "\uD83D\uDE00"), kept)
+    assert(kept.keySet == in.filter(_.post_content.trim.nonEmpty).map(_.id).toSet,
+      "ingest keeps exactly the posts Scala's String.trim leaves non-empty")
+  }
+
   test("responses.json-shaped replay: captured extractor output → topicGen → anti-join → TTL table") {
     // Mirrors the reference's checked-in `responses.json` (root of the
     // repo; schema models/openai_models.go:3-5 — {"topics": [{title,

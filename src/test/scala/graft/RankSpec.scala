@@ -75,6 +75,29 @@ class RankSpec extends SparkSpec {
     assert(r.df.count() == 0L)
   }
 
+  test("a rank.buckets × metrics product past the offset-read bound fails before any job") {
+    // 2M buckets × 3 metrics = 6M offset rows > the 2^22-row driver read:
+    // the (nBuckets * m).toInt bound must not reach boundedCollect, whose
+    // error would not name the knob
+    val df = (0L until 10L).map(i => (i, i * 2, i * 3)).toDF("a", "b", "c")
+    val group = "rank-bound-" + java.util.UUID.randomUUID()
+    spark.conf.set("spark.graft.rank.buckets", "2000000")
+    spark.sparkContext.setJobGroup(group, "rank bound check")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        Qh.globalRowNumbers(df, Seq(col("a") -> "ra", col("b") -> "rb", col("c") -> "rc"),
+          col("a"))
+      }
+      assert(ex.getMessage.contains("spark.graft.rank.buckets=2000000"), ex.getMessage)
+      assert(ex.getMessage.contains("3 ranked metric"), ex.getMessage)
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+        "the bound is checked before the bounds aggregate runs")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.conf.unset("spark.graft.rank.buckets")
+    }
+  }
+
   test("ntileFromRn reproduces SQL ntile for every residue class") {
     // n % k ∈ {0, ..} incl. the uneven split (n=10,k=4 → 3,3,2,2) and
     // the degenerate n < k (each row its own tile)

@@ -67,16 +67,18 @@ class SqlSurfaceSpec extends SparkSpec {
     val names = SparkEntry.oracleSql.keys.toSeq.sorted.filterNot(excluded.contains)
     assert(names.size >= 86, s"portable surface shrank: ${names.size}")
     // The sweep is embarrassingly parallel and each text is a small
-    // sf0.001 job, so drive the shared session from a fixed 8-thread
-    // pool (multi-threaded job submission is a supported SparkSession
-    // pattern; the process-lifetime memos are computeIfAbsent-safe).
+    // sf0.001 job, so drive the shared session from a pool of 4 threads
+    // per core — several texts in flight per core overlap one text's
+    // driver-side planning with another's tasks (multi-threaded job
+    // submission is a supported SparkSession pattern; the
+    // process-lifetime memos are computeIfAbsent-safe).
     // Sequential, this test was 22 min of the 28-min full suite.
     // INVARIANT: query builders swept here must NOT mutate session conf —
-    // the 8 threads share one SparkSession, so a builder that sets conf
+    // the pool's threads share one SparkSession, so a builder that sets conf
     // (the BasketGuardSpec/DedupEvalSpec test pattern, which is fine in
     // those single-threaded specs) would race every concurrent builder
     // silently. All registered builders only READ conf; keep it that way.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(16) // r14: was 8 on a local[4] session; session is local[12] now
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4 * GraftSession.cpus)
     val failures =
       try {
         names.map { name =>
