@@ -53,6 +53,33 @@ object Qh {
   val GopherDupMilli = 500L
   val GopherTopMilli = 100L
 
+  /** One integer `spark.graft.*` session key (README "Configuration").
+    * Operator code reads keys only through [[get]], before its first job:
+    * a non-integer value, or one outside `[floor, ceiling]`, fails with an
+    * IllegalArgumentException naming the key. */
+  final case class Knob(key: String, default: Long, floor: Long = 0L,
+      ceiling: Long = Int.MaxValue) {
+    def get(s: SparkSession): Long = {
+      val raw = s.conf.get(key, default.toString)
+      val v = raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$key=$raw is not an integer"))
+      require(v >= floor && v <= ceiling, s"$key=$v is outside [$floor, $ceiling]")
+      v
+    }
+  }
+
+  // Input bounds: past each, the query fails instead of running a
+  // quadratic or unbounded-memory step.
+  val MaxDocs = Knob("spark.graft.q28a.maxDocs", 100000L)
+  val BasketMaxItems = Knob("spark.graft.basket.maxItems", 1024L)
+  val MaxBucket = Knob("spark.graft.dedup.maxBucket", 262144L)
+  val MaxEvalShingles = Knob("spark.graft.bloom.maxEvalShingles", 50000000L)
+  // Dedup thresholds. A hot bucket splits S ways into S² task ids, so S²
+  // must fit an Int; the local graph cap feeds collectIfBounded's bound.
+  val SliceThreshold = Knob("spark.graft.dedup.sliceThreshold", 4096L)
+  val BucketSlices = Knob("spark.graft.dedup.bucketSlices", 8L, floor = 1L, ceiling = 46340L)
+  val LocalGraphCap = Knob("spark.graft.merge.localGraphCap", 65536L, ceiling = 1L << 22)
+
   def tbl(s: SparkSession, d: String, n: String): DataFrame = Tables(s, d, n)
 
   /** THE sanctioned driver-side read. Every `.collect()` / `.head()` in
@@ -62,7 +89,7 @@ object Qh {
     * bounds/argmaxes, nlist centroid tables), fetches cap+1 rows, and
     * raises loudly the moment the read turns out to be data-plane sized —
     * the same fail-loud discipline as [[requireBoundedBaskets]] and the
-    * `spark.graft.q28a.maxDocs` guard. Until r10 every site was bounded
+    * [[MaxDocs]] guard. Until r10 every site was bounded
     * by INSPECTION only; nothing stopped entry #222 from collecting a
     * table. CollectGateSpec's grep sweep now forbids raw collects in
     * operator sources, so the bound is structural across rounds. */
@@ -305,7 +332,7 @@ object Qh {
     * full countDistinct pass into this one. */
   def requireBoundedBaskets(s: SparkSession, pres: DataFrame, key: String,
       query: String): Long = {
-    val cap = s.conf.get("spark.graft.basket.maxItems", "1024").toLong
+    val cap = BasketMaxItems.get(s)
     val m = boundedHead(pres.groupBy(col(key)).agg(count(lit(1)).as("c"))
       .agg(max(col("c")), count(lit(1))),
       s"$query basket-width bound (global aggregate)")
@@ -325,16 +352,16 @@ object Qh {
     * other a corpus-scale stream — re-shuffling and sorting the big side
     * for nothing. Callers pass a row bound that is a FREE read off an
     * already-materialized frame (its own count, or a conservative proxy
-    * like the edge-list count); under `spark.graft.join.broadcastRows`
-    * (default 8M rows ≈ 200 MB built relation, well inside the 8 GB /
-    * 512M-row broadcast cap) the side is broadcast and the big side is
-    * never exchanged; above it the former shuffle-join shape stands —
-    * the decision self-disables at 100 TB scale. */
-  def bcastIfSmall(df: DataFrame, rows: Long): DataFrame = {
-    val cap = df.sparkSession.conf
-      .get("spark.graft.join.broadcastRows", "8000000").toLong
-    if (rows <= cap) broadcast(df) else df
-  }
+    * like the edge-list count); at or under [[BroadcastRows]] (8M rows
+    * ≈ 200 MB built relation, well inside the 8 GB / 512M-row broadcast
+    * cap) the side is broadcast and the big side is never exchanged;
+    * above it the former shuffle-join shape stands — the decision
+    * self-disables at 100 TB scale. */
+  def bcastIfSmall(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= BroadcastRows) broadcast(df) else df
+
+  /** Row bound under which [[bcastIfSmall]] broadcasts. */
+  val BroadcastRows = 8000000L
 
   /** A frame carrying a freshly computed global row number plus the total
     * row count n (known driver-side from the same bounds pass, so exact
@@ -358,8 +385,8 @@ object Qh {
     *     and fall back to value-only buckets — there ties are negligible
     *     by construction.
     *  3. Per-bucket counts → driver-side exclusive prefix offsets
-    *     (bounded: ≤ `spark.graft.rank.buckets` rows, a control-plane
-    *     read of the same class as the dedup prune sets).
+    *     (bounded: ≤ `nBuckets` rows, default [[RankBuckets]], a
+    *     control-plane read of the same class as the dedup prune sets).
     *  4. Bucket-local row_number (WindowExec keyed by bucket — parallel)
     *     + broadcast offset = the global row number.
     *
@@ -372,30 +399,31 @@ object Qh {
       out: String): Ranked =
     globalRowNumbers(df, Seq(value -> out), tie)
 
+  /** Default bucket count of [[globalRowNumbers]]. */
+  val RankBuckets = 256L
+
   /** Fused multi-metric [[globalRowNumber]] (r14 optimization round): N
     * independent global row numbers over the SAME frame and tie key in
     * exactly TWO control-plane jobs instead of 2·N — one bounds aggregate
     * covering every metric, and one bucket-count aggregate over the
     * union of all metrics' bucket ids (an explode of N 16-byte structs
     * per row, partially aggregated map-side). The per-bucket offset is
-    * attached as a literal-map lookup (≤ `spark.graft.rank.buckets`
-    * entries, codegen `element_at`) rather than the former broadcast
-    * join — one less join per metric in the plan. Per-metric bucketing,
-    * window and rn arithmetic are verbatim the single-metric formulas, so
-    * each output column is bit-identical to a standalone call. */
+    * attached as a literal-map lookup (≤ `nBuckets` entries, codegen
+    * `element_at`) rather than the former broadcast join — one less join
+    * per metric in the plan. Per-metric bucketing, window and rn
+    * arithmetic are verbatim the single-metric formulas, so each output
+    * column is bit-identical to a standalone call, at any `nBuckets`. */
   def globalRowNumbers(df: DataFrame, metrics: Seq[(Column, String)],
-      tie: Column): Ranked = {
+      tie: Column, nBuckets: Long = RankBuckets): Ranked = {
     import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
     val m = metrics.length
-    val nBuckets = spark.conf.get("spark.graft.rank.buckets", "256").toLong
     // the bucket-offset read below is bounded by nBuckets·m rows, which
     // must fit boundedCollect's control-plane bound — checked up front,
     // in Long, before any job runs
     require(nBuckets >= 1L && nBuckets * m <= (1L << 22),
-      s"spark.graft.rank.buckets=$nBuckets with $m ranked metric(s) needs " +
+      s"globalRowNumbers: nBuckets=$nBuckets with $m ranked metric(s) needs " +
         s"${nBuckets * m} bucket-offset rows, past the ${1L << 22}-row bound of the " +
-        "driver-side offset read; lower spark.graft.rank.buckets")
+        "driver-side offset read; pass fewer buckets")
     var tagged = df.withColumn("__grk_t", tie.cast("long"))
     metrics.zipWithIndex.foreach { case ((v, _), i) =>
       tagged = tagged.withColumn(s"__grk_v$i", v.cast("long")) }

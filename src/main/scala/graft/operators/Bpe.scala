@@ -93,18 +93,11 @@ object Bpe {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var done = false
     var rank = 0L
-    // r14: `spark.graft.bpe.checkpointEvery` trades per-merge
-    // materialization jobs against re-applying up to K-1 chained merge
-    // folds inside each argmax job. MEASURED (guide §1.1 — the "ideal"
-    // fewer-jobs plan lost): K=4 ran 3.82 s vs 2.43 s at K=1 on sf0.1 —
-    // the chained HOF folds cost more in codegen+recompute than the
-    // checkpoint jobs they remove — so the default stays 1 (the knob is
-    // kept for wide-type-table experiments, where a vocab-scale
-    // materialization per merge could dominate instead).
-    val ckptEvery = math.max(1,
-      spark.conf.get("spark.graft.bpe.checkpointEvery", "1").toInt)
-    var lastCkpt = words
-    var sinceCkpt = 0
+    // The type table is checkpointed after EVERY merge. Checkpointing
+    // every K merges instead re-applies up to K-1 chained merge folds
+    // inside each argmax job; MEASURED (r14, sf0.1) K=4 ran 3.82 s vs
+    // 2.43 s at K=1 — the chained HOF folds cost more in codegen and
+    // recompute than the checkpoint jobs they remove.
     while (rank < nMerges && !done) {
       val top0 = words
         .where(size(col("sym")) >= 2)
@@ -122,18 +115,13 @@ object Bpe {
       else {
         val (l, r, pf) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((rank, l, r, pf))
+        val prev = words
         words = words.select(
           when(containsPair(col("sym"), l, r), applyMerge(col("sym"), l, r))
             .otherwise(col("sym")).as("sym"),
           col("freq"))
-        sinceCkpt += 1
-        if (sinceCkpt >= ckptEvery) {
-          val prev = lastCkpt
-          words = words.localCheckpoint()
-          lastCkpt = words
-          sinceCkpt = 0
-          prev.unpersist(blocking = false)
-        }
+          .localCheckpoint()
+        prev.unpersist(blocking = false)
         rank += 1
       }
     }
@@ -202,10 +190,7 @@ object Bpe {
     * (BpeSpec), the trainCentroids precedent. */
   val defs: Seq[(String, QueryDef)] = Seq(
     "text_bpe_vocab" -> QueryDef(
-      (s, d) => {
-        val n = s.conf.get("spark.graft.bpe.merges", DefaultMerges.toString).toInt
-        train(tbl(s, d, "documents"), n).orderBy("rank")
-      },
+      (s, d) => train(tbl(s, d, "documents")).orderBy("rank"),
       None,
       doc = "BPE merge table (rank, left, right, pair_freq) trained on the corpus; " +
         "deterministic argmax loop, spec-gated vs a reference implementation"))

@@ -1291,11 +1291,8 @@ object Dedup {
     // [[EvalPanelSize]]-doc panel ([[evalPanel]]), so the truth side is
     // panel × corpus: linear at any scale, a uniform-sample unbiased
     // estimate of the full recall (source scoping matches exact dedup /
-    // corpus_manifest's canonicalization). The config
-    // spark.graft.dedupEval.exactTruth=true switches to the exact
-    // all-pairs truth over every doc — the deliberate baseline mode,
-    // behind the same maxDocs guard as q28a; DedupEvalSpec proves the
-    // panel truth ≡ the exact truth restricted to the panel.
+    // corpus_manifest's canonicalization). DedupEvalSpec proves the
+    // panel truth ≡ the exact all-pairs truth restricted to the panel.
     // Prediction: per-source band buckets → bucket-min edge → exact
     // verify ≥ 0.7 → drop, restricted to panel members (a doc's drop
     // verdict depends only on its own candidates, so the restriction
@@ -1306,20 +1303,10 @@ object Dedup {
     // DIFFERENT earlier dup exists — the rule's real blind spots.
     "dedup_eval_recall" -> QueryDef(
       (s, d) => {
-        val raw = tbl(s, d, "documents")
-        val exact = s.conf.get("spark.graft.dedupEval.exactTruth", "false").toBoolean
-        if (exact) {
-          val cap = s.conf.get("spark.graft.q28a.maxDocs", "100000").toLong
-          val nDocs = raw.count()
-          require(nDocs <= cap,
-            s"dedupEval.exactTruth computes the exact all-pairs truth set: $nDocs docs " +
-              s"exceeds the $cap-doc guard. Use the default panel mode at scale, or " +
-              "raise spark.graft.q28a.maxDocs for a deliberate baseline run.")
-        }
-        val base = raw.select(col("doc_id"), col("source"),
+        val base = tbl(s, d, "documents").select(col("doc_id"), col("source"),
             toks(col("text")).as("tk"), tokHashes(col("text")).as("th"))
           .localCheckpoint()
-        val panel = if (exact) base else evalPanel(base).localCheckpoint()
+        val panel = evalPanel(base).localCheckpoint()
         val truthDrop = evalTruthDrop(base, panel)
         val sig = base.withColumn("mhs", minhashSig(col("th")))
         val banded = bandExplode(sig, "mhs", Seq("doc_id", "source"))
@@ -1328,10 +1315,7 @@ object Dedup {
         val cand = banded.join(bucketMin, Seq("source", "band", "bkey"))
           .filter(col("doc_id") > col("min_id"))
           .select("source", "doc_id", "min_id").distinct()
-        val candPanel =
-          if (exact) cand
-          else cand.join(panel.select("doc_id"), Seq("doc_id"), "left_semi")
-        val predDrop = candPanel
+        val predDrop = cand.join(panel.select("doc_id"), Seq("doc_id"), "left_semi")
           .join(base.select(col("doc_id"), col("tk").as("ta")), Seq("doc_id"))
           .join(base.select(col("doc_id").as("min_id"), col("tk").as("tb")), Seq("min_id"))
           .filter(jaccard(col("ta"), col("tb")) >= 0.7)
@@ -1376,8 +1360,7 @@ object Dedup {
       },
       doc = "doc-level recall of the source-scoped MinHash-LSH keep-first " +
         "decision vs ground truth over a fixed 256-doc deterministic " +
-        "panel (exact all-pairs truth behind dedupEval.exactTruth, " +
-        "guarded): per-source exact integer n_should_drop/n_hit/" +
+        "panel: per-source exact integer n_should_drop/n_hit/" +
         "recall_ppm — the dedup twin of sim_ann_recall")
   )
 
@@ -1554,8 +1537,8 @@ object Dedup {
 
   /** Hybrid component labeling for MICRO-BATCH graphs (the mergeClusters
     * path): a batch's verified near-dup edge set is usually tiny — one
-    * checkpoint + count decide, and under `spark.graft.merge
-    * .localGraphCap` (default 65536 edges) the labels come from a
+    * checkpoint + count decide, and under [[Qh.LocalGraphCap]] edges
+    * (default 65536) the labels come from a
     * driver-side min-root union-find in microseconds instead of ~10
     * Spark jobs of distributed propagation per micro-batch (the r10
     * composed-lane profile: propagateMin was half the merge's job
@@ -1578,7 +1561,7 @@ object Dedup {
       : org.apache.spark.sql.DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val cap = spark.conf.get("spark.graft.merge.localGraphCap", "65536").toInt
+    val cap = Qh.LocalGraphCap.get(spark).toInt
     // The fast path collects the lazy edge plan directly — one job, no
     // checkpoint. Only the (rare) over-cap fallback re-executes the edge
     // joins, inside propagateMin's own materialization.
@@ -1661,15 +1644,15 @@ object Dedup {
     * task. So the union of the per-task forests has the same connected
     * components as the full verified edge set, per bucket and per slice
     * pair alike. */
-  private def verifyInBucket[R: Encoder](who: String, docs: DataFrame, scope: Column,
+  private[graft] def verifyInBucket[R: Encoder](who: String, docs: DataFrame, scope: Column,
       set: Column, n: Column, tks: Column, pfx: Column = lit(null).cast("string"),
       window: (Long, Long) => Boolean = (_, _) => true, forest: Boolean = false)(
       rule: (Posting, Posting) => Option[R]): Dataset[R] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val maxBucket = spark.conf.get("spark.graft.dedup.maxBucket", "262144").toInt
-    val sliceThreshold = spark.conf.get("spark.graft.dedup.sliceThreshold", "4096").toLong
-    val s = spark.conf.get("spark.graft.dedup.bucketSlices", "8").toInt
+    val maxBucket = Qh.MaxBucket.get(spark).toInt
+    val sliceThreshold = Qh.SliceThreshold.get(spark)
+    val s = Qh.BucketSlices.get(spark).toInt
     val sig = docs.select(scope.as("scope"), col("doc_id").as("id"),
         n.cast("long").as("n"), tks.as("tks"), minhashSig(set).as("mhs"), pfx.as("pfx"))
       .filter(col("scope").isNotNull) // a NULL source pairs with nothing
@@ -2423,17 +2406,11 @@ object Dedup {
     out
   }
 
-  /** Task count for the per-batch bands-index write
-    * (`spark.graft.index.writeTasks`, default 4): each (band, kb) key
-    * lands in exactly one task either way, so the FILE count (one per
-    * touched dir) is identical — the knob only sets how many tasks
-    * split the ≤ Bands×KbBuckets directories between them. A
-    * micro-batch increment is small by definition (the compaction
-    * cadence bounds what accumulates), so shuffle.partitions-many
-    * writer tasks are pure per-task overhead at any deployment size;
-    * raise the conf for an unusually fat batch. */
-  private def bandWriteTasks(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.get("spark.graft.index.writeTasks", "4").toInt
+  /** Task count for the per-batch bands-index write. The FILE count (one
+    * per touched (band, kb) dir) is the same at any task count, and a
+    * micro-batch increment is small by definition, so
+    * shuffle.partitions-many writer tasks would be pure overhead. */
+  private val BandWriteTasks = 4
 
   /** STAGED form of [[mergeAndIndex]] for per-batch action overlap
     * (graft.streaming.Streaming.clusterBatch): the returned future is
@@ -2581,7 +2558,7 @@ object Dedup {
           // stamp BEFORE the write — see indexBatch for the crash-window argument
           Qh.stampHashVersion(spark, s"$indexDir/bands")
           banded.select("bkey", "doc_id", "source", "band", "kb")
-            .repartition(bandWriteTasks(spark), col("band"), col("kb"))
+            .repartition(BandWriteTasks, col("band"), col("kb"))
             .write.partitionBy("band", "kb")
             .mode("overwrite").parquet(s"$indexDir/bands/batch=$bid")
         }

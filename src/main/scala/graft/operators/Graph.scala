@@ -45,8 +45,8 @@ object Graph {
     * broadcasts it instead: the edge list is then never re-exchanged
     * after its one materialization, and each superstep's only shuffle
     * carries node-sized partial aggregates. Above the
-    * `spark.graft.join.broadcastRows` cap (a 100 TB graph with ~1e9
-    * nodes) the hint is skipped and the former shuffle-join shape
+    * [[Qh.BroadcastRows]] cap (a 100 TB graph with ~1e9 nodes) the
+    * hint is skipped and the former shuffle-join shape
     * stands. */
 
   /** One PageRank superstep on the undirected edge list (already keyed

@@ -1778,7 +1778,7 @@ object Relational {
         // r14: sizes is catalog-sized but its LogicalRDD hides that from
         // Catalyst — both n_a/n_b attach joins were re-shuffling AND
         // sorting the O(orders·basket²) co table against it. Broadcast
-        // under the spark.graft.join.broadcastRows cap (count is a free
+        // under the Qh.BroadcastRows cap (count is a free
         // read off the just-checkpointed rollup); at planet-scale
         // catalogs the former shuffle join stands.
         val nParts = sizes.count()

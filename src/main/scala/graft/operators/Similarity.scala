@@ -499,12 +499,12 @@ object Similarity {
     "q28a_jaccard_pairs" -> QueryDef(
       (s, d) => {
         import Dedup.{jaccard, tokHashes}
-        val raw = tbl(s, d, "documents")
         // Scale guard: this is the O(n²)-per-source EXACT baseline that
         // dedup_ngram_jaccard's LSH prefilter accelerates. Refuse to
         // launch it on a corpus where the self-join would explode; the
         // cap is a conf so a deliberate baseline run can raise it.
-        val cap = s.conf.get("spark.graft.q28a.maxDocs", "100000").toLong
+        val cap = Qh.MaxDocs.get(s)
+        val raw = tbl(s, d, "documents")
         val nDocs = raw.count()
         require(nDocs <= cap,
           s"q28a_jaccard_pairs is the exact all-pairs baseline: $nDocs docs exceeds the " +

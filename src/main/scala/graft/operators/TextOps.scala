@@ -30,6 +30,9 @@ object TextOps {
     * them at object init. */
   val SeqLen = 512L
   val ShuffleShards = 8L
+
+  /** Default doc_id bucket count of [[packSequences]]' prefix sum. */
+  val PackBuckets = 256
   private def stopSql = Stopwords.map(w => s"'$w'").mkString("list_value(", ", ", ")")
 
   /** Per-language marker words for the n-gram/function-word language-ID
@@ -327,7 +330,7 @@ object TextOps {
           .select(col("doc_id"), shingles3(tokHashesSeq(col("text"))).as("sh"))
         val bench = docs.filter(col("doc_id") % 97 === 0)
           .select(col("doc_id").as("bench_id"), explode(col("sh")).as("g"))
-        val cap = s.conf.get("spark.graft.bloom.maxEvalShingles", "50000000").toLong
+        val cap = Qh.MaxEvalShingles.get(s)
         // Build-once memo (process lifetime, keyed by corpus dir): an eval
         // set is a fixed artifact, so its filter is too — rebuilding the
         // bitset (two bounded Spark jobs) per invocation would dominate
@@ -2090,16 +2093,16 @@ object TextOps {
     * (deterministic — no RangePartitioner sampling, whose seed differs
     * between the two passes); (2) cumulative-sum WITHIN each
     * (source, bucket) — parallel across buckets, each bounded by
-    * corpus/`spark.graft.pack.buckets`; (3) aggregate one total row per
+    * corpus/`nBuckets` (default [[PackBuckets]]; the output is the same
+    * at any count, OperatorSpec); (3) aggregate one total row per
     * (source, bucket) and collect (bounded metadata, ≤ sources×buckets
     * rows — the same class as the dedup prune sets); (4) broadcast the
     * driver-computed exclusive bucket offsets and add. Two passes over
     * the corpus (totals + main), the canonical distributed scan-sum. */
   def packSequences(docs: org.apache.spark.sql.DataFrame,
-      seqLen: Long = SeqLen): org.apache.spark.sql.DataFrame = {
+      seqLen: Long = SeqLen, nBuckets: Int = PackBuckets): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nBuckets = spark.conf.get("spark.graft.pack.buckets", "256").toInt
     val sized = docs.select(col("source"), col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("ntok"))
     // pass 0 (doc_id column only — text pruned from the scan): bucket
@@ -2150,24 +2153,22 @@ object TextOps {
     * polynomial-hash key per doc, `shards` reader shards by key-mod,
     * dense ranks within each shard. Same seed → same epoch order.
     *
-    * Shard count: pass `shards` explicitly, or set
-    * `spark.graft.shuffle.shards` (default [[ShuffleShards]] = 8) —
-    * set it ≈ the training-reader count at scale: each shard's rank
-    * window is ONE task, so the shard count IS the parallelism of the
-    * ordering step. Ordering within a shard is by (skey, doc_id) — a
-    * global total order restricted to the shard — so two docs that land
-    * in the same shard keep the same relative order at ANY shard count
-    * (spec-asserted at 64): re-sharding for more readers never reorders
-    * a reader's stream, it only re-partitions it. */
+    * Shard count: `shards` (default [[ShuffleShards]] = 8, the count
+    * sample_shuffle and its oracle use) — pass ≈ the training-reader
+    * count at scale: each shard's rank window is ONE task, so the shard
+    * count IS the parallelism of the ordering step. Ordering within a
+    * shard is by (skey, doc_id) — a global total order restricted to
+    * the shard — so two docs that land in the same shard keep the same
+    * relative order at ANY shard count (spec-asserted at 64):
+    * re-sharding for more readers never reorders a reader's stream, it
+    * only re-partitions it. */
   def shuffleShards(docs: org.apache.spark.sql.DataFrame, seed: Long = 42L,
-      shards: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val nShards = if (shards > 0) shards
-      else docs.sparkSession.conf.get("spark.graft.shuffle.shards", ShuffleShards.toString).toLong
+      shards: Long = ShuffleShards): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy("shard").orderBy("skey", "doc_id")
     docs
       .select(col("doc_id"))
       .withColumn("skey", Qh.strHash(concat(col("doc_id").cast("string"), lit(s":$seed"))))
-      .withColumn("shard", col("skey") % nShards)
+      .withColumn("shard", col("skey") % shards)
       .withColumn("rk", row_number().over(w).cast("long"))
       .select(col("shard"), col("rk"), col("doc_id"), col("skey"))
   }

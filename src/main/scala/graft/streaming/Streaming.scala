@@ -25,6 +25,11 @@ object Streaming {
   /** SQ2 — the reference micro-batch cadence (utils/batching.go:12). */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
+  /** Store compaction cadence of [[clusterBatch]]'s band index and
+    * [[curateBatch]]'s fingerprint store: every 32nd micro-batch
+    * compacts the committed batches first (0 disables). */
+  val CompactEvery = 32
+
   /** SQ1 — file-based stream source with a FIXED schema (never inferred on
     * a stream). For a real deployment the same pipeline binds to
     * `spark.readStream.format("kafka")` + `from_json(col("value"))` with
@@ -368,11 +373,12 @@ object Streaming {
     * than the three prior re-scans it saves. The parquet re-read stays.) */
   def clusterBatch(batch: DataFrame, indexDir: String, clustersDir: String,
       batchId: Long, threshold: Double = 0.8,
-      reliableCheckpointDir: Option[String] = None): Unit = {
+      reliableCheckpointDir: Option[String] = None,
+      compactEvery: Int = CompactEvery): Unit = {
     import graft.operators.Dedup
     val spark = batch.sparkSession
-    // Compaction cadence (spark.graft.index.compactEvery, default every
-    // 32 micro-batches; 0 disables): streaming ingest accumulates one
+    // Compaction cadence (`compactEvery`, default [[CompactEvery]];
+    // 0 disables): streaming ingest accumulates one
     // band/sig directory tree per batch, and every later batch's probe
     // pays the listing for all of them — unbounded metadata growth over
     // a long-running stream. Compacting HERE, at the start of batch N,
@@ -380,8 +386,7 @@ object Streaming {
     // excludeBatch=N guard drops (rather than compacts) any leftover
     // from a crashed attempt at this batch, which the merge below
     // rewrites anyway. Amortized rewrite cost is gen-size/32 per batch —
-    // the LSM tradeoff, tunable per deployment.
-    val compactEvery = spark.conf.get("spark.graft.index.compactEvery", "32").toInt
+    // the LSM tradeoff.
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
       Dedup.compactIndex(spark, indexDir, excludeBatch = Some(batchId))
     val prior = latestClusterSnapshot(spark, clustersDir, belowBatch = batchId)
@@ -566,8 +571,8 @@ object Streaming {
     curateBatch(batch, evalArtifacts(evalDocs), fpDir, keptDir, batchId)
 
   def curateBatch(batch: DataFrame, eval: EvalArtifacts, fpDir: String,
-      keptDir: String, batchId: Long): Unit = {
-    val st = curateBatchStaged(batch, eval, fpDir, keptDir, batchId)
+      keptDir: String, batchId: Long, compactEvery: Int = CompactEvery): Unit = {
+    val st = curateBatchStaged(batch, eval, fpDir, keptDir, batchId, compactEvery)
     try scala.concurrent.Await.result(st.writes, scala.concurrent.duration.Duration.Inf)
     finally st.release()
   }
@@ -595,15 +600,14 @@ object Streaming {
     * rewrite of the same batch=N paths would corrupt the outputs — and
     * then call `release()`. [[curateBatch]] does both internally. */
   private[graft] def curateBatchStaged(batch: DataFrame, eval: EvalArtifacts,
-      fpDir: String, keptDir: String, batchId: Long): StagedCurate = {
+      fpDir: String, keptDir: String, batchId: Long,
+      compactEvery: Int = CompactEvery): StagedCurate = {
     import graft.operators.Dedup.{shingles3, tokHashesSeq}
     val spark = batch.sparkSession
     // Same compaction cadence and replay argument as clusterBatch's band
-    // index (spark.graft.fp.compactEvery, default every 32 batches; 0
-    // disables): ids < N are committed, a crashed attempt's batch=N rows
-    // are dropped and rewritten below.
-    val fpCompactEvery = spark.conf.get("spark.graft.fp.compactEvery", "32").toInt
-    if (fpCompactEvery > 0 && batchId > 0 && batchId % fpCompactEvery == 0)
+    // index: ids < N are committed, a crashed attempt's batch=N rows are
+    // dropped and rewritten below.
+    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
       compactFpStore(spark, fpDir, excludeBatch = Some(batchId))
     // Canonicalization runs over ALL arriving docs — contaminated and
     // quality-failed docs still claim their fingerprint (exactly the

@@ -131,27 +131,22 @@ class ClusterMergeSpec extends SparkSpec {
     val b0 = docsDF(Seq(1L -> x, 2L -> (x + " extraA extraB")))
     val b1 = docsDF(Seq(3L -> y, 4L -> toks(1000, 1040)))
     val b2 = docsDF(Seq(10L -> bridge, 11L -> (y + " extraC")))
-    def run(root: String, every: String): Map[Long, Long] = {
-      spark.conf.set("spark.graft.index.compactEvery", every)
-      try {
-        Streaming.clusterBatch(b0, s"$root/idx", s"$root/cl", 0L)
-        Streaming.clusterBatch(b1, s"$root/idx", s"$root/cl", 1L)
-        Streaming.clusterBatch(b2, s"$root/idx", s"$root/cl", 2L)
-        clusterMap(Streaming.latestClusterSnapshot(spark, s"$root/cl").get)
-      } finally spark.conf.unset("spark.graft.index.compactEvery")
+    def run(root: String, every: Int): Map[Long, Long] = {
+      Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
+        Streaming.clusterBatch(b, s"$root/idx", s"$root/cl", i.toLong, compactEvery = every)
+      }
+      clusterMap(Streaming.latestClusterSnapshot(spark, s"$root/cl").get)
     }
     val rootA = java.nio.file.Files.createTempDirectory("graft_cadence_off_").toString
     val rootB = java.nio.file.Files.createTempDirectory("graft_cadence_on_").toString
-    val off = run(rootA, "0")
-    val on = run(rootB, "2")
+    val off = run(rootA, 0)
+    val on = run(rootB, 2)
     assert(on == off, s"compaction cadence changed cluster results: on=$on off=$off")
     val dirs = new java.io.File(s"$rootB/idx/bands").listFiles()
       .filter(_.getName.startsWith("batch=")).map(_.getName).toSeq.sorted
     assert(dirs == Seq("batch=-1", "batch=2"), s"expected gen + current batch, got $dirs")
     // replay batch 2: compaction re-runs over the gen, merge rewrites
-    spark.conf.set("spark.graft.index.compactEvery", "2")
-    try Streaming.clusterBatch(b2, s"$rootB/idx", s"$rootB/cl", 2L)
-    finally spark.conf.unset("spark.graft.index.compactEvery")
+    Streaming.clusterBatch(b2, s"$rootB/idx", s"$rootB/cl", 2L, compactEvery = 2)
     assert(clusterMap(Streaming.latestClusterSnapshot(spark, s"$rootB/cl").get) == off,
       "replay after compaction diverged")
   }

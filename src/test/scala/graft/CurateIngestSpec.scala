@@ -181,19 +181,17 @@ class CurateIngestSpec extends SparkSpec {
     val b1 = Seq(CDoc(2, "s", good2), CDoc(12, "s", good1)).toDF("doc_id", "source", "text")
     val b2 = Seq(CDoc(3, "s", good3), CDoc(13, "s", good2)).toDF("doc_id", "source", "text")
     val evalDocs = b0.limit(0)
-    def run(root: String, every: String): Seq[Long] = {
-      spark.conf.set("spark.graft.fp.compactEvery", every)
-      try {
-        Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
-          Streaming.curateBatch(b, evalDocs, s"$root/fp", s"$root/kept", i.toLong)
-        }
-        spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
-      } finally spark.conf.unset("spark.graft.fp.compactEvery")
+    val eval = Streaming.evalArtifacts(evalDocs)
+    def run(root: String, every: Int): Seq[Long] = {
+      Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
+        Streaming.curateBatch(b, eval, s"$root/fp", s"$root/kept", i.toLong, every)
+      }
+      spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
     }
     val rootA = Files.createTempDirectory("graft_fpcad_off_").toString
     val rootB = Files.createTempDirectory("graft_fpcad_on_").toString
-    val off = run(rootA, "0")
-    val on = run(rootB, "2")
+    val off = run(rootA, 0)
+    val on = run(rootB, 2)
     // dups 12 and 13 must dedup against the (compacted) store either way
     assert(off == Seq(1L, 2L, 3L) && on == off,
       s"fp compaction changed the kept set: on=$on off=$off")
@@ -202,9 +200,7 @@ class CurateIngestSpec extends SparkSpec {
     assert(dirs == Seq("batch=-1", "batch=2"), s"expected gen + current batch, got $dirs")
     // replay batch 2 (compaction re-runs over the gen, then the batch
     // rewrites its own outputs) — kept set unchanged
-    spark.conf.set("spark.graft.fp.compactEvery", "2")
-    try Streaming.curateBatch(b2, evalDocs, s"$rootB/fp", s"$rootB/kept", 2L)
-    finally spark.conf.unset("spark.graft.fp.compactEvery")
+    Streaming.curateBatch(b2, eval, s"$rootB/fp", s"$rootB/kept", 2L, compactEvery = 2)
     assert(spark.read.parquet(s"$rootB/kept").select("doc_id").as[Long].collect().toSeq.sorted == off)
     // interrupted swap: store aside, no live dir → reads refuse loudly,
     // and a compactFpStore re-run rolls the original back

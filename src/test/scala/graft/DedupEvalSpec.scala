@@ -10,8 +10,7 @@ import graft.operators.Dedup
   * panel × corpus (linear at any scale). These specs pin the property
   * that makes the sample trustworthy: the panel truth is EXACTLY the
   * all-pairs truth restricted to the panel — same join, same threshold,
-  * same source scoping — never an approximation of it; and the guarded
-  * exact-truth baseline mode still runs end-to-end.
+  * same source scoping — never an approximation of it.
   */
 class DedupEvalSpec extends SparkSpec {
 
@@ -50,24 +49,5 @@ class DedupEvalSpec extends SparkSpec {
       "sf0.001 must exercise the panel truth non-trivially (planted near-dups)")
     assert(panelTruth != exactTruth,
       "the panel must actually subsample at this corpus size, or the spec is vacuous")
-  }
-
-  test("the guarded exact-truth baseline mode runs and can only improve on panel recall coverage") {
-    val fn = SparkEntry.queries("dedup_eval_recall")
-    val panelRows = fn(spark, Sf0001)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    spark.conf.set("spark.graft.dedupEval.exactTruth", "true")
-    try {
-      val exactRows = fn(spark, Sf0001)
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(exactRows.nonEmpty && panelRows.nonEmpty)
-      // every panel-mode source is a subsample of the exact-mode truth:
-      // n_should_drop (panel) <= n_should_drop (exact), same for hits
-      panelRows.foreach { case (src, (nsd, nhit)) =>
-        val (ensd, enhit) = exactRows(src)
-        assert(nsd <= ensd && nhit <= enhit,
-          s"$src: panel counts ($nsd,$nhit) must not exceed exact counts ($ensd,$enhit)")
-      }
-    } finally spark.conf.unset("spark.graft.dedupEval.exactTruth")
   }
 }

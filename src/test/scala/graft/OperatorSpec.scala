@@ -456,14 +456,12 @@ class OperatorSpec extends SparkSpec {
     // including the degenerate single bucket (≡ the old per-source
     // window) and a count that forces multi-bucket sources.
     val docs = Tables(spark, Sf0001, "documents")
-    def run() = TextOps.packSequences(docs)
+    def run(n: Int = TextOps.PackBuckets) = TextOps.packSequences(docs, nBuckets = n)
       .orderBy("source", "seq_id", "doc_id").collect().toSeq
     val base = run()
     assert(base.nonEmpty)
-    Seq("1", "3").foreach { n =>
-      spark.conf.set("spark.graft.pack.buckets", n)
-      try assert(run() == base, s"$n-bucket run diverges from the 256-bucket default")
-      finally spark.conf.unset("spark.graft.pack.buckets")
+    Seq(1, 3).foreach { n =>
+      assert(run(n) == base, s"$n-bucket run diverges from the 256-bucket default")
     }
   }
 
@@ -486,7 +484,7 @@ class OperatorSpec extends SparkSpec {
       rs.sortBy(_._2).map(_._3) != rs.map(_._3).sorted))
   }
 
-  test("shuffleShards at 64 shards: conf-driven, deterministic, per-shard order shard-count-independent") {
+  test("shuffleShards at 64 shards: argument-driven, deterministic, per-shard order shard-count-independent") {
     // Scale contract: shards ≈ reader count (each shard's rank window is
     // one task). Ordering within a shard is the global (skey, doc_id)
     // total order restricted to the shard, so re-sharding re-partitions
@@ -498,9 +496,6 @@ class OperatorSpec extends SparkSpec {
     val a = run(TextOps.shuffleShards(docs, shards = 64L))
     assert(a == run(TextOps.shuffleShards(docs, shards = 64L)), "not deterministic at 64")
     assert(a.map(_._1).distinct.size > 8, "64-way split must use more shards than the default 8")
-    spark.conf.set("spark.graft.shuffle.shards", "64")
-    try assert(run(TextOps.shuffleShards(docs)) == a, "conf must drive the default shard count")
-    finally spark.conf.unset("spark.graft.shuffle.shards")
     // every doc exactly once, and each shard's rank order IS the global
     // total order (skey, doc_id) restricted to the shard — at 8 and 64
     val at8 = run(TextOps.shuffleShards(docs, shards = 8L))

@@ -78,24 +78,20 @@ class RankSpec extends SparkSpec {
   test("a rank.buckets × metrics product past the offset-read bound fails before any job") {
     // 2M buckets × 3 metrics = 6M offset rows > the 2^22-row driver read:
     // the (nBuckets * m).toInt bound must not reach boundedCollect, whose
-    // error would not name the knob
+    // error would not name the argument
     val df = (0L until 10L).map(i => (i, i * 2, i * 3)).toDF("a", "b", "c")
     val group = "rank-bound-" + java.util.UUID.randomUUID()
-    spark.conf.set("spark.graft.rank.buckets", "2000000")
     spark.sparkContext.setJobGroup(group, "rank bound check")
     try {
       val ex = intercept[IllegalArgumentException] {
         Qh.globalRowNumbers(df, Seq(col("a") -> "ra", col("b") -> "rb", col("c") -> "rc"),
-          col("a"))
+          col("a"), nBuckets = 2000000L)
       }
-      assert(ex.getMessage.contains("spark.graft.rank.buckets=2000000"), ex.getMessage)
+      assert(ex.getMessage.contains("nBuckets=2000000"), ex.getMessage)
       assert(ex.getMessage.contains("3 ranked metric"), ex.getMessage)
       assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
         "the bound is checked before the bounds aggregate runs")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.conf.unset("spark.graft.rank.buckets")
-    }
+    } finally spark.sparkContext.clearJobGroup()
   }
 
   test("ntileFromRn reproduces SQL ntile for every residue class") {
