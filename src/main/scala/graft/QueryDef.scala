@@ -273,6 +273,21 @@ object Qh {
     }
   }
 
+  /** A fresh per-process temp directory `<tmp>/<prefix>NNN` for
+    * process-lifetime memo tables (clusters, layouts, IVF-PQ indexes),
+    * removed with everything under it by a JVM shutdown hook so the
+    * tables never outlive the process that wrote them. */
+  def processTempRoot(prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(f: java.io.File): Unit = {
+        val ch = f.listFiles(); if (ch != null) ch.foreach(rm); f.delete(): Unit
+      }
+      rm(root.toFile)
+    }))
+    root.toString
+  }
+
   /** Exact integer cents of a 2-decimal money column. */
   def cents(c: Column): Column = round(c * 100).cast("long")
 

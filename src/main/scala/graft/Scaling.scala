@@ -28,11 +28,10 @@ package graft
   *    and the big-sf run absorbs JIT where it is proportionally
   *    smallest.
   *  - SPARK_GRAFT_SCALING_RUNS per-(query, sf) repeats (default 3; min
-  *    reported — same contention rationale as Bench; Bench's extraRuns
-  *    entries get 6).
-  *  - Bench's cache isolation between runs, so per-dir memo builds
-  *    (corpus_manifest, sim_pq_adc) charge the same entry they charge
-  *    in Bench.
+  *    reported), timed by Bench's own loop ([[Bench.timedRuns]]) with
+  *    its [[Bench.ExtraRuns]] repeats and its cache isolation between
+  *    runs, so per-dir memo builds (corpus_manifest, sim_pq_adc) charge
+  *    the same entry they charge in Bench.
   */
 object Scaling {
   def main(args: Array[String]): Unit = {
@@ -47,10 +46,6 @@ object Scaling {
     spark.range(100000).selectExpr("id % 32 AS k", "id AS v")
       .groupBy("k").count().write.format("noop").mode("overwrite").save()
     val repeats = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALING_RUNS", "3").toInt)
-    // same multi-round JIT/GC variance class Bench gives min-of-6
-    val extraRuns = Map("dedup_cluster_build" -> 6, "corpus_manifest" -> 6,
-      "q55_pagerank" -> 6, "q77_khop_reach" -> 6, "q109_hits" -> 6,
-      "q114_sssp" -> 6)
     def fmt(d: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, d)
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     // per-query interleave: times[sfDir][name] = min seconds
@@ -62,19 +57,9 @@ object Scaling {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => queryFilter.forall(_.contains(n)) && !excludeSet.contains(n) }
       .foreach { case (name, fn) =>
-      val reps = math.max(repeats, extraRuns.getOrElse(name, 0))
       sfDirs.foreach { sfDir =>
-        val runs = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[scaling] $name@$sfDir failed: ${e.getMessage}"); false }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-          (dt, ok)
-        }
+        val runs = Bench.timedRuns(spark, fn, sfDir, Bench.runsFor(name, repeats),
+          s"[scaling] $name@$sfDir")
         if (!runs.forall(_._2)) failed += s"$name@$sfDir"
         times(sfDir)(name) = if (runs.forall(_._2)) runs.map(_._1).min else -1.0
       }

@@ -57,10 +57,11 @@ object Bloom {
     * Runs two bounded Spark jobs: a distinct count (sizing + the cap
     * check) and a distinct-positions collect. `maxKeys` is the caller's
     * boundedness contract — building a bloom over an UNBOUNDED key set is
-    * a driver OOM at scale, so refuse loudly instead. `k` defaults to
+    * a driver OOM at scale, so refuse loudly instead; the error names
+    * `boundKey`, the setting `maxKeys` came from. `k` defaults to
     * [[optimalK]] for the chosen bitsPerKey. */
   def build(keys: DataFrame, keyCol: String, maxKeys: Long,
-      bitsPerKey: Int = 16, k: Int = -1): Filter = {
+      bitsPerKey: Int = 16, k: Int = -1, boundKey: String = "maxKeys"): Filter = {
     val kEff = if (k > 0) k else optimalK(bitsPerKey)
     // Distinct ONCE, reused by the count guard and the position job —
     // callers commonly pass one row per (doc, key) and the duplicate
@@ -68,7 +69,7 @@ object Bloom {
     val ks = keys.select(keyCol).distinct()
     val n = ks.count()
     require(n <= maxKeys,
-      s"Bloom.build over $n distinct keys exceeds the $maxKeys-key bound: a bloom " +
+      s"$boundKey=$maxKeys: Bloom.build over $n distinct keys exceeds this bound: a bloom " +
         "prefilter is for BOUNDED key sets (eval/benchmark corpora); use the " +
         "shuffle equi-join path (text_contamination) for corpus-sized sets")
     val mBits = nextPow2(math.max(1L, n) * bitsPerKey)

@@ -117,6 +117,30 @@ object Dedup {
     s"sig AS (SELECT $cs,\n    $mhs\n  FROM $src),\nbanded AS ($bandRows)"
   }
 
+  /** Keep-first LSH candidates over a posting table `banded` (doc_id,
+    * band, bkey and the `scope` columns): one (scope.., doc_id, min_id)
+    * row per doc and each distinct smaller minimum of a (scope, band,
+    * bkey) bucket it sits in — at most [[Bands]] verifications per doc,
+    * the candidate rule of [[defs dedup_minhash_lsh]]'s keep-first
+    * dedup. [[bucketMinSql]] is the DuckDB mirror. */
+  def bucketMinPairs(banded: DataFrame, scope: Seq[String]): DataFrame = {
+    val bucket = scope ++ Seq("band", "bkey")
+    banded.join(banded.groupBy(bucket.map(col): _*).agg(min("doc_id").as("min_id")), bucket)
+      .filter(col("doc_id") > col("min_id"))
+      .select((scope :+ "doc_id" :+ "min_id").map(col): _*).distinct()
+  }
+
+  /** The oracle's `bucket_min` and `cand` CTEs over [[bandOracleSql]]'s
+    * `banded` — `cand` holds [[bucketMinPairs]]' (scope.., doc_id,
+    * min_id) rows. */
+  private def bucketMinSql(scope: Seq[String]): String = {
+    val bucket = (scope ++ Seq("band", "bkey")).mkString(", ")
+    val on = (scope ++ Seq("band", "bkey")).map(c => s"b.$c = m.$c").mkString(" AND ")
+    s"bucket_min AS (SELECT $bucket, MIN(doc_id) AS min_id FROM banded GROUP BY $bucket),\n" +
+      s"cand AS (SELECT DISTINCT ${scope.map(c => s"b.$c, ").mkString}b.doc_id, m.min_id\n" +
+      s"  FROM banded b JOIN bucket_min m ON $on\n  WHERE b.doc_id > m.min_id)"
+  }
+
   /** SimHash: 60-bit fingerprint = 4 bands × 15 bits (Manku et al.,
     * "Detecting Near-Duplicates for Web Crawling", WWW'07 shape: wide
     * fingerprint + banded index). 60 bits keeps the packed value inside a
@@ -429,11 +453,7 @@ object Dedup {
         val base = docs
           .select(col("doc_id"), toks(col("text")).as("tk"), tokHashes(col("text")).as("th"))
         val sig = base.withColumn("mhs", minhashSig(col("th")))
-        val banded = bandExplode(sig, "mhs", Seq("doc_id"))
-        val bucketMin = banded.groupBy("band", "bkey").agg(min("doc_id").as("min_id"))
-        val cand = banded.join(bucketMin, Seq("band", "bkey"))
-          .filter(col("doc_id") > col("min_id"))
-          .select("doc_id", "min_id").distinct()
+        val cand = bucketMinPairs(bandExplode(sig, "mhs", Seq("doc_id")), Nil)
         val tkOf = base.select(col("doc_id"), col("tk"))
         val dropped = cand
           .join(tkOf.select(col("doc_id"), col("tk").as("ta")), Seq("doc_id"))
@@ -448,10 +468,7 @@ object Dedup {
         s"""WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tk,
            |    ${tokHashesSql("text")} AS th FROM documents),
            |${bandOracleSql("base", "th", Seq("doc_id"))},
-           |bucket_min AS (SELECT band, bkey, MIN(doc_id) AS min_id FROM banded GROUP BY band, bkey),
-           |cand AS (SELECT DISTINCT b.doc_id, m.min_id FROM banded b
-           |         JOIN bucket_min m ON b.band = m.band AND b.bkey = m.bkey
-           |         WHERE b.doc_id > m.min_id),
+           |${bucketMinSql(Nil)},
            |dropped AS (SELECT DISTINCT c.doc_id FROM cand c
            |            JOIN base x ON x.doc_id = c.doc_id
            |            JOIN base y ON y.doc_id = c.min_id
@@ -487,12 +504,8 @@ object Dedup {
         val sig = base.withColumn("mhs", minhashSig(col("th")))
           .select(col("doc_id"), col("tk"), col("mhs"))
           .localCheckpoint() // banded + both pair-fetch sides
-        val banded = bandExplode(sig, "mhs", Seq("doc_id"))
-        val bucketMin = banded.groupBy("band", "bkey").agg(min("doc_id").as("a"))
-        val cand = banded.join(bucketMin, Seq("band", "bkey"))
-          .filter(col("doc_id") > col("a"))
-          .select(col("a"), col("doc_id").as("b")).distinct()
-        cand
+        bucketMinPairs(bandExplode(sig, "mhs", Seq("doc_id")), Nil)
+          .select(col("min_id").as("a"), col("doc_id").as("b"))
           .join(sig.select(col("doc_id").as("a"), col("tk").as("ta"),
             col("mhs").as("ma")), Seq("a"))
           .join(sig.select(col("doc_id").as("b"), col("tk").as("tb"),
@@ -526,14 +539,11 @@ object Dedup {
         s"""WITH base AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tk,
            |    ${tokHashesSql("text")} AS th FROM documents),
            |${bandOracleSql("base", "th", Seq("doc_id", "tk"))},
-           |bucket_min AS (SELECT band, bkey, MIN(doc_id) AS a FROM banded GROUP BY band, bkey),
-           |cand AS (SELECT DISTINCT m.a, b.doc_id AS b
-           |  FROM banded b JOIN bucket_min m ON b.band = m.band AND b.bkey = m.bkey
-           |  WHERE b.doc_id > m.a),
+           |${bucketMinSql(Nil)},
            |p AS (SELECT CAST($eq AS BIGINT) AS matches,
            |    CAST(len(list_filter(x.tk, jv -> list_contains(y.tk, jv))) AS BIGINT) AS inter,
            |    CAST(len(x.tk) + len(y.tk) AS BIGINT) AS szsum
-           |  FROM cand c JOIN sig x ON x.doc_id = c.a JOIN sig y ON y.doc_id = c.b),
+           |  FROM cand c JOIN sig x ON x.doc_id = c.min_id JOIN sig y ON y.doc_id = c.doc_id),
            |q AS (SELECT matches, matches * 125000 AS e_ppm,
            |    CAST(divide(inter * 1000000, szsum - inter) AS BIGINT) AS j_ppm
            |  FROM p),
@@ -1309,12 +1319,7 @@ object Dedup {
         val panel = evalPanel(base).localCheckpoint()
         val truthDrop = evalTruthDrop(base, panel)
         val sig = base.withColumn("mhs", minhashSig(col("th")))
-        val banded = bandExplode(sig, "mhs", Seq("doc_id", "source"))
-        val bucketMin = banded.groupBy("source", "band", "bkey")
-          .agg(min("doc_id").as("min_id"))
-        val cand = banded.join(bucketMin, Seq("source", "band", "bkey"))
-          .filter(col("doc_id") > col("min_id"))
-          .select("source", "doc_id", "min_id").distinct()
+        val cand = bucketMinPairs(bandExplode(sig, "mhs", Seq("doc_id", "source")), Seq("source"))
         val predDrop = cand.join(panel.select("doc_id"), Seq("doc_id"), "left_semi")
           .join(base.select(col("doc_id"), col("tk").as("ta")), Seq("doc_id"))
           .join(base.select(col("doc_id").as("min_id"), col("tk").as("tb")), Seq("min_id"))
@@ -1338,12 +1343,7 @@ object Dedup {
            |          FROM panel p JOIN base x ON x.source = p.source AND x.doc_id < p.doc_id
            |          WHERE ${jaccardSql("x.tk", "p.tk")} >= 0.7),
            |${bandOracleSql("base", "th", Seq("doc_id", "source"))},
-           |bucket_min AS (SELECT source, band, bkey, MIN(doc_id) AS min_id
-           |               FROM banded GROUP BY source, band, bkey),
-           |cand AS (SELECT DISTINCT b.source, b.doc_id, m.min_id FROM banded b
-           |         JOIN bucket_min m ON b.source = m.source AND b.band = m.band
-           |           AND b.bkey = m.bkey
-           |         WHERE b.doc_id > m.min_id),
+           |${bucketMinSql(Seq("source"))},
            |pred AS (SELECT DISTINCT c.source, c.doc_id AS b
            |         FROM cand c
            |         JOIN base x ON x.doc_id = c.doc_id
@@ -1956,16 +1956,7 @@ object Dedup {
     * closure. The temp root is removed by a JVM shutdown hook, so the
     * tables never outlive the process that wrote them. */
   private val clustersWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val clustersRoot = {
-    val root = java.nio.file.Files.createTempDirectory("graft-clusters-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val ch = f.listFiles(); if (ch != null) ch.foreach(rm); f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
-    root.toString
-  }
+  private lazy val clustersRoot = processTempRoot("graft-clusters-")
 
   /** Drop the memoized cluster table for `dir` (or all dirs) — required
     * before re-reading a corpus dir whose CONTENT changed in-process. */
@@ -2002,13 +1993,130 @@ object Dedup {
   /** Partition bucket of a band key. */
   def kbOf(bkey: Column): Column = pmod(strHash(bkey), lit(KbBuckets.toLong)).cast("int")
 
-  /** Static partition-prune predicate over the (band, kb) partition
-    * columns — an OR of exact pairs, the form the parquet source folds
-    * into `PartitionFilters`. `pairs` is bounded by Bands*KbBuckets (64),
-    * so collecting it to the driver is an O(1)-sized aggregate. */
-  def bandPrunePredicate(pairs: Seq[(Int, Int)]): Column =
-    pairs.map { case (bd, k) => col("band") === bd && col("kb") === k }
-      .reduceOption(_ || _).getOrElse(lit(false))
+  /** Columns of the band index's two tables (see [[incrementalNearDup]]
+    * for the layout); every reader and writer goes through these. */
+  private val BandsDdl = "band INT, bkey STRING, doc_id BIGINT, source STRING, kb INT"
+  private val SigsDdl = "doc_id BIGINT, tk ARRAY<BIGINT>"
+
+  /** An arriving batch signed for the band index: `sig` (doc_id, source,
+    * tk, mhs) and its posting rows `banded` (doc_id, source, band, bkey,
+    * kb). Both are persisted — each feeds the probe, the in-batch pass
+    * and the index write — until [[writeIndex]] (or a caller that writes
+    * nothing) calls `release`. */
+  private final case class Signed(sig: DataFrame, banded: DataFrame) {
+    def tk: DataFrame = sig.select("doc_id", "tk")
+    def release(): Unit = { banded.unpersist(blocking = false); sig.unpersist(blocking = false); () }
+  }
+
+  /** The batch's `source` column, or "" when it has none (the
+    * single-source case). */
+  private def sourceOf(df: DataFrame): Column =
+    (if (df.columns.contains("source")) col("source") else lit("")).as("source")
+
+  /** Sign `docs` (doc_id, text, optional source) for the band index:
+    * token hashes, MinHash signature, band explode and the kb bucket. */
+  private def signBatch(docs: DataFrame): Signed = {
+    val sig = docs.select(col("doc_id"), sourceOf(docs), tokHashes(col("text")).as("tk"))
+      .withColumn("mhs", minhashSig(col("tk")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Signed(sig, bandExplode(sig, "mhs", Seq("doc_id", "source"))
+      .withColumn("kb", kbOf(col("bkey")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** Verified near-dup edges (doc_id, old_id) from a signed batch into the
+    * stored index: every stored doc sharing a (band, bkey) — and the
+    * `scope` columns — with a batch doc, kept when token Jaccard >=
+    * `threshold`. Stored rows under `excludeBatch` are not read (replay
+    * safety, see [[incrementalNearDup]]).
+    *
+    * The batch side is BROADCAST (the bounded-batch contract of
+    * [[incrementalNearDup]] and [[mergeClusters]]), and index-partition
+    * pruning is DYNAMIC: kb = kbOf(bkey) is a data column on the batch
+    * side and a partition column on the stored side, so adding it to the
+    * equi-join keys is a no-op for the join RESULT but lets Spark's
+    * dynamic partition pruning derive the stored scan's partition filter
+    * from the broadcast batch side — at most Bands x KbBuckets partitions
+    * read, with no driver collect per batch. MergeDppSpec pins that the
+    * pruning subquery is present in the probe's executed plan for both
+    * callers, so a planner change cannot silently degrade it to a full
+    * index scan. With no index on disk yet the stored side is
+    * definitionally empty and no probe job runs. */
+  private def probeIndex(signed: Signed, indexDir: String, scope: Seq[String],
+      threshold: Double, excludeBatch: Option[Long]): DataFrame = {
+    val spark = signed.sig.sparkSession
+    // read (and so guard: mid-swap, old format, hash version) before the
+    // no-index shortcut — a crash-left `bands.old` must fail, not probe empty
+    val storedBands = readIndexTable(spark, s"$indexDir/bands", BandsDdl, excludeBatch)
+    val storedSigs = readIndexTable(spark, s"$indexDir/sigs", SigsDdl, excludeBatch)
+    if (!graft.sources.Sources.fsExists(spark, s"$indexDir/bands"))
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, old_id BIGINT"))
+    val keys = Seq("band", "kb", "bkey") ++ scope
+    storedBands.select(keys.map(col) :+ col("doc_id").as("old_id"): _*)
+      .join(broadcast(signed.banded.select((keys :+ "doc_id").map(col): _*)
+        // the band-domain bound is a tautology (bands are 0..Bands-1 by
+        // construction) kept for the OPTIMIZER: Spark's PartitionPruning
+        // rule only derives a dynamic partition filter from a build side
+        // that carries a likely-selective predicate, and an unfiltered
+        // broadcast — however small — does not qualify
+        .filter(col("band").between(0, Bands - 1))), keys)
+      .select("doc_id", "old_id").distinct()
+      // the stored side stays a shuffle join: it is index-sized
+      .join(broadcast(signed.tk), Seq("doc_id"))
+      .join(storedSigs.select(col("doc_id").as("old_id"), col("tk").as("tko")), Seq("old_id"))
+      .filter(jaccard(col("tk"), col("tko")) >= threshold)
+      .select(col("doc_id"), col("old_id"))
+  }
+
+  /** Task count for the per-batch bands-index write. The FILE count (one
+    * per touched (band, kb) dir) is the same at any task count, and a
+    * micro-batch increment is small by definition, so
+    * shuffle.partitions-many writer tasks would be pure overhead. */
+  private val BandWriteTasks = 4
+
+  /** Write a signed batch — or only its `keep` doc ids — into the index as
+    * `batch=$batchId` of `bands/` and `sigs/`, mode=overwrite, so a
+    * replayed batch rewrites the same paths. The two writes run as
+    * CONCURRENT jobs; the returned future completes after both (success
+    * or failure), and the signed frames are released then. Every caller
+    * awaits it before its batch body returns: a dangling write racing a
+    * replay's rewrite of the same paths would corrupt the index.
+    *
+    * Bands are repartitioned onto their (band, kb) target dirs in
+    * `bandTasks` tasks before the dynamic-partition write: from P input
+    * partitions the writer would open up to P x 64 files; repartitioned,
+    * each task owns whole directories — ~30x fewer files per micro-batch
+    * (r10 lane profile) and cheaper listing for every later probe. */
+  private def writeIndex(signed: Signed, indexDir: String, batchId: Long, bandTasks: Int,
+      keep: Option[DataFrame] = None): scala.concurrent.Future[Unit] = {
+    val spark = signed.sig.sparkSession
+    def kept(df: DataFrame): DataFrame = keep.fold(df)(ids => df.join(ids, Seq("doc_id")))
+    implicit val ec: scala.concurrent.ExecutionContext = Qh.ioEc
+    // Each write stamps its store BEFORE writing data: a crash in between
+    // leaves a stamped-but-empty dir that reads as an empty store and
+    // replays cleanly; stamped after, the same crash left current-fold
+    // data that requireHashVersion would permanently refuse as "pre-v2".
+    val fBands = scala.concurrent.Future {
+      Qh.stampHashVersion(spark, s"$indexDir/bands")
+      kept(signed.banded).select("bkey", "doc_id", "source", "band", "kb")
+        .repartition(bandTasks, col("band"), col("kb"))
+        .write.partitionBy("band", "kb")
+        .mode("overwrite").parquet(s"$indexDir/bands/batch=$batchId")
+    }
+    val fSigs = scala.concurrent.Future {
+      Qh.stampHashVersion(spark, s"$indexDir/sigs")
+      kept(signed.tk).coalesce(math.min(8, spark.sparkContext.defaultParallelism))
+        .write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$batchId")
+    }
+    // NOT zip: zip fails fast, orphaning the partner write
+    val written = Qh.afterBoth(fBands, fSigs)
+    written.onComplete(_ => signed.release())
+    written
+  }
+
+  private def await(f: scala.concurrent.Future[Unit]): Unit =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
   /** Dedup an ARRIVING batch of documents against a persistent LSH band
     * index, instead of re-running corpus-wide dedup — the only shape that
@@ -2021,9 +2129,9 @@ object Dedup {
     *   - `bands/batch=N/`: (band, bkey, doc_id, source) — LSH posting lists;
     *   - `sigs/batch=N/`:  (doc_id, tk)        — token-hash sets for verify.
     * Each call writes ONLY its own `batch=$batchId` subdirectories with
-    * mode=overwrite, so a replayed micro-batch (checkpoint recovery)
-    * rewrites the same paths and the index never duplicates: dedup output
-    * is idempotent per batch id.
+    * mode=overwrite ([[writeIndex]]), so a replayed micro-batch
+    * (checkpoint recovery) rewrites the same paths and the index never
+    * duplicates: dedup output is idempotent per batch id.
     *
     * INDEX FORMAT: `bands/` is hive-partitioned by (band, kb) — an index
     * written by an engine version without the kb partition column is NOT
@@ -2037,97 +2145,48 @@ object Dedup {
     * ingest into a fresh indexDir.
     *
     * A new doc is dropped if it Jaccard-matches (>= threshold) any stored
-    * doc sharing a band key, or the minimum-id doc of one of its band
-    * buckets within the batch (the [[defs dedup_minhash_lsh]] keep-first
-    * approximation). Scale notes: every join here is an equi-join on the
-    * compact (band, bkey) key or on doc_id; the arriving batch is small
-    * relative to the index, so Spark broadcasts the batch side of the
-    * index probe. The bands index is PARTITIONED by (band, kb) — kb a
-    * [[KbBuckets]]-way hash bucket of bkey — and the probe statically
-    * filters on the exact (band, kb) pairs present in the arriving batch,
-    * so a small probe reads only the index partitions its own keys hash
-    * to (PartitionFilters on the scan), never the whole index.
+    * doc sharing a band key ([[probeIndex]], scope Nil), or the
+    * minimum-id doc of one of its band buckets within the batch
+    * ([[bucketMinPairs]], the [[defs dedup_minhash_lsh]] keep-first
+    * approximation). Every join is an equi-join on the compact (band,
+    * bkey) key or on doc_id, and the stored-index probe prunes the
+    * (band, kb) partitions dynamically from the broadcast batch side, so a
+    * small probe reads only the index partitions its own keys hash to.
     *
-    * Returns the kept rows of `batch` (all original columns). */
+    * BOUNDED-BATCH CONTRACT: `batch` must be micro-batch-sized — the
+    * arriving slice of a throttled stream (maxFilesPerTrigger /
+    * maxOffsetsPerTrigger are the backpressure knobs), never the corpus.
+    * The probe BROADCASTS the batch's posting and signature frames, so an
+    * unbounded batch fails LOUDLY at Spark's broadcast size limit rather
+    * than silently degrading; corpus-scale dedup is
+    * [[defs dedup_minhash_lsh]]'s job.
+    *
+    * Returns the kept rows of `batch` (all original columns); the index
+    * write has landed when it returns. */
   def incrementalNearDup(batch: org.apache.spark.sql.DataFrame, indexDir: String,
       threshold: Double = 0.7, batchId: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val spark = batch.sparkSession
-    val bandsDir = s"$indexDir/bands"
-    val sigsDir = s"$indexDir/sigs"
-    // A REPLAYED batch must not probe against its own previously written
-    // rows (they would near-dup-match the very docs being re-decided and
-    // drop both members of a kept similar pair), so the current batch id
-    // is excluded from the stored view.
-    val storedBands = readIndexTable(spark, bandsDir,
-      "band INT, bkey STRING, doc_id BIGINT, source STRING, kb INT", excludeBatch = Some(batchId))
-    val storedSigs = readIndexTable(spark, sigsDir,
-      "doc_id BIGINT, tk ARRAY<BIGINT>", excludeBatch = Some(batchId))
-
-    // Persist the signed/banded batch: it feeds the probe-pair collect,
-    // both candidate joins, and the index write below — without the cache
-    // each consumer would recompute tokHashes+MinHash+band-explode over
-    // the arriving documents (4x the signature cost per micro-batch).
-    val srcCol = if (batch.columns.contains("source")) col("source") else lit("")
-    val withSig = batch.select(col("doc_id"), srcCol.as("source"),
-        tokHashes(col("text")).as("tk"))
-      .withColumn("mhs", minhashSig(col("tk")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = bandExplode(withSig, "mhs", Seq("doc_id", "source"))
-      .withColumn("kb", kbOf(col("bkey")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newSigs = withSig.select(col("doc_id"), col("tk"))
-
-    // Prune the stored index scan to the exact (band, kb) partitions the
-    // probe can hit — kb is a pure function of bkey, so dropping every
-    // other partition cannot lose a join match. The pair set is <= 64
-    // values (Bands x KbBuckets); collecting it is a tiny aggregate.
-    val probePairs = Qh.boundedCollect(banded.select("band", "kb").distinct(),
-      Bands * KbBuckets, "LSH probe (band, kb) partition prune set")
-      .map(r => (r.getInt(0), r.getInt(1))).toSeq
-
-    // vs the stored corpus: all colliding (new, stored) pairs, verified.
-    // No doc_id self-exclusion: a doc RE-DELIVERED in a later batch
-    // (at-least-once sources) must match its own stored copy and drop —
-    // that is exactly the reference's T7 cross-run dedup. Same-batch
-    // replay is already excluded via the batch partition column above.
-    val candOld = banded
-      .join(storedBands.filter(bandPrunePredicate(probePairs))
-        .select(col("band"), col("bkey"), col("doc_id").as("old_id")),
-        Seq("band", "bkey"))
-      .select("doc_id", "old_id").distinct()
-    val droppedVsIndex = candOld
-      .join(newSigs, Seq("doc_id"))
-      .join(storedSigs.select(col("doc_id").as("old_id"), col("tk").as("tko")), Seq("old_id"))
-      .filter(jaccard(col("tk"), col("tko")) >= threshold)
+    val signed = signBatch(batch)
+    // vs the stored corpus. A REPLAYED batch must not probe against its
+    // own previously written rows (they would near-dup-match the very
+    // docs being re-decided and drop both members of a kept similar
+    // pair), so batch=batchId is excluded. No doc_id self-exclusion: a
+    // doc RE-DELIVERED in a later batch (at-least-once sources) must
+    // match its own stored copy and drop — exactly the reference's T7
+    // cross-run dedup.
+    val droppedVsIndex = probeIndex(signed, indexDir, Nil, threshold, Some(batchId))
       .select("doc_id")
-
     // within the batch: keep-first vs each bucket's min id
-    val bucketMin = banded.groupBy("band", "bkey").agg(min("doc_id").as("min_id"))
-    val droppedInBatch = banded.join(bucketMin, Seq("band", "bkey"))
-      .filter(col("doc_id") > col("min_id"))
-      .select("doc_id", "min_id").distinct()
-      .join(newSigs, Seq("doc_id"))
-      .join(newSigs.select(col("doc_id").as("min_id"), col("tk").as("tkm")), Seq("min_id"))
+    val droppedInBatch = bucketMinPairs(signed.banded, Nil)
+      .join(signed.tk, Seq("doc_id"))
+      .join(signed.tk.select(col("doc_id").as("min_id"), col("tk").as("tkm")), Seq("min_id"))
       .filter(jaccard(col("tk"), col("tkm")) >= threshold)
       .select("doc_id")
-
-    val kept = batch.join(droppedVsIndex.union(droppedInBatch).distinct(),
-      Seq("doc_id"), "left_anti")
     // Materialize before writing the index: the kept set must be decided
     // against the PRE-batch index, not one the write below is mutating.
-    val keptOut = kept.localCheckpoint(true)
-    val keptIds = keptOut.select("doc_id")
-    // stamp BEFORE the writes — see indexBatch for the crash-window argument
-    Qh.stampHashVersion(spark, bandsDir)
-    Qh.stampHashVersion(spark, sigsDir)
-    banded.join(keptIds, Seq("doc_id"))
-      .select("bkey", "doc_id", "source", "band", "kb")
-      .write.partitionBy("band", "kb")
-      .mode("overwrite").parquet(s"$bandsDir/batch=$batchId")
-    newSigs.join(keptIds, Seq("doc_id"))
-      .write.mode("overwrite").parquet(s"$sigsDir/batch=$batchId")
-    banded.unpersist()
-    withSig.unpersist()
+    val keptOut = batch.join(droppedVsIndex.union(droppedInBatch).distinct(),
+      Seq("doc_id"), "left_anti").localCheckpoint(true)
+    await(writeIndex(signed, indexDir, batchId, BandWriteTasks,
+      keep = Some(keptOut.select("doc_id"))))
     keptOut
   }
 
@@ -2255,47 +2314,31 @@ object Dedup {
     }
     // Each swap WRITES the compacted copy before renaming anything, so the
     // plan always reads from intact source dirs — no lineage hazard.
-    val bands = readIndexTable(spark, s"$indexDir/bands",
-      "band INT, bkey STRING, doc_id BIGINT, source STRING, kb INT", excludeBatch)
-    val sigs = readIndexTable(spark, s"$indexDir/sigs",
-      "doc_id BIGINT, tk ARRAY<BIGINT>", excludeBatch)
-    // same writer discipline as mergeAndIndex: cluster rows onto their
+    val bands = readIndexTable(spark, s"$indexDir/bands", BandsDdl, excludeBatch)
+    val sigs = readIndexTable(spark, s"$indexDir/sigs", SigsDdl, excludeBatch)
+    // same writer discipline as writeIndex: cluster rows onto their
     // (band, kb) target dirs so each task owns whole directories
     swap("bands", dir => bands.repartition(col("band"), col("kb"))
       .write.partitionBy("band", "kb").parquet(dir))
     swap("sigs", dir => sigs.write.parquet(dir))
   }
 
-  /** Index an arriving batch into the persistent band index WITHOUT any
-    * dedup decision — the companion write for pipelines that RETAIN
+  /** Index a batch into the persistent band index WITHOUT any dedup
+    * decision — the companion write for pipelines that RETAIN
     * near-duplicates and track them as clusters ([[mergeClusters]])
     * rather than dropping them on ingest ([[incrementalNearDup]]).
-    * Same format and idempotence contract: only `batch=$batchId`
-    * subdirectories are written, mode=overwrite, so checkpoint replays
-    * rewrite the same paths. */
+    * Same format and idempotence contract ([[writeIndex]]): only
+    * `batch=$batchId` subdirectories are written, mode=overwrite, so
+    * checkpoint replays rewrite the same paths.
+    *
+    * Unlike the probing callers this is also the one-off BOOTSTRAP
+    * backfill (see [[mergeAndIndex]]'s precondition), whose input can be
+    * corpus-sized, so the bands write runs in the session's
+    * shuffle-partition count of tasks rather than [[BandWriteTasks]]. */
   def indexBatch(batch: org.apache.spark.sql.DataFrame, indexDir: String,
-      batchId: Long): Unit = {
-    val srcCol = if (batch.columns.contains("source")) col("source") else lit("")
-    val withSig = batch.select(col("doc_id"), srcCol.as("source"),
-        tokHashes(col("text")).as("tk"))
-      .withColumn("mhs", minhashSig(col("tk")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Stamp BEFORE the first data write: a crash in between leaves a
-    // stamped-but-empty dir that reads as an empty store and replays
-    // cleanly; stamped-after, the same crash left current-fold data
-    // that requireHashVersion would permanently refuse as "pre-v2".
-    Qh.stampHashVersion(batch.sparkSession, s"$indexDir/bands")
-    Qh.stampHashVersion(batch.sparkSession, s"$indexDir/sigs")
-    bandExplode(withSig, "mhs", Seq("doc_id", "source"))
-      .withColumn("kb", kbOf(col("bkey")))
-      .select("bkey", "doc_id", "source", "band", "kb")
-      .repartition(col("band"), col("kb")) // one file set per target dir (see mergeAndIndex)
-      .write.partitionBy("band", "kb")
-      .mode("overwrite").parquet(s"$indexDir/bands/batch=$batchId")
-    withSig.select("doc_id", "tk")
-      .write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$batchId")
-    withSig.unpersist()
-  }
+      batchId: Long): Unit =
+    await(writeIndex(signBatch(batch), indexDir, batchId,
+      batch.sparkSession.sessionState.conf.numShufflePartitions))
 
   /** Merge an ARRIVING batch into a materialized (doc_id, cluster) table
     * ([[writeClusters]] output) without re-clustering the corpus — the
@@ -2303,8 +2346,9 @@ object Dedup {
     * RETAINS near-duplicates and tracks their clusters across ingest
     * cycles.
     *
-    * Candidates come from the persistent band index (partition-pruned
-    * probe, same as [[incrementalNearDup]]); verified edges are Jaccard >=
+    * Candidates come from the persistent band index ([[probeIndex]], the
+    * dynamically partition-pruned probe [[incrementalNearDup]] shares,
+    * scoped by `source`); verified edges are Jaccard >=
     * `threshold` on the token-hash sets. The closure update runs on the
     * AFFECTED MICRO-GRAPH only: old edge endpoints collapse to their
     * CLUSTER LABEL (valid because a label is the min doc_id of its
@@ -2335,15 +2379,15 @@ object Dedup {
     * delivery) collapse to one row before the anti-join for the same
     * reason.
     *
-    * BOUNDED-BATCH CONTRACT (r12): `batch` must be micro-batch-sized —
-    * the arriving slice of a throttled stream (maxFilesPerTrigger /
-    * maxOffsetsPerTrigger are the backpressure knobs), never the corpus.
-    * The stored-index probe BROADCASTS the batch's banded/signature
-    * frames (that is what lets dynamic partition pruning prune the index
-    * scan instead of a per-batch driver collect), so an unbounded batch
-    * fails LOUDLY at Spark's broadcast size limit rather than silently
-    * degrading — corpus-scale (re)clustering is [[clusterDocs]]' job,
-    * not this one's.
+    * BOUNDED-BATCH CONTRACT (r12), shared with [[incrementalNearDup]]:
+    * `batch` must be micro-batch-sized — the arriving slice of a
+    * throttled stream, never the corpus. The stored-index probe
+    * BROADCASTS the batch's banded/signature frames (that is what lets
+    * dynamic partition pruning prune the index scan instead of a
+    * per-batch driver collect), so an unbounded batch fails LOUDLY at
+    * Spark's broadcast size limit rather than silently degrading —
+    * corpus-scale (re)clustering is [[clusterDocs]]' job, not this
+    * one's.
     *
     * Returns the updated (doc_id, cluster) table. */
   def mergeClusters(clusters: org.apache.spark.sql.DataFrame,
@@ -2402,15 +2446,9 @@ object Dedup {
       checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
     val (out, idxF) = mergeAndIndexStaged(clusters, batch, indexDir, batchId,
       threshold, checkpointDir)
-    scala.concurrent.Await.result(idxF, scala.concurrent.duration.Duration.Inf)
+    await(idxF)
     out
   }
-
-  /** Task count for the per-batch bands-index write. The FILE count (one
-    * per touched (band, kb) dir) is the same at any task count, and a
-    * micro-batch increment is small by definition, so
-    * shuffle.partitions-many writer tasks would be pure overhead. */
-  private val BandWriteTasks = 4
 
   /** STAGED form of [[mergeAndIndex]] for per-batch action overlap
     * (graft.streaming.Streaming.clusterBatch): the returned future is
@@ -2445,67 +2483,18 @@ object Dedup {
     checkpointDir.foreach(d => Qh.setReliableCheckpointDir(spark, d))
     val mat: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       if (checkpointDir.isDefined) _.checkpoint() else _.localCheckpoint(true)
-    val storedBands = readIndexTable(spark, s"$indexDir/bands",
-      "band INT, bkey STRING, doc_id BIGINT, source STRING, kb INT",
-      excludeBatch = indexWriteBatch)
-    val storedSigs = readIndexTable(spark, s"$indexDir/sigs",
-      "doc_id BIGINT, tk ARRAY<BIGINT>", excludeBatch = indexWriteBatch)
     // At-least-once delivery can duplicate a doc_id WITHIN one batch;
     // collapse before the anti-join or both copies pass as "fresh" and
     // the output table gains duplicate rows.
-    val srcCol = if (batch.columns.contains("source")) col("source") else lit("")
-    val fresh = batch.select(col("doc_id"), srcCol.as("source"), col("text"))
+    val fresh = batch.select(col("doc_id"), sourceOf(batch), col("text"))
       .dropDuplicates("doc_id")
       .join(clusters.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    val withSig = fresh.select(col("doc_id"), col("source"), tokHashes(col("text")).as("tk"))
-      .withColumn("mhs", minhashSig(col("tk")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = bandExplode(withSig, "mhs", Seq("doc_id", "source"))
-      .withColumn("kb", kbOf(col("bkey")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newSigs = withSig.select(col("doc_id"), col("tk"))
+    val signed = signBatch(fresh)
+    val (banded, newSigs) = (signed.banded, signed.tk)
     // Edges scope by source on BOTH probes — the closure must match what
     // clusterDocs would compute on the union corpus, and clusterDocs only
-    // pairs docs within one source. First batch (no index on disk yet):
-    // the stored side is definitionally empty — skip the probe chain
-    // rather than running five jobs against an empty frame.
-    //
-    // Index-partition pruning here is DYNAMIC, not the static collected
-    // (band, kb) IN-list incrementalNearDup uses (r12): kb = kbOf(bkey)
-    // is a data column on the batch side and a partition column on the
-    // stored side, so adding it to the equi-join keys is a no-op for the
-    // join RESULT but lets Spark's dynamic partition pruning derive the
-    // stored scan's partition filter from the broadcast batch side — the
-    // same ≤ Bands×KbBuckets partition set the static prune read, minus
-    // one serial driver collect per micro-batch (the r12 lane profile
-    // charged ~0.4 s/batch to that collect's execution + planning gap).
-    // MergeDppSpec pins that the pruning subquery is actually present in
-    // the probe's executed plan, so a planner change cannot silently
-    // degrade this to a full index scan at 100 TB.
-    val haveIndex = graft.sources.Sources.fsExists(spark, s"$indexDir/bands")
-    val edgesOld =
-      if (!haveIndex)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, old_id BIGINT"))
-      else storedBands
-        .select(col("band"), col("kb"), col("bkey"), col("source"), col("doc_id").as("old_id"))
-        .join(broadcast(banded.select("band", "kb", "bkey", "source", "doc_id")
-          // the band-domain bound is a tautology (bands are 0..Bands-1 by
-          // construction) kept for the OPTIMIZER: Spark's PartitionPruning
-          // rule only derives a dynamic partition filter from a build side
-          // that carries a likely-selective predicate, and an unfiltered
-          // broadcast — however small — does not qualify
-          .filter(col("band").between(0, Bands - 1))),
-          Seq("band", "kb", "bkey", "source"))
-        .select("doc_id", "old_id").distinct()
-        // the batch's signature table is micro-batch-bounded (same
-        // posture as broadcasting `banded` above), so the verify joins
-        // broadcast it instead of shuffling — the stored side stays a
-        // shuffle join, it is index-sized
-        .join(broadcast(newSigs), Seq("doc_id"))
-        .join(storedSigs.select(col("doc_id").as("old_id"), col("tk").as("tko")), Seq("old_id"))
-        .filter(jaccard(col("tk"), col("tko")) >= threshold)
-        .select(col("doc_id"), col("old_id"))
+    // pairs docs within one source.
+    val edgesOld = probeIndex(signed, indexDir, Seq("source"), threshold, indexWriteBatch)
     val edgesNew = banded.select(col("band"), col("bkey"), col("source"), col("doc_id").as("a"))
       .join(banded.select(col("band"), col("bkey"), col("source"), col("doc_id").as("b")),
         Seq("band", "bkey", "source"))
@@ -2534,47 +2523,17 @@ object Dedup {
     val out = updatedOld.union(newRows)
     // Fused index write (mergeAndIndex): reuse the cached signature and
     // band frames the merge just built instead of recomputing them in a
-    // separate indexBatch pass — and run the two independent writes as
-    // CONCURRENT jobs off the now-hot caches (r12 lane profile: the
-    // bands write alone was the largest serial merge slice). Launching
-    // them AFTER the edge collect is deliberate: launched before it,
-    // the writes race the collect to materialize the caches and the
-    // duplicated signature computation costs more than the overlap
-    // saves (measured). The caller still overlaps its own dependent
-    // work (the snapshot write) until awaiting the returned future.
-    implicit val ec: scala.concurrent.ExecutionContext = Qh.ioEc
-    val idxF: scala.concurrent.Future[Unit] = indexWriteBatch match {
-      case None => scala.concurrent.Future.unit
-      case Some(bid) =>
-        // Cluster rows onto their (band, kb) target dirs BEFORE the
-        // dynamic-partition write: from P input partitions the writer
-        // opens up to P x 64 files and sorts every task by the partition
-        // key; repartitioned, each task owns whole directories — ~30x
-        // fewer files per micro-batch, faster commit, and cheaper listing
-        // for every later probe of this index (the r10 lane profile had
-        // this write as the largest merge slice). One extra shuffle of a
-        // 5-rows-per-doc frame — negligible at any scale.
-        val fBands = scala.concurrent.Future {
-          // stamp BEFORE the write — see indexBatch for the crash-window argument
-          Qh.stampHashVersion(spark, s"$indexDir/bands")
-          banded.select("bkey", "doc_id", "source", "band", "kb")
-            .repartition(BandWriteTasks, col("band"), col("kb"))
-            .write.partitionBy("band", "kb")
-            .mode("overwrite").parquet(s"$indexDir/bands/batch=$bid")
-        }
-        val fSigs = scala.concurrent.Future {
-          Qh.stampHashVersion(spark, s"$indexDir/sigs")
-          newSigs.coalesce(math.min(8, spark.sparkContext.defaultParallelism))
-            .write.mode("overwrite").parquet(s"$indexDir/sigs/batch=$bid")
-        }
-        Qh.afterBoth(fBands, fSigs) // NOT zip: zip fails fast, orphaning the partner write
-    }
-    // the caches only feed the index writes at this point (the merge
-    // output's lineage re-reads the batch, not the cached frames) —
-    // release them once the writes land, success or failure
-    idxF.andThen { case _ =>
-      banded.unpersist(blocking = false)
-      withSig.unpersist(blocking = false)
+    // separate indexBatch pass. Launching the writes AFTER the edge
+    // collect is deliberate: launched before it, the writes race the
+    // collect to materialize the caches and the duplicated signature
+    // computation costs more than the overlap saves (measured). The
+    // caller still overlaps its own dependent work (the snapshot write)
+    // until awaiting the returned future. Without a write the caches are
+    // released now: the merge output's lineage re-reads the batch, not
+    // the cached frames.
+    val idxF = indexWriteBatch match {
+      case Some(bid) => writeIndex(signed, indexDir, bid, BandWriteTasks)
+      case None => signed.release(); scala.concurrent.Future.unit
     }
     (out, idxF)
   }

@@ -59,21 +59,28 @@ object Layout {
   val PruneHi = 199603
 
   // Per-process root for layout tables (mirrors Dedup.clustersRoot):
-  // removed on JVM exit, memo keyed by (corpus dir, layout name).
+  // removed on JVM exit, memo keyed by (corpus dir, layout kind, name).
   private val written = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val layoutRoot = {
-    val root = java.nio.file.Files.createTempDirectory("graft-layout-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val ch = f.listFiles(); if (ch != null) ch.foreach(rm); f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
-    root.toString
-  }
+  private lazy val layoutRoot = processTempRoot("graft-layout-")
 
-  /** Catalog-safe suffix for a corpus dir (identifiers allow [a-z0-9_]). */
-  private def dirKey(dir: String): String = (dir.hashCode & 0x7fffffff).toString
+  /** Table names carry a process-unique counter, NOT a hash of the corpus
+    * dir: 32-bit String.hashCode collides trivially ("Aa"/"BB"), and two
+    * corpora sharing one table would each read whichever wrote last (the
+    * [[Dedup.clustersTable]] rationale). */
+  private val layoutSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The catalog-safe name (identifiers allow [a-z0-9_]) of layout
+    * `kind`/`name` of `dir`; the first call per key writes it. */
+  private def memo(dir: String, kind: String, name: String)(write: String => Unit): String =
+    written.computeIfAbsent(s"$dir#$kind#$name", { _ =>
+      val id = s"graft_${kind}_${name}_${layoutSeq.getAndIncrement()}"
+      write(id)
+      id
+    })
+
+  /** [[memo]] for a layout written to a path under the temp root. */
+  private def pathMemo(dir: String, kind: String, name: String)(write: String => Unit): String =
+    s"$layoutRoot/" + memo(dir, kind, name)(id => write(s"$layoutRoot/$id"))
 
   /** Write `df` as a bucketed, per-bucket-sorted EXTERNAL table (data
     * under the per-process temp root, metadata in the session catalog)
@@ -83,32 +90,25 @@ object Layout {
     * process lifetime (the [[Dedup.clustersTable]] contract). */
   def bucketedTable(spark: SparkSession, dir: String, name: String,
       df: => DataFrame, bucketCol: String, n: Int = LayoutBuckets): DataFrame = {
-    val table = s"graft_bkt_${name}_${dirKey(dir)}"
-    written.computeIfAbsent(s"$dir#$table", { _ =>
+    spark.table(memo(dir, "bkt", name) { table =>
       df.repartition(n, col(bucketCol))
         .write.format("parquet")
         .bucketBy(n, bucketCol).sortBy(bucketCol)
         .option("path", s"$layoutRoot/$table")
         .mode(SaveMode.Overwrite)
         .saveAsTable(table)
-      table
     })
-    spark.table(table)
   }
 
   /** Write `df` hive-partitioned by integer column `partCol` (one
     * subdirectory per value, one file per directory via the pre-write
     * repartition) and return the path. Memoized like [[bucketedTable]]. */
   def partitionedLayout(dir: String, name: String, df: => DataFrame,
-      partCol: String): String = {
-    val path = s"$layoutRoot/graft_part_${name}_${dirKey(dir)}"
-    written.computeIfAbsent(s"$dir#$path", { _ =>
+      partCol: String): String =
+    pathMemo(dir, "part", name) { path =>
       df.repartition(col(partCol))
         .write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(path)
-      path
-    })
-    path
-  }
+    }
 
   /** Z-order (Morton) interleave of two 8-bit dimensions: bit i of x
     * lands at z-bit 2i, bit i of y at 2i+1. Sorting by z gives runs that
@@ -137,31 +137,21 @@ object Layout {
     * return the path. The consumer-side payoff (file-level min/max
     * skipping on EITHER dimension) is asserted in OperatorSpec. */
   def zorderLayout(dir: String, name: String, df: => DataFrame,
-      xCol: String, yCol: String, files: Int = LayoutBuckets): String = {
-    val path = s"$layoutRoot/graft_z_${name}_${dirKey(dir)}"
-    written.computeIfAbsent(s"$dir#$path", { _ =>
+      xCol: String, yCol: String, files: Int = LayoutBuckets): String =
+    pathMemo(dir, "z", name) { path =>
       df.withColumn("__z", zCol(xCol, yCol))
         .repartitionByRange(files, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode(SaveMode.Overwrite).parquet(path)
-      path
-    })
-    path
-  }
+    }
 
   /** Write `df` deliberately FRAGMENTED (`files` small files) — the
     * "streaming ingest left a mess" fixture compaction cleans up.
     * Memoized like [[bucketedTable]]. */
   def fragmentedLayout(dir: String, name: String, df: => DataFrame,
-      files: Int): String = {
-    val path = s"$layoutRoot/graft_frag_${name}_${dirKey(dir)}"
-    written.computeIfAbsent(s"$dir#$path", { _ =>
-      df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path)
-      path
-    })
-    path
-  }
+      files: Int): String =
+    pathMemo(dir, "frag", name)(df.repartition(files).write.mode(SaveMode.Overwrite).parquet(_))
 
   /** Small-file compaction: rewrite a fragmented layout as
     * ⌈rows / targetRows⌉ range-partitioned files CLUSTERED on `keyCol`

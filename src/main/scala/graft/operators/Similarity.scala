@@ -449,16 +449,7 @@ object Similarity {
     * pipeline that regenerates a corpus dir in-process must call
     * [[invalidateIvfPqMemo]] first. */
   private val ivfPqWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val ivfPqRoot = {
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfpq-")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val ch = f.listFiles(); if (ch != null) ch.foreach(rm); f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
-    root.toString
-  }
+  private lazy val ivfPqRoot = Qh.processTempRoot("graft-ivfpq-")
 
   /** Drop the memoized IVFPQ index for `dir` (or all dirs). */
   def invalidateIvfPqMemo(dir: String = null): Unit =

@@ -336,7 +336,8 @@ object TextOps {
         // bitset (two bounded Spark jobs) per invocation would dominate
         // the query at small scale and is pure waste at any scale. The
         // same cluster-once shape as Dedup.clustersTable.
-        val bloom = bloomMemo.computeIfAbsent((d, cap), _ => Bloom.build(bench, "g", maxKeys = cap))
+        val bloom = bloomMemo.computeIfAbsent((d, cap),
+          _ => Bloom.build(bench, "g", maxKeys = cap, boundKey = Qh.MaxEvalShingles.key))
         val corpus = docs.filter(col("doc_id") % 97 =!= 0)
           .select(col("doc_id"), explode(col("sh")).as("g"))
           .filter(Bloom.mightContain(col("g"), bloom))

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.schema.Models
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming surface SQ1–SQ10 (SURVEY.md §2.2) + SQ11 stream-stream interval join.
@@ -1000,11 +1000,6 @@ object Streaming {
     driftStatus(spark, histDir, refDir)
       .agg((sum(col("abs_diff_ppm")) / 2).cast("long").as("tv_ppm"))
       .withColumn("alarm", col("tv_ppm") > alarmPpm)
-
-  /** Start a memory-sink query (testing aid; complete/update modes). */
-  def startMemorySink(df: DataFrame, name: String, mode: String): StreamingQuery =
-    df.writeStream.format("memory").queryName(name).outputMode(mode)
-      .trigger(Trigger.AvailableNow()).start()
 
   /** Streaming order-2 path mining — q112's stateful stream twin: per
     * user, the state is the LAST TWO events (ts, event_id, type), and

@@ -72,6 +72,19 @@ class KnobSurfaceSpec extends SparkSpec {
     assert(msg.contains("not an integer"), msg)
   }
 
+  test("bloom.maxEvalShingles=1: text_decontam_bloom's bound fails naming its key") {
+    // the bound is checked against the eval set's distinct-shingle count,
+    // so unlike the range checks above it fails after that count job
+    val key = "spark.graft.bloom.maxEvalShingles"
+    spark.conf.set(key, "1")
+    try {
+      val ex = intercept[IllegalArgumentException] {
+        SparkEntry.queries("text_decontam_bloom")(spark, Sf0001)
+      }
+      assert(ex.getMessage.contains(s"$key=1"), ex.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   test("dedup.bucketSlices=0 fails naming its key before any job runs") {
     // a local frame: reading a parquet table is itself a (schema) job,
     // so the verifier every LSH dedup query shares is called directly

@@ -144,20 +144,26 @@ class StreamingSpec extends SparkSpec {
       .foreach(f => Files.move(f.toPath, new java.io.File(src, "b1.json").toPath))
     val schema = Seq.empty[Ev].toDS().schema
     def run(): Unit = {
-      val q = Streaming.jsonFileSource(spark, src, schema)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
+      val q = Streaming.parquetSink(Streaming.jsonFileSource(spark, src, schema), out, ckpt,
+        Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
+    val t0 = System.currentTimeMillis()
     run() // processes batch 1, then "dies" (query stops)
     // batch 2 arrives while down; restart from checkpoint
     writeBatch(2, events.drop(3))
     new java.io.File(s"$dir/stage2").listFiles().filter(_.getName.endsWith(".json"))
       .foreach(f => Files.move(f.toPath, new java.io.File(src, "b2.json").toPath))
     run() // resume
+    val t1 = System.currentTimeMillis()
     val ids = spark.read.parquet(out).select("event_id").as[Long].collect().sorted.toSeq
     assert(ids == events.map(_.event_id).sorted.toSeq, "each event exactly once across restart")
+    // the sink stamps a 24 h TTL from processing time on every row
+    val day = 24L * 3600 * 1000
+    val expires = spark.read.parquet(out).select("expires_at").as[java.sql.Timestamp]
+      .collect().map(_.getTime)
+    assert(expires.forall(e => e >= t0 + day - 1000 && e <= t1 + day + 1000),
+      s"expires_at outside [start, end] + 24 h: ${expires.toSeq}")
   }
 
   test("K3/K4 foreachBatchSink: writer runs per-partition on executors, every row once, chunks capped") {

@@ -36,6 +36,20 @@ def _median(xs):
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2.0
 
 
+def bench_line(text):
+    """The graft.Bench JSON line that carries "queries" in `text`.
+
+    Bench prints that line first and a totals-only line last, so neither
+    "the last line" nor every line with "metric" parses as one run; any
+    prefix before the JSON (sbt's "[info] ") is skipped.
+    """
+    for line in reversed(text.strip().splitlines()):
+        i = line.find("{")
+        if i >= 0 and '"queries"' in line:
+            return json.loads(line[i:])
+    raise ValueError('no graft.Bench line carrying "queries" in the input')
+
+
 def diff(base, run, threshold):
     """Pure comparison core (unit-tested by tools/test_diff_baseline.py).
 
@@ -99,8 +113,8 @@ def main() -> int:
         del args[i:i + 2]
     baseline_path = args[0] if args else "BASELINE_QUERIES.json"
     base = json.load(open(baseline_path))
-    run = json.loads(sys.stdin.read().strip().splitlines()[-1])
     try:
+        run = bench_line(sys.stdin.read())
         r = diff(base, run, threshold)
     except ValueError as e:
         print(f"FATAL: {e}")

@@ -65,7 +65,9 @@ if [ "$#" -gt 0 ]; then
     | grep '"metric"' | sed 's/^\[info\] //' | tee /tmp/judge_gate_bench.json \
     | python3 -c '
 import json, sys
-d = json.loads(sys.stdin.read())
+sys.path.insert(0, "tools")
+from diff_baseline import bench_line
+d = bench_line(sys.stdin.read())  # Bench prints the queries line, then a totals line
 failed = d.get("failed", [])
 if isinstance(failed, str):
     failed = json.loads(failed)

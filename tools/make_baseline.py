@@ -15,10 +15,11 @@ normalizer — compare query_secs/anchor_secs ratios, never raw seconds
 import json
 import sys
 
+from diff_baseline import bench_line
+
 def main():
     tag = sys.argv[1] if len(sys.argv) > 1 else "unspecified"
-    raw = sys.stdin.read().strip().splitlines()
-    bench = json.loads(raw[-1])  # last line = the JSON (skip any log noise)
+    bench = bench_line(sys.stdin.read())
     queries = bench["queries"]
     anchor = queries.get("q28a_jaccard_pairs")
     out = {

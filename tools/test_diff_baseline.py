@@ -16,10 +16,15 @@ both the anchor and the median normalization.
 
 Case 3: a failed query in the run forces exit-worthy output even with
 zero regressions.
+
+Case 5: of Bench's two output lines (per-query, then totals-only last),
+the parser picks the one carrying "queries", past an sbt "[info] "
+prefix, and refuses input that has none.
 """
+import json
 import sys
 
-from diff_baseline import diff
+from diff_baseline import bench_line, diff
 
 
 def _mk(names, base_secs, run_factor):
@@ -83,7 +88,21 @@ def main() -> int:
     base, run = _mk(names, secs, 1.40)
     assert not diff(base, run, threshold=1.5)["broad_regression"]
 
-    print("test_diff_baseline: 4/4 cases pass")
+    # Case 5: Bench's capture — the queries line, then the totals line
+    # last; both carry "metric", so a grep for it passes both through.
+    full = {"metric": "total", "value": 3.5, "queries": {"q28a": 2.7},
+            "runs": {"q28a": [2.7, 2.8, 2.9]}, "failed": [], "sf": "sf0.1"}
+    totals = {"metric": "total", "value": 3.5, "anchor_ratio": 0.9,
+              "failed": 0, "sf": "sf0.1", "cpus": 4}
+    capture = "[info] " + json.dumps(full) + "\n" + json.dumps(totals) + "\n"
+    assert bench_line(capture) == full, bench_line(capture)
+    try:
+        bench_line(json.dumps(totals))
+        raise AssertionError("a totals-only capture must not parse as a run")
+    except ValueError:
+        pass
+
+    print("test_diff_baseline: 5/5 cases pass")
     return 0
 
 
