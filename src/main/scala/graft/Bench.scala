@@ -1,8 +1,8 @@
 package graft
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints two JSON lines — the per-query line (also written to
-  * bench_out.json), then a totals-only line last. Queries execute against the
+  * prints two JSON lines — the per-query line (a full run also writes it
+  * to bench_out.json), then a totals-only line last. Queries execute against the
   * `noop` sink — a plain count() would let Catalyst prune projections and
   * sorts and under-measure. */
 object Bench {
@@ -91,7 +91,9 @@ object Bench {
     // line carrying "queries".
     val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$runsJson,"failed":$failed${fields(drift)},"sf":"$sfDir"}"""
     println(fullJson)
-    util.Try(java.nio.file.Files.writeString(
+    // bench_out.json is the whole-run record: a subset run must not
+    // replace it with its few queries
+    if (only.isEmpty) util.Try(java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_out.json"), fullJson + "\n"))
     val nFailed = results.count(!_._3)
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +

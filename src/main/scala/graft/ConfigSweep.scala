@@ -194,13 +194,7 @@ object ConfigSweep {
       java.nio.file.Files.readString(shufMarker.toPath) == srcFingerprint
     if (!markerFresh) {
       System.err.println(s"[sweep] materializing shuffled layout at $shuffledDir")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath)) {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm)
-        }
-        f.delete()
-      }
-      rm(new java.io.File(shuffledDir))
+      Qh.deleteTree(new java.io.File(shuffledDir))
       Tables.names.foreach { t =>
         val df = spark.read.parquet(s"$sfDir/$t.parquet")
         val allCols = df.columns.toIndexedSeq.map(c => df.col(s"`$c`"))

@@ -279,13 +279,20 @@ object Qh {
     * tables never outlive the process that wrote them. */
   def processTempRoot(prefix: String): String = {
     val root = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val ch = f.listFiles(); if (ch != null) ch.foreach(rm); f.delete(): Unit
-      }
-      rm(root.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(root.toFile)))
     root.toString
+  }
+
+  /** Delete `f` and everything under it. A symlink is deleted as a link,
+    * never followed into its target directory; an unlistable directory
+    * (`listFiles` → null) is skipped, and its own delete then fails
+    * quietly. */
+  def deleteTree(f: java.io.File): Unit = {
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath)) {
+      val children = f.listFiles()
+      if (children != null) children.foreach(deleteTree)
+    }
+    f.delete(): Unit
   }
 
   /** Exact integer cents of a 2-decimal money column. */
@@ -577,4 +584,99 @@ object Qh {
         .drop(s"__lo_$name", s"__hi_$name")
     }
   }
+
+  /** The unordered pair grid over a small per-item relation `df` (one
+    * row per `item`: per-type sizes, per-source totals, co-moments): every
+    * pair a < b once, with `item` renamed `<out>_a` / `<out>_b` and every
+    * other column `c` renamed `c_a` / `c_b`. The b side is broadcast, so
+    * the ≤ |items|² grid never shuffles; building it from the item
+    * relation, not from observed pairs, is what lets callers surface
+    * pairs with nothing in common as explicit rows. */
+  def pairGrid(df: DataFrame, item: String, out: String): DataFrame = {
+    def side(s: String) = df.select(df.columns.toIndexedSeq.map(c =>
+      col(c).as(if (c == item) s"${out}_$s" else s"${c}_$s")): _*)
+    side("a").crossJoin(broadcast(side("b")))
+      .filter(col(s"${out}_a") < col(s"${out}_b"))
+  }
+
+  /** Set overlap between every pair of items over a deduped presence
+    * relation `pres` (`key`, `item`): `(<out>_a, <out>_b, n_a, n_b,
+    * n_both)` with n = |set| and n_both = |A ∩ B|. The intersection is a
+    * `key`-keyed self-join (≤ |items|² pairs per key) and a bounded pair
+    * aggregate; it is left-joined onto the full [[pairGrid]] of sizes with
+    * 0 filled in, so disjoint pairs surface as explicit 0 rows — an inner
+    * join would silently drop them. `inter` is bounded by the grid, so it
+    * is broadcast (the checkpointed lineage hides that bound from
+    * Catalyst). [[pairOverlapSql]] is the DuckDB mirror. */
+  def pairOverlap(pres: DataFrame, key: String, item: String, out: String): DataFrame = {
+    val (a, b) = (s"${out}_a", s"${out}_b")
+    // both grid sides read sizes: materialise the |items|-row rollup once
+    val sizes = pres.groupBy(item).agg(count(lit(1)).as("n")).localCheckpoint()
+    val inter = pres.join(pres.select(col(item).as(b), col(key)), Seq(key))
+      .filter(col(item) < col(b))
+      .groupBy(col(item).as(a), col(b))
+      .agg(count(lit(1)).as("n_both"))
+    pairGrid(sizes, item, out)
+      .join(broadcast(inter), Seq(a, b), "left")
+      .withColumn("n_both", coalesce(col("n_both"), lit(0L)))
+  }
+
+  /** The oracle's `sizes`, `inter` and `grid` CTEs over a `pres` CTE
+    * (`key`, `item`): `grid` holds [[pairOverlap]]'s rows, written as
+    * the sizes cross join LEFT JOIN the key-keyed self-join. */
+  def pairOverlapSql(key: String, item: String, out: String): String =
+    s"""sizes AS (SELECT $item, CAST(count(*) AS BIGINT) AS n FROM pres GROUP BY 1),
+       |inter AS (SELECT a.$item AS ${out}_a, b.$item AS ${out}_b,
+       |    CAST(count(*) AS BIGINT) AS n_both
+       |  FROM pres a JOIN pres b ON b.$key = a.$key AND a.$item < b.$item
+       |  GROUP BY 1, 2),
+       |grid AS (SELECT sa.$item AS ${out}_a, sb.$item AS ${out}_b,
+       |    sa.n AS n_a, sb.n AS n_b, CAST(coalesce(n_both, 0) AS BIGINT) AS n_both
+       |  FROM sizes sa CROSS JOIN sizes sb
+       |  LEFT JOIN inter ON ${out}_a = sa.$item AND ${out}_b = sb.$item
+       |  WHERE sa.$item < sb.$item)""".stripMargin
+
+  /** Two item distributions aligned on a shared value axis, for every
+    * pair: from a counted rollup `r` (`item`, `value`, `n`) returns
+    * `(pairs, aligned)` — `pairs` is the [[pairGrid]] of per-item totals
+    * (`<out>_a`, `t_a`, `<out>_b`, `t_b`), and `aligned` holds one row
+    * `(<out>_a, <out>_b, value, n_a, n_b)` per pair and value either side
+    * has, the absent side reading 0.
+    *
+    * `aligned` is ONE aggregate: each side's rows are tagged with a 0
+    * for the other side and summed per (pair, value), a single partially
+    * aggregated exchange. Materialising the distinct (pair, value) key
+    * set and LEFT-joining each side's counts back gives the same rows for
+    * one more aggregate and two more joins against `r`. [[alignedPairsSql]]
+    * keeps that formulation as the oracle. */
+  def alignedPairs(r: DataFrame, item: String, value: String,
+      out: String): (DataFrame, DataFrame) = {
+    val (a, b) = (s"${out}_a", s"${out}_b")
+    val pairs = pairGrid(r.groupBy(item).agg(sum(col("n")).as("t")), item, out)
+    val pk = pairs.select(a, b)
+    def side(s: String, na: Column, nb: Column) =
+      pk.join(r.select(col(item).as(s), col(value), col("n")), Seq(s))
+        .select(col(a), col(b), col(value), na.as("n_a"), nb.as("n_b"))
+    val aligned = side(a, col("n"), lit(0L)).union(side(b, lit(0L), col("n")))
+      .groupBy(a, b, value)
+      .agg(sum(col("n_a")).as("n_a"), sum(col("n_b")).as("n_b"))
+    (pairs, aligned)
+  }
+
+  /** The oracle's `sizes`, `pairs`, `pv` and `g` CTEs over an `r` CTE
+    * (`item`, `value`, `n`): `pairs` and `g` hold [[alignedPairs]]'
+    * two frames, written as the distinct (pair, value) set `pv` plus
+    * one LEFT JOIN per side. */
+  def alignedPairsSql(item: String, value: String, out: String): String =
+    s"""sizes AS (SELECT $item, CAST(sum(n) AS BIGINT) AS t FROM r GROUP BY 1),
+       |pairs AS (SELECT a.$item AS ${out}_a, b.$item AS ${out}_b,
+       |    a.t AS t_a, b.t AS t_b
+       |  FROM sizes a CROSS JOIN sizes b WHERE a.$item < b.$item),
+       |pv AS (SELECT DISTINCT p.${out}_a, p.${out}_b, r.$value
+       |  FROM pairs p JOIN r ON r.$item = p.${out}_a OR r.$item = p.${out}_b),
+       |g AS (SELECT pv.${out}_a, pv.${out}_b, pv.$value,
+       |    CAST(coalesce(ra.n, 0) AS BIGINT) AS n_a,
+       |    CAST(coalesce(rb.n, 0) AS BIGINT) AS n_b
+       |  FROM pv LEFT JOIN r ra ON ra.$item = pv.${out}_a AND ra.$value = pv.$value
+       |          LEFT JOIN r rb ON rb.$item = pv.${out}_b AND rb.$value = pv.$value)""".stripMargin
 }

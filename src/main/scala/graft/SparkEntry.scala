@@ -29,9 +29,7 @@ object SparkEntry {
     val d = "/root/testdata/sf0.001"
     val docs = Tables(spark, d, "documents")
     val score = LexiconScorer.scoreCol(col("text"))
-    docs
-      .withColumn("branch",
-        when(length(col("text")) > 1024, "summary").otherwise("direct"))
+    graft.streaming.Streaming.routeByLength(docs)
       .withColumn("label", LexiconScorer.labelCol(score))
       .groupBy("source", "branch", "label")
       .agg(count(lit(1)).as("n"),

@@ -13,18 +13,7 @@ object Verify {
     // Clear stale results first: a query that THROWS this run must not be
     // silently graded against a previous run's surviving parquet.
     val root = new java.io.File(outDir)
-    if (root.exists() && only.isEmpty) {
-      def rm(f: java.io.File): Unit = {
-        // don't follow symlinks (delete the link itself), tolerate
-        // unlistable dirs (listFiles → null)
-        if (f.isDirectory && !Files.isSymbolicLink(f.toPath)) {
-          val children = f.listFiles()
-          if (children != null) children.foreach(rm)
-        }
-        f.delete()
-      }
-      rm(root)
-    }
+    if (root.exists() && only.isEmpty) Qh.deleteTree(root)
     root.mkdirs()
     var failed = 0
     val selected = SparkEntry.queries.filter {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Qh}
+import graft.schema.Models.SummaryThreshold
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,19 +41,19 @@ object Relational {
              |FROM lineitem WHERE l_quantity > 30 AND l_shipdate < TIMESTAMP '1996-07-01 00:00:00'
              |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
 
-    // Q3 — length-threshold routing counts; strict > 1024 mirrors the
-    // reference router (internal/consumers/raw_content_consumer.go:14,55).
+    // Q3 — length-threshold routing counts; strict > SummaryThreshold
+    // mirrors the reference router (internal/consumers/raw_content_consumer.go:14,55).
     "q03_length_route" -> QueryDef(
       (s, d) => tbl(s, d, "documents")
         .groupBy("source")
         .agg(
-          sum(when(length(col("text")) > 1024, 1L).otherwise(0L)).as("long_docs"),
-          sum(when(length(col("text")) <= 1024, 1L).otherwise(0L)).as("short_docs"),
+          sum(when(length(col("text")) > SummaryThreshold, 1L).otherwise(0L)).as("long_docs"),
+          sum(when(length(col("text")) <= SummaryThreshold, 1L).otherwise(0L)).as("short_docs"),
           count(lit(1)).as("n"))
         .orderBy("source"),
-      Some("""SELECT source,
-             |  CAST(SUM(CASE WHEN length(text) > 1024 THEN 1 ELSE 0 END) AS BIGINT) AS long_docs,
-             |  CAST(SUM(CASE WHEN length(text) <= 1024 THEN 1 ELSE 0 END) AS BIGINT) AS short_docs,
+      Some(s"""SELECT source,
+             |  CAST(SUM(CASE WHEN length(text) > $SummaryThreshold THEN 1 ELSE 0 END) AS BIGINT) AS long_docs,
+             |  CAST(SUM(CASE WHEN length(text) <= $SummaryThreshold THEN 1 ELSE 0 END) AS BIGINT) AS short_docs,
              |  CAST(COUNT(*) AS BIGINT) AS n
              |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
 
@@ -1640,26 +1641,7 @@ object Relational {
         // aggregates — one rollup pass serves both (was a second full
         // countDistinct job over pres).
         val nOrders = Qh.requireBoundedBaskets(s, pres, "l_orderkey", "q102_basket_lift")
-        // sizes is re-read by BOTH grid sides (n_a / n_b): materialize the
-        // |brands|-row rollup once instead of re-aggregating pres per use
-        // (r13 optimization round)
-        val sizes = pres.groupBy("p_brand").agg(count(lit(1)).as("sz"))
-          .localCheckpoint()
-        val inter = pres
-          .join(pres.select(col("p_brand").as("brand_b"), col("l_orderkey")),
-            Seq("l_orderkey"))
-          .filter(col("p_brand") < col("brand_b"))
-          .groupBy(col("p_brand").as("brand_a"), col("brand_b"))
-          .agg(count(lit(1)).as("n_both"))
-        sizes.select(col("p_brand").as("brand_a"), col("sz").as("n_a"))
-          .crossJoin(broadcast(sizes.select(col("p_brand").as("brand_b"),
-            col("sz").as("n_b"))))
-          .filter(col("brand_a") < col("brand_b"))
-          // inter is ≤ |brands|² rows by construction — broadcast it so
-          // the grid join never shuffles (r14; the LogicalRDD lineage
-          // hides that bound from Catalyst)
-          .join(broadcast(inter), Seq("brand_a", "brand_b"), "left")
-          .withColumn("n_both", coalesce(col("n_both"), lit(0L)))
+        Qh.pairOverlap(pres, "l_orderkey", "p_brand", "brand")
           .withColumn("n_orders", lit(nOrders))
           .withColumn("support_ppm", expr("n_both * 1000000 div n_orders"))
           .withColumn("conf_a_b_ppm", expr("n_both * 1000000 div n_a"))
@@ -1671,27 +1653,16 @@ object Relational {
             col("conf_b_a_ppm"), col("lift_milli"))
           .orderBy("brand_a", "brand_b")
       },
-      Some("""WITH pres AS (SELECT DISTINCT l_orderkey, p_brand
+      Some(s"""WITH pres AS (SELECT DISTINCT l_orderkey, p_brand
              |  FROM lineitem JOIN part ON p_partkey = l_partkey),
              |no AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM pres),
-             |sizes AS (SELECT p_brand, CAST(count(*) AS BIGINT) AS sz
-             |  FROM pres GROUP BY 1),
-             |inter AS (SELECT a.p_brand AS brand_a, b.p_brand AS brand_b,
-             |    CAST(count(*) AS BIGINT) AS n_both
-             |  FROM pres a JOIN pres b
-             |    ON b.l_orderkey = a.l_orderkey AND a.p_brand < b.p_brand
-             |  GROUP BY 1, 2)
-             |SELECT sa.p_brand AS brand_a, sb.p_brand AS brand_b,
-             |  sa.sz AS n_a, sb.sz AS n_b,
-             |  CAST(coalesce(n_both, 0) AS BIGINT) AS n_both,
-             |  CAST(divide(coalesce(n_both, 0) * 1000000, n_orders) AS BIGINT) AS support_ppm,
-             |  CAST(divide(coalesce(n_both, 0) * 1000000, sa.sz) AS BIGINT) AS conf_a_b_ppm,
-             |  CAST(divide(coalesce(n_both, 0) * 1000000, sb.sz) AS BIGINT) AS conf_b_a_ppm,
-             |  CAST(divide(coalesce(n_both, 0) * n_orders * 1000, sa.sz * sb.sz) AS BIGINT) AS lift_milli
-             |FROM sizes sa CROSS JOIN sizes sb
-             |LEFT JOIN inter ON brand_a = sa.p_brand AND brand_b = sb.p_brand
-             |CROSS JOIN no
-             |WHERE sa.p_brand < sb.p_brand
+             |${Qh.pairOverlapSql("l_orderkey", "p_brand", "brand")}
+             |SELECT brand_a, brand_b, n_a, n_b, n_both,
+             |  CAST(divide(n_both * 1000000, n_orders) AS BIGINT) AS support_ppm,
+             |  CAST(divide(n_both * 1000000, n_a) AS BIGINT) AS conf_a_b_ppm,
+             |  CAST(divide(n_both * 1000000, n_b) AS BIGINT) AS conf_b_a_ppm,
+             |  CAST(divide(n_both * n_orders * 1000, n_a * n_b) AS BIGINT) AS lift_milli
+             |FROM grid CROSS JOIN no
              |ORDER BY brand_a, brand_b""".stripMargin),
       doc = "market-basket brand affinity: exact support, directional " +
         "confidences, and lift over order baskets — never-co-bought " +

@@ -1873,45 +1873,18 @@ object Temporal {
         val pres = tbl(s, d, "events")
           .select(col("event_type"), col("user_id")).distinct()
           .localCheckpoint() // sizes + both self-join sides
-        val sizes = pres.groupBy("event_type").agg(count(lit(1)).as("sz"))
-        val inter = pres
-          .join(pres.select(col("event_type").as("type_b"), col("user_id")),
-            Seq("user_id"))
-          .filter(col("event_type") < col("type_b"))
-          .groupBy(col("event_type").as("type_a"), col("type_b"))
-          .agg(count(lit(1)).as("n_both"))
-        // the |types|² pair grid is built from the TINY sizes relation so
-        // DISJOINT audiences surface as explicit 0 rows (an inner join
-        // on inter would silently omit them — the worst dashboard bug)
-        sizes.select(col("event_type").as("type_a"), col("sz").as("n_a"))
-          .crossJoin(broadcast(sizes.select(col("event_type").as("type_b"),
-            col("sz").as("n_b"))))
-          .filter(col("type_a") < col("type_b"))
-          .join(inter, Seq("type_a", "type_b"), "left")
-          .withColumn("n_both", coalesce(col("n_both"), lit(0L)))
+        Qh.pairOverlap(pres, "user_id", "event_type", "type")
           .withColumn("jaccard_ppm",
             expr("n_both * 1000000 div (n_a + n_b - n_both)"))
           .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
             col("n_both"), col("jaccard_ppm"))
           .orderBy("type_a", "type_b")
       },
-      Some("""WITH pres AS (SELECT DISTINCT event_type, user_id FROM events),
-             |sizes AS (SELECT event_type, CAST(count(*) AS BIGINT) AS sz
-             |  FROM pres GROUP BY 1),
-             |inter AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-             |    CAST(count(*) AS BIGINT) AS n_both
-             |  FROM pres a JOIN pres b
-             |    ON b.user_id = a.user_id AND a.event_type < b.event_type
-             |  GROUP BY 1, 2)
-             |SELECT sa.event_type AS type_a, sb.event_type AS type_b,
-             |  sa.sz AS n_a, sb.sz AS n_b,
-             |  CAST(coalesce(n_both, 0) AS BIGINT) AS n_both,
-             |  CAST(divide(coalesce(n_both, 0) * 1000000,
-             |    sa.sz + sb.sz - coalesce(n_both, 0)) AS BIGINT) AS jaccard_ppm
-             |FROM sizes sa CROSS JOIN sizes sb
-             |LEFT JOIN inter ON type_a = sa.event_type AND type_b = sb.event_type
-             |WHERE sa.event_type < sb.event_type
-             |ORDER BY type_a, type_b""".stripMargin),
+      Some(s"""WITH pres AS (SELECT DISTINCT event_type, user_id FROM events),
+             |${Qh.pairOverlapSql("user_id", "event_type", "type")}
+             |SELECT type_a, type_b, n_a, n_b, n_both,
+             |  CAST(divide(n_both * 1000000, n_a + n_b - n_both) AS BIGINT) AS jaccard_ppm
+             |FROM grid ORDER BY type_a, type_b""".stripMargin),
       doc = "pairwise audience Jaccard between event types: exact " +
         "integer intersection via user-keyed self-join, union by " +
         "inclusion-exclusion, ppm output"),
@@ -2067,29 +2040,7 @@ object Temporal {
         val (minC, span) =
           if (cb.isNullAt(0)) (0L, 1L) // empty events: result is empty
           else (cb.getLong(0), cb.getLong(1) - cb.getLong(0) + 1L)
-        val sizes = r.groupBy("event_type").agg(sum(col("n")).as("t"))
-        val pairs = sizes.select(col("event_type").as("type_a"), col("t").as("t_a"))
-          .crossJoin(broadcast(sizes.select(col("event_type").as("type_b"),
-            col("t").as("t_b"))))
-          .filter(col("type_a") < col("type_b"))
-        val pk = pairs.select("type_a", "type_b")
-        // Aligned pair grid in ONE aggregate (r13 optimization round):
-        // the former spelling materialized the distinct (pair, c) key set
-        // and LEFT-joined each side's counts back - an extra distinct
-        // exchange plus two grid joins. Tagging each side's rows with a
-        // zero for the other side and summing per (pair, c) produces the
-        // identical aligned rows (absent side = 0) in a single partial-
-        // aggregated exchange.
-        val g = pk
-          .join(r.select(col("event_type").as("type_a"), col("c"), col("n")), Seq("type_a"))
-          .select(col("type_a"), col("type_b"), col("c"),
-            col("n").as("n_a"), lit(0L).as("n_b"))
-          .union(pk
-            .join(r.select(col("event_type").as("type_b"), col("c"), col("n")), Seq("type_b"))
-            .select(col("type_a"), col("type_b"), col("c"),
-              lit(0L).as("n_a"), col("n").as("n_b")))
-          .groupBy("type_a", "type_b", "c")
-          .agg(sum(col("n_a")).as("n_a"), sum(col("n_b")).as("n_b"))
+        val (pairs, g) = Qh.alignedPairs(r, "event_type", "c", "type")
         val w = Window.partitionBy("type_a", "type_b").orderBy("c")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         g.withColumn("ca", sum(col("n_a")).over(w))
@@ -2109,20 +2060,10 @@ object Temporal {
             col("d_ppm"), col("d_at_cents"), col("significant"))
           .orderBy("type_a", "type_b")
       },
-      Some("""WITH r AS (SELECT event_type, CAST(round(value*100) AS BIGINT) AS c,
+      Some(s"""WITH r AS (SELECT event_type, CAST(round(value*100) AS BIGINT) AS c,
              |    CAST(count(*) AS BIGINT) AS n
              |  FROM events GROUP BY 1, 2),
-             |sizes AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS t FROM r GROUP BY 1),
-             |pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-             |    a.t AS t_a, b.t AS t_b
-             |  FROM sizes a CROSS JOIN sizes b WHERE a.event_type < b.event_type),
-             |pv AS (SELECT DISTINCT p.type_a, p.type_b, r.c
-             |  FROM pairs p JOIN r ON r.event_type = p.type_a OR r.event_type = p.type_b),
-             |g AS (SELECT pv.type_a, pv.type_b, pv.c,
-             |    CAST(coalesce(ra.n, 0) AS BIGINT) AS n_a,
-             |    CAST(coalesce(rb.n, 0) AS BIGINT) AS n_b
-             |  FROM pv LEFT JOIN r ra ON ra.event_type = pv.type_a AND ra.c = pv.c
-             |          LEFT JOIN r rb ON rb.event_type = pv.type_b AND rb.c = pv.c),
+             |${Qh.alignedPairsSql("event_type", "c", "type")},
              |cum AS (SELECT type_a, type_b, c, n_a, n_b,
              |    sum(n_a) OVER (PARTITION BY type_a, type_b ORDER BY c
              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
@@ -2168,29 +2109,7 @@ object Temporal {
           .groupBy(col("event_type"), cents(col("value")).as("c"))
           .agg(count(lit(1)).as("n"))
           .localCheckpoint() // sizes + both pair-grid sides; bounded
-        val sizes = r.groupBy("event_type").agg(sum(col("n")).as("t"))
-        val pairs = sizes.select(col("event_type").as("type_a"), col("t").as("t_a"))
-          .crossJoin(broadcast(sizes.select(col("event_type").as("type_b"),
-            col("t").as("t_b"))))
-          .filter(col("type_a") < col("type_b"))
-        val pk = pairs.select("type_a", "type_b")
-        // Aligned pair grid in ONE aggregate (r13 optimization round):
-        // the former spelling materialized the distinct (pair, c) key set
-        // and LEFT-joined each side's counts back - an extra distinct
-        // exchange plus two grid joins. Tagging each side's rows with a
-        // zero for the other side and summing per (pair, c) produces the
-        // identical aligned rows (absent side = 0) in a single partial-
-        // aggregated exchange.
-        val g = pk
-          .join(r.select(col("event_type").as("type_a"), col("c"), col("n")), Seq("type_a"))
-          .select(col("type_a"), col("type_b"), col("c"),
-            col("n").as("n_a"), lit(0L).as("n_b"))
-          .union(pk
-            .join(r.select(col("event_type").as("type_b"), col("c"), col("n")), Seq("type_b"))
-            .select(col("type_a"), col("type_b"), col("c"),
-              lit(0L).as("n_a"), col("n").as("n_b")))
-          .groupBy("type_a", "type_b", "c")
-          .agg(sum(col("n_a")).as("n_a"), sum(col("n_b")).as("n_b"))
+        val (pairs, g) = Qh.alignedPairs(r, "event_type", "c", "type")
         val w = Window.partitionBy("type_a", "type_b").orderBy("c")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         g.withColumn("ca", sum(col("n_a")).over(w))
@@ -2218,20 +2137,10 @@ object Temporal {
             col("significant"))
           .orderBy("type_a", "type_b")
       },
-      Some("""WITH r AS (SELECT event_type, CAST(round(value*100) AS BIGINT) AS c,
+      Some(s"""WITH r AS (SELECT event_type, CAST(round(value*100) AS BIGINT) AS c,
              |    CAST(count(*) AS BIGINT) AS n
              |  FROM events GROUP BY 1, 2),
-             |sizes AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS t FROM r GROUP BY 1),
-             |pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-             |    a.t AS t_a, b.t AS t_b
-             |  FROM sizes a CROSS JOIN sizes b WHERE a.event_type < b.event_type),
-             |pv AS (SELECT DISTINCT p.type_a, p.type_b, r.c
-             |  FROM pairs p JOIN r ON r.event_type = p.type_a OR r.event_type = p.type_b),
-             |g AS (SELECT pv.type_a, pv.type_b, pv.c,
-             |    CAST(coalesce(ra.n, 0) AS BIGINT) AS n_a,
-             |    CAST(coalesce(rb.n, 0) AS BIGINT) AS n_b
-             |  FROM pv LEFT JOIN r ra ON ra.event_type = pv.type_a AND ra.c = pv.c
-             |          LEFT JOIN r rb ON rb.event_type = pv.type_b AND rb.c = pv.c),
+             |${Qh.alignedPairsSql("event_type", "c", "type")},
              |cum AS (SELECT type_a, type_b, c, n_a, n_b,
              |    sum(n_a) OVER (PARTITION BY type_a, type_b ORDER BY c
              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
@@ -2390,12 +2299,7 @@ object Temporal {
           // testdata (every type has thousands of rows) but keeps the
           // n−1 denominators away from zero on degenerate corpora
           .filter(col("n") > 1L)
-        val pairs = m.select(col("event_type").as("type_a"), col("n").as("n_a"),
-            col("sx").as("sx_a"), col("sxx").as("sxx_a"))
-          .crossJoin(broadcast(m.select(col("event_type").as("type_b"),
-            col("n").as("n_b"), col("sx").as("sx_b"), col("sxx").as("sxx_b"))))
-          .filter(col("type_a") < col("type_b"))
-        pairs
+        Qh.pairGrid(m, "event_type", "type")
           .withColumn("va", expr("CAST(n_a * sxx_a - sx_a * sx_a AS DOUBLE) / " +
             "(CAST(n_a AS DOUBLE) * CAST(n_a - 1 AS DOUBLE))"))
           .withColumn("vb", expr("CAST(n_b * sxx_b - sx_b * sx_b AS DOUBLE) / " +

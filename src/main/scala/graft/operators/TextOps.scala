@@ -791,46 +791,23 @@ object TextOps {
           .select(col("source"), explode(split(col("text"), " ")).as("token"))
           .distinct()
           .localCheckpoint() // sizes + both self-join sides
-        val sizes = vocab.groupBy("source").agg(count(lit(1)).as("v"))
-        val inter = vocab
-          .join(vocab.select(col("source").as("source_b"), col("token")),
-            Seq("token"))
-          .filter(col("source") < col("source_b"))
-          .groupBy(col("source").as("source_a"), col("source_b"))
-          .agg(count(lit(1)).as("v_both"))
-        sizes.select(col("source").as("source_a"), col("v").as("v_a"))
-          .crossJoin(broadcast(sizes.select(col("source").as("source_b"),
-            col("v").as("v_b"))))
-          .filter(col("source_a") < col("source_b"))
-          .join(inter, Seq("source_a", "source_b"), "left")
-          .withColumn("v_both", coalesce(col("v_both"), lit(0L)))
+        Qh.pairOverlap(vocab, "token", "source", "source")
           .withColumn("jaccard_ppm",
-            expr("v_both * 1000000 div (v_a + v_b - v_both)"))
+            expr("n_both * 1000000 div (n_a + n_b - n_both)"))
           .withColumn("overlap_ppm",
-            expr("v_both * 1000000 div least(v_a, v_b)"))
-          .select(col("source_a"), col("source_b"), col("v_a"), col("v_b"),
-            col("v_both"), col("jaccard_ppm"), col("overlap_ppm"))
+            expr("n_both * 1000000 div least(n_a, n_b)"))
+          .select(col("source_a"), col("source_b"), col("n_a").as("v_a"),
+            col("n_b").as("v_b"), col("n_both").as("v_both"),
+            col("jaccard_ppm"), col("overlap_ppm"))
           .orderBy("source_a", "source_b")
       },
-      Some("""WITH vocab AS (SELECT DISTINCT source, token
+      Some(s"""WITH pres AS (SELECT DISTINCT source, token
              |  FROM (SELECT source, unnest(string_split(text, ' ')) AS token FROM documents)),
-             |sizes AS (SELECT source, CAST(count(*) AS BIGINT) AS v FROM vocab GROUP BY 1),
-             |inter AS (SELECT a.source AS source_a, b.source AS source_b,
-             |    CAST(count(*) AS BIGINT) AS v_both
-             |  FROM vocab a JOIN vocab b
-             |    ON b.token = a.token AND a.source < b.source
-             |  GROUP BY 1, 2)
-             |SELECT sa.source AS source_a, sb.source AS source_b,
-             |  sa.v AS v_a, sb.v AS v_b,
-             |  CAST(coalesce(v_both, 0) AS BIGINT) AS v_both,
-             |  CAST(divide(coalesce(v_both, 0) * 1000000,
-             |    sa.v + sb.v - coalesce(v_both, 0)) AS BIGINT) AS jaccard_ppm,
-             |  CAST(divide(coalesce(v_both, 0) * 1000000,
-             |    least(sa.v, sb.v)) AS BIGINT) AS overlap_ppm
-             |FROM sizes sa CROSS JOIN sizes sb
-             |LEFT JOIN inter ON source_a = sa.source AND source_b = sb.source
-             |WHERE sa.source < sb.source
-             |ORDER BY source_a, source_b""".stripMargin),
+             |${Qh.pairOverlapSql("token", "source", "source")}
+             |SELECT source_a, source_b, n_a AS v_a, n_b AS v_b, n_both AS v_both,
+             |  CAST(divide(n_both * 1000000, n_a + n_b - n_both) AS BIGINT) AS jaccard_ppm,
+             |  CAST(divide(n_both * 1000000, least(n_a, n_b)) AS BIGINT) AS overlap_ppm
+             |FROM grid ORDER BY source_a, source_b""".stripMargin),
       doc = "pairwise source-vocabulary overlap: exact Jaccard and " +
         "overlap coefficient in ppm over deduped token vocabularies — " +
         "the corpus-similarity matrix behind mixture planning"),
@@ -2020,60 +1997,33 @@ object TextOps {
     // discipline applied to the source pair grid: exact integer token
     // counts, ppm shares by truncating div, TV = Σ|Δshare| div 2 over
     // the union domain (one-sided tokens contribute their full share).
-    // The rollup is (source × vocab)-bounded; the pair expansion rides
-    // the same tiny broadcast grid as q98/q99.
+    // The rollup is (source × vocab)-bounded; the pair expansion is
+    // q98/q99's aligned grid ([[graft.Qh.alignedPairs]]).
     "text_source_tv" -> QueryDef(
       (s, d) => {
         val r = tbl(s, d, "documents")
           .select(col("source"), explode(split(col("text"), " ")).as("token"))
           .groupBy("source", "token").agg(count(lit(1)).as("n"))
           .localCheckpoint() // sizes + both pair-grid sides
-        val sizes = r.groupBy("source").agg(sum(col("n")).as("t"))
-        val pairs = sizes.select(col("source").as("source_a"), col("t").as("t_a"))
-          .crossJoin(broadcast(sizes.select(col("source").as("source_b"),
-            col("t").as("t_b"))))
-          .filter(col("source_a") < col("source_b"))
-        val pk = pairs.select("source_a", "source_b")
-        val pv = pk.join(r.select(col("source").as("source_a"), col("token")),
-            Seq("source_a"))
-          .select("source_a", "source_b", "token")
-          .union(pk.join(r.select(col("source").as("source_b"), col("token")),
-            Seq("source_b"))
-            .select("source_a", "source_b", "token"))
-          .distinct()
-        pv
-          .join(r.select(col("source").as("source_a"), col("token"),
-            col("n").as("n_a")), Seq("source_a", "token"), "left")
-          .join(r.select(col("source").as("source_b"), col("token"),
-            col("n").as("n_b")), Seq("source_b", "token"), "left")
-          .join(broadcast(pairs), Seq("source_a", "source_b"))
-          .withColumn("d", abs(expr("coalesce(n_a, 0) * 1000000 div t_a") -
-            expr("coalesce(n_b, 0) * 1000000 div t_b")))
+        val (pairs, g) = Qh.alignedPairs(r, "source", "token", "source")
+        g.join(broadcast(pairs), Seq("source_a", "source_b"))
+          .withColumn("d", abs(expr("n_a * 1000000 div t_a") -
+            expr("n_b * 1000000 div t_b")))
           .groupBy("source_a", "source_b")
           .agg(count(lit(1)).as("n_tokens"),
             expr("sum(d) div 2").as("tv_ppm"))
           .orderBy("source_a", "source_b")
       },
-      Some("""WITH r AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n
+      Some(s"""WITH r AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n
              |  FROM (SELECT source, unnest(string_split(text, ' ')) AS token
              |        FROM documents)
              |  GROUP BY 1, 2),
-             |sizes AS (SELECT source, CAST(sum(n) AS BIGINT) AS t FROM r GROUP BY 1),
-             |pairs AS (SELECT a.source AS source_a, b.source AS source_b,
-             |    a.t AS t_a, b.t AS t_b
-             |  FROM sizes a CROSS JOIN sizes b WHERE a.source < b.source),
-             |pv AS (SELECT DISTINCT p.source_a, p.source_b, r.token
-             |  FROM pairs p JOIN r ON r.source = p.source_a OR r.source = p.source_b),
-             |g AS (SELECT pv.source_a, pv.source_b,
-             |    abs(CAST(divide(coalesce(ra.n, 0) * 1000000, p.t_a) AS BIGINT)
-             |      - CAST(divide(coalesce(rb.n, 0) * 1000000, p.t_b) AS BIGINT)) AS d
-             |  FROM pv
-             |  JOIN pairs p ON p.source_a = pv.source_a AND p.source_b = pv.source_b
-             |  LEFT JOIN r ra ON ra.source = pv.source_a AND ra.token = pv.token
-             |  LEFT JOIN r rb ON rb.source = pv.source_b AND rb.token = pv.token)
+             |${Qh.alignedPairsSql("source", "token", "source")}
              |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_tokens,
-             |  CAST(divide(sum(d), 2) AS BIGINT) AS tv_ppm
-             |FROM g GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin),
+             |  CAST(divide(sum(abs(CAST(divide(n_a * 1000000, t_a) AS BIGINT)
+             |    - CAST(divide(n_b * 1000000, t_b) AS BIGINT))), 2) AS BIGINT) AS tv_ppm
+             |FROM g JOIN pairs USING (source_a, source_b)
+             |GROUP BY 1, 2 ORDER BY source_a, source_b""".stripMargin),
       doc = "pairwise source-distribution total variation over the " +
         "union vocabulary in exact ppm — the register-difference signal " +
         "vocabulary overlap cannot see")

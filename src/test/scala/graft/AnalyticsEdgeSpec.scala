@@ -630,4 +630,49 @@ class AnalyticsEdgeSpec extends SparkSpec {
     assert(out(("hi", "same")) == ((10L, 10L, 200L, 480L, 1000000L, zDom, true)), s"$out")
     assert(out(("lo", "same")) == ((10L, 10L, 100L, 1980L, 0L, 0.0, false)), s"$out")
   }
+
+  test("text_source_overlap: disjoint vocabularies surface as an explicit " +
+      "zero row; a contained vocabulary reads overlap 1") {
+    // vocabularies: s1 {a, b, c}, s2 {x, y} (disjoint from both others),
+    // s3 {a, b} (inside s1). (s1, s3): |∩| = 2, |∪| = 3 -> Jaccard
+    // 2e6 div 3 = 666666, overlap 2e6 div min(3, 2) = 1000000.
+    val dir = mkDocs(Seq(
+      (1L, "a b c", "s1"), (2L, "a b", "s1"), (3L, "x y", "s2"),
+      (4L, "y x y", "s2"), (5L, "b a", "s3")))
+    val out = SparkEntry.queries("text_source_overlap")(spark, dir)
+      .collect().map(r => (r.getString(0), r.getString(1)) ->
+        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toMap
+    assert(out.size == 3, s"$out")
+    assert(out(("s1", "s2")) == ((3L, 2L, 0L, 0L, 0L)), s"zero row must exist: $out")
+    assert(out(("s2", "s3")) == ((2L, 2L, 0L, 0L, 0L)), s"zero row must exist: $out")
+    assert(out(("s1", "s3")) == ((3L, 2L, 2L, 666666L, 1000000L)), s"$out")
+  }
+
+  test("text_source_tv: disjoint sources read TV = 1 over the union " +
+      "vocabulary; identical distributions read 0") {
+    // p: a, b once each (500000 ppm shares); q: w, x, y, z once each
+    // (250000 each); r: same shares as p. (p, q) share nothing:
+    // Σ|Δ| = 2·500000 + 4·250000 = 2000000 -> tv 1000000 over the
+    // 6-token union. (p, r): tv 0 over {a, b}.
+    val dir = mkDocs(Seq(
+      (1L, "a b", "p"), (2L, "w x y z", "q"), (3L, "b b a a", "r")))
+    val out = SparkEntry.queries("text_source_tv")(spark, dir)
+      .collect().map(r => (r.getString(0), r.getString(1)) ->
+        (r.getLong(2), r.getLong(3))).toMap
+    assert(out.size == 3, s"$out")
+    assert(out(("p", "q")) == ((6L, 1000000L)), s"$out")
+    assert(out(("q", "r")) == ((6L, 1000000L)), s"$out")
+    assert(out(("p", "r")) == ((2L, 0L)), s"$out")
+  }
+
+  test("pair-grid queries over a single event type return zero rows") {
+    val dir = mkEvents(Seq(
+      (1L, 1L, 1000000L, "only", 1.00), (2L, 2L, 1000001L, "only", 2.50),
+      (3L, 1L, 1000002L, "only", 4.00)))
+    for (q <- Seq("q94_audience_overlap", "q98_ks_pairwise",
+        "q99_mannwhitney", "q106_welch_ttest")) {
+      val rows = SparkEntry.queries(q)(spark, dir).collect()
+      assert(rows.isEmpty, s"$q: ${rows.toSeq}")
+    }
+  }
 }

@@ -207,19 +207,19 @@ class OperatorSpec extends SparkSpec {
       "q87_clustering_coeff", // crossJoin(broadcast(two 1-row count scalars))
       "q88_fk_orphans",  // 7x crossJoin(broadcast(1-row orphan-count scalar))
       "q92_punchcard",   // crossJoin(broadcast(1-row grand-total scalar))
-      "q94_audience_overlap", // crossJoin(broadcast(|types|-row sizes)) pair grid
+      "q94_audience_overlap", // crossJoin(broadcast(|types|-row sizes)) pair grid: Qh.pairOverlap
       "q97_drift_tv",    // crossJoin(broadcast(1-row totals scalar))
-      "q98_ks_pairwise", // crossJoin(broadcast(|types|-row sizes)) pair grid
+      "q98_ks_pairwise", // crossJoin(broadcast(|types|-row sizes)) pair grid: Qh.alignedPairs
       "q100_kanonymity", // crossJoin(broadcast(1-row total scalar))
-      "q102_basket_lift", // crossJoin(broadcast(|brands|-row sizes / 1-row total)) pair grid
+      "q102_basket_lift", // crossJoin(broadcast(|brands|-row sizes)) pair grid: Qh.pairOverlap
       "text_clf_gains",  // crossJoin(broadcast(1-row totals scalar))
-      "text_source_overlap", // crossJoin(broadcast(|sources|-row sizes)) pair grid
-      "q99_mannwhitney", // crossJoin(broadcast(|types|-row sizes)) pair grid
-      "q106_welch_ttest", // crossJoin(broadcast(|types|-row co-moments)) pair grid
+      "text_source_overlap", // crossJoin(broadcast(|sources|-row sizes)) pair grid: Qh.pairOverlap
+      "q99_mannwhitney", // crossJoin(broadcast(|types|-row sizes)) pair grid: Qh.alignedPairs
+      "q106_welch_ttest", // crossJoin(broadcast(|types|-row co-moments)) pair grid: Qh.pairGrid
       "q112_path_3gram", // crossJoin(broadcast(1-row trigram-total scalar))
       "sim_pca_power", // crossJoin(broadcast(1-row n / rescale scalars))
       "q118_lorenz_revenue", // crossJoin(broadcast(1-row revenue-total scalar))
-      "text_source_tv", // crossJoin(broadcast(|sources|-row sizes)) pair grid
+      "text_source_tv", // crossJoin(broadcast(|sources|-row sizes)) pair grid: Qh.alignedPairs
       "text_dedup_distortion", // crossJoin(broadcast(two 1-row token-total scalars))
       "q126_pareto_8020") // crossJoin(broadcast(1-row revenue-total scalar))
     // An unpartitioned Window/WindowGroupLimit materializes its whole

@@ -20,11 +20,15 @@ a flag under BOTH normalizations kills the phantom case while a real
 regression (one query slow relative to everything else on the same
 host) still exceeds both. The anchor is kept as a reported witness.
 
-Exit code 1 on any surviving regression or run failure. Remember the
+Exit code 1 on any surviving regression or run failure; exit code 2
+when the run and the baseline were taken at different scale factors
+(the last path component of their "sf" fields differs), because such a
+comparison says nothing about the code. Remember the
 documented adjudication rule before filing a regression: one min-of-3
 run is noise — re-run the flagged queries min-of-9 on a quiet host.
 """
 import json
+import os
 import sys
 
 
@@ -115,6 +119,15 @@ def main() -> int:
     base = json.load(open(baseline_path))
     try:
         run = bench_line(sys.stdin.read())
+    except ValueError as e:
+        print(f"FATAL: {e}")
+        return 1
+    sf_base, sf_run = (os.path.basename(r.get("sf", "").rstrip("/")) for r in (base, run))
+    if sf_base and sf_run and sf_base != sf_run:
+        print(f"REFUSED: the run is at {sf_run} ({run['sf']}) but the baseline "
+              f"is at {sf_base} ({base['sf']}); re-run at the baseline's scale factor")
+        return 2
+    try:
         r = diff(base, run, threshold)
     except ValueError as e:
         print(f"FATAL: {e}")

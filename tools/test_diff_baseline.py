@@ -20,9 +20,17 @@ zero regressions.
 Case 5: of Bench's two output lines (per-query, then totals-only last),
 the parser picks the one carrying "queries", past an sbt "[info] "
 prefix, and refuses input that has none.
+
+Case 6: a run taken at another scale factor than the baseline (the
+last path component of "sf" differs) is refused with exit code 2 and a
+message naming both, not diffed; the same scale factor under another
+directory is diffed as usual.
 """
 import json
+import os
+import subprocess
 import sys
+import tempfile
 
 from diff_baseline import bench_line, diff
 
@@ -102,7 +110,26 @@ def main() -> int:
     except ValueError:
         pass
 
-    print("test_diff_baseline: 5/5 cases pass")
+    # Case 6: the command line refuses a cross-scale-factor comparison.
+    base, run = _mk(names, secs, 1.0)
+    base["sf"] = "/data/testdata/sf0.1"
+    tool = os.path.join(os.path.dirname(os.path.abspath(__file__)), "diff_baseline.py")
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "baseline.json")
+        with open(path, "w") as fh:
+            json.dump(base, fh)
+
+        def cli(sf):
+            line = dict(run, metric="total", sf=sf)
+            return subprocess.run([sys.executable, tool, path], input=json.dumps(line),
+                                  capture_output=True, text=True)
+        p = cli("/tmp/graft/sf0.01")
+        assert p.returncode == 2, (p.returncode, p.stdout)
+        assert "sf0.01" in p.stdout and "sf0.1" in p.stdout, p.stdout
+        p = cli("/data/sf0.1/")
+        assert p.returncode == 0, (p.returncode, p.stdout)
+
+    print("test_diff_baseline: 6/6 cases pass")
     return 0
 
 
