@@ -1,14 +1,30 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * One parquet file per table under `\$dir/\$name.parquet`. We always go
-  * through `spark.read.parquet` (no schema inference cost, columnar scan,
-  * predicate pushdown + column pruning land in the scan node for free).
+  * One parquet file (or a directory of part files) per table under
+  * `\$dir/\$name.parquet`. Opening a table with a bare `spark.read.parquet`
+  * costs one Spark schema-inference job (a footer read on the executors)
+  * per open, before the query does any work. So the loader infers each
+  * table's schema once per process and opens it with
+  * `spark.read.schema(..).parquet(..)`: a memo hit starts no job. The memo
+  * key is the table's canonical path; its leaf files' count, total length
+  * and latest mtime (a rewritten file or an added part file re-keys); and
+  * the session's `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+  * values, which decide how the footer maps to a Spark schema. The
+  * inference itself runs outside the map's lock, so concurrent openers of
+  * a new key may both infer it; either result is the same schema.
   *
   * `events.ts` has shipped in two physical layouts across testdata
   * generations, so the loader is schema-adaptive:
@@ -29,16 +45,45 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *     (TablesSchemaDriftSpec proves both layouts agree under a non-UTC
   *     zone). On a UTC session the conversion is the identity.
   *
-  * The loader itself is side-effect free and never mutates session config.
+  * The loader never mutates session config.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** What identifies one version of a table as a given session reads it. */
+  private final case class Key(path: String, files: Int, bytes: Long, mtime: Long,
+      conf: Seq[(String, String)])
+
+  private val schemas = new ConcurrentHashMap[Key, StructType]()
+  private val rowCounts = new ConcurrentHashMap[Key, java.lang.Long]()
+
+  /** The memo key of `\$dir/\$name.parquet` and its parquet leaf files
+    * (hidden `_`/`.` files such as `_SUCCESS` and checksums excluded, as
+    * Spark's file index does). A driver-side listing; no job. */
+  private def leaves(spark: SparkSession, dir: String, name: String): (Key, Seq[FileStatus]) = {
+    val p = new Path(s"$dir/$name.parquet")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.resolvePath(p)
+    val it = fs.listFiles(root, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus)
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .toVector
+    val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    (Key(root.toString, files.size, files.map(_.getLen).sum,
+      files.map(_.getModificationTime).foldLeft(0L)(math.max), conf), files)
+  }
+
+  private def memo[V](m: ConcurrentHashMap[Key, V], k: Key)(compute: => V): V =
+    Option(m.get(k)).getOrElse { val v = compute; m.putIfAbsent(k, v); v }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df =
-      try spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val schema = memo(schemas, leaves(spark, dir, name)._1) {
+      try spark.read.parquet(path).schema
       catch {
         // A NANOS file without the legacy flag dies inside Parquet footer
         // conversion (before the schema is inspectable) with an inscrutable
@@ -53,8 +98,26 @@ object Tables {
               ".config(\"spark.sql.legacy.parquet.nanosAsLong\", \"true\") " +
               "(all graft session builders do)", e)
       }
+    }
+    val df = spark.read.schema(schema).parquet(path)
     if (name == "events") df.withColumn("ts", normalizeTs(spark, df, "ts"))
     else df
+  }
+
+  /** Exact row count of a table, summed from its parquet footers on the
+    * driver: no job, and no schema inference, so a size guard can refuse
+    * a table before anything is read. Memoised under the same key as the
+    * schema. */
+  def rows(spark: SparkSession, dir: String, name: String): Long = {
+    val (k, files) = leaves(spark, dir, name)
+    memo(rowCounts, k) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      java.lang.Long.valueOf(files.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally r.close()
+      }.sum)
+    }.longValue
   }
 
   /** Normalize a timestamp column that may arrive as ns-as-long (legacy

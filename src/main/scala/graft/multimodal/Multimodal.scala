@@ -399,7 +399,7 @@ object Multimodal {
     * the moment the generated corpus stops being pure ASCII. */
   def syntheticMedia(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
       .as[(Long, String, Long)]
       .map { case (id, text, n) =>
@@ -425,7 +425,7 @@ object Multimodal {
     * breaks the gate instead of cancelling out. */
   def syntheticWav(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
       .filter(col("doc_id") % 3 === 1)
       .as[(Long, Long)]
@@ -463,7 +463,7 @@ object Multimodal {
     * pixels by DECODING THE CONTAINER. */
   def syntheticImages(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables(spark, dir, "documents")
       .select(col("doc_id"))
       .filter(col("doc_id") % 3 === 0)
       .as[Long]
@@ -559,7 +559,7 @@ object Multimodal {
     * recomputes from the plain table. */
   def syntheticGzipDocs(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, t) =>

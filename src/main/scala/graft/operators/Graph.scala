@@ -330,19 +330,23 @@ object Graph {
             col("l_orderkey") === col("o_orderkey"))
           .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
           .distinct()
-          .localCheckpoint() // both supersteps re-join the edge list
           // (no pre-repartition: forgotten under AQE — q55 note)
-        // r14: node-sized authority/hub tables (≤ |edges| rows each)
-        // broadcast into the superstep joins when small (bcastIfSmall) —
-        // the edge list is then never re-shuffled after materialization.
-        val nEdges = edges.count() // free read off the checkpointed frame
+        // r14: node-sized authority/hub tables broadcast into the superstep
+        // joins when small (bcastIfSmall). Their row bounds come off the
+        // footers, no job: a1 has ≤ distinct l_suppkey ≤ |lineitem| rows,
+        // h1 ≤ distinct o_custkey ≤ |orders|. Nothing is materialised at
+        // build time: the two supersteps' reads of `edges` share one
+        // exchange under AQE reuse. a1's read stays separate because it
+        // lacks the isnotnull(cust) the supersteps' joins infer, and must
+        // (a1 counts edges with a null customer, as the oracle does).
+        val suppBound = graft.Tables.rows(s, d, "lineitem")
+        val custBound = graft.Tables.rows(s, d, "orders")
         val a1 = edges.groupBy("supp").agg(count(lit(1)).as("a1"))
-          .localCheckpoint() // feeds both the h1 superstep and the final stitch
-        val h1 = edges.join(bcastIfSmall(a1, nEdges), Seq("supp"))
+        val h1 = edges.join(bcastIfSmall(a1, suppBound), Seq("supp"))
           .groupBy("cust").agg(sum(col("a1")).as("h1"))
-        val a2 = edges.join(bcastIfSmall(h1, nEdges), Seq("cust"))
+        val a2 = edges.join(bcastIfSmall(h1, custBound), Seq("cust"))
           .groupBy("supp").agg(sum(col("h1")).as("a2"))
-        a2.join(bcastIfSmall(a1, nEdges), Seq("supp"))
+        a2.join(bcastIfSmall(a1, suppBound), Seq("supp"))
           .select(col("supp"), col("a1"), col("a2"))
           .orderBy(col("a2").desc, col("supp"))
           .limit(15)

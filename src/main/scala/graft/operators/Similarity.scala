@@ -493,15 +493,15 @@ object Similarity {
         // Scale guard: this is the O(n²)-per-source EXACT baseline that
         // dedup_ngram_jaccard's LSH prefilter accelerates. Refuse to
         // launch it on a corpus where the self-join would explode; the
-        // cap is a conf so a deliberate baseline run can raise it.
+        // cap is a conf so a deliberate baseline run can raise it. The
+        // count is the footers' exact row count: no job before refusing.
         val cap = Qh.MaxDocs.get(s)
-        val raw = tbl(s, d, "documents")
-        val nDocs = raw.count()
+        val nDocs = graft.Tables.rows(s, d, "documents")
         require(nDocs <= cap,
           s"q28a_jaccard_pairs is the exact all-pairs baseline: $nDocs docs exceeds the " +
-            s"$cap-doc guard. Use dedup_ngram_jaccard (LSH-prefiltered) at scale, or raise " +
-            "spark.graft.q28a.maxDocs for a deliberate baseline run.")
-        val docs = raw
+            s"guard ${Qh.MaxDocs.key}=$cap. Use dedup_ngram_jaccard (LSH-prefiltered) at " +
+            "scale, or raise the guard for a deliberate baseline run.")
+        val docs = tbl(s, d, "documents")
           .select(col("doc_id"), col("source"), tokHashes(col("text")).as("tk"))
         val a = docs.select(col("source"), col("doc_id").as("a"), col("tk").as("ta"))
         val b = docs.select(col("source"), col("doc_id").as("b"), col("tk").as("tb"))

@@ -56,6 +56,7 @@ class KnobSurfaceSpec extends SparkSpec {
     try {
       val ex = intercept[IllegalArgumentException](run)
       assert(ex.getMessage.contains(s"$key=$value"), ex.getMessage)
+      org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
       assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
         "the value is checked before the query runs a job")
       ex.getMessage
@@ -72,6 +73,16 @@ class KnobSurfaceSpec extends SparkSpec {
     assert(msg.contains("not an integer"), msg)
   }
 
+  test("q28a.maxDocs=1: the exact-pairs guard refuses sf0.001 before any job runs") {
+    // the doc count comes off the parquet footers, so neither the count
+    // nor opening `documents` starts a job before the refusal
+    val msg = failsBeforeAnyJob("spark.graft.q28a.maxDocs", "1") {
+      SparkEntry.queries("q28a_jaccard_pairs")(spark, Sf0001)
+    }
+    val nDocs = Tables(spark, Sf0001, "documents").count()
+    assert(msg.contains(s"$nDocs docs"), msg)
+  }
+
   test("bloom.maxEvalShingles=1: text_decontam_bloom's bound fails naming its key") {
     // the bound is checked against the eval set's distinct-shingle count,
     // so unlike the range checks above it fails after that count job
@@ -86,7 +97,7 @@ class KnobSurfaceSpec extends SparkSpec {
   }
 
   test("dedup.bucketSlices=0 fails naming its key before any job runs") {
-    // a local frame: reading a parquet table is itself a (schema) job,
+    // a local frame: a table's first open is itself a (schema) job,
     // so the verifier every LSH dedup query shares is called directly
     val docs = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
       .select(col("doc_id"), Dedup.tokHashes(col("text")).as("tk"))
