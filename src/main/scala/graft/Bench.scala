@@ -89,7 +89,7 @@ object Bench {
     // so the LAST line is totals only (< 1.5 KB): what a parser of the
     // final line needs to grade the run. tools/diff_baseline.py reads the
     // line carrying "queries".
-    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$runsJson,"failed":$failed${fields(drift)},"sf":"$sfDir"}"""
+    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs":$runsJson,"failed":$failed${fields(drift)},"sf":"$sfDir","cpus":${GraftSession.cpus}}"""
     println(fullJson)
     // bench_out.json is the whole-run record: a subset run must not
     // replace it with its few queries

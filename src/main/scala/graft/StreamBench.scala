@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.StructType
   *  1. `windowed_agg` — the SQ3 shape: events through the tumbling
   *     window count (stateful agg, complete mode).
   *  2. `ivm_join` — orders through the materialized-join maintenance
-  *     ingest ([[graft.streaming.Streaming.ivmJoinIngest]]): per-batch
-  *     dim-snapshot join + parquet view append.
+  *     body ([[graft.streaming.Streaming.ivmJoinBatch]] on
+  *     [[graft.streaming.Streaming.batchLane]]): per-batch dim-snapshot
+  *     join + parquet view append.
   *  3. `curate_cluster` — documents through the COMPOSED curation
   *     pipeline ([[graft.streaming.Streaming.curateAndClusterIngest]]):
   *     exact decontamination + canonicalization + Gopher gate, then
@@ -53,12 +54,12 @@ object StreamBench {
     val nOrders = orders.count()
     orders.repartition(16).write.mode("overwrite").json(s"$root/ord")
     val tIvm = timed {
-      val q = S.ivmJoinIngest(
+      val q = S.batchLane(
         S.jsonFileSource(spark, s"$root/ord",
           StructType.fromDDL("o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE"),
           maxFilesPerTrigger = 4),
-        s"$sfDir/customer.parquet", s"$root/view", s"$root/ivm_ckpt",
-        trigger = Trigger.AvailableNow()).start()
+        s"$root/ivm_ckpt", Trigger.AvailableNow())(
+        S.ivmJoinBatch(_, s"$sfDir/customer.parquet", s"$root/view", _)).start()
       q.awaitTermination()
     }
 

@@ -2455,9 +2455,10 @@ object Dedup {
     * the in-flight index write — independent of the returned merge
     * frame, so the caller can run its own snapshot write as a
     * concurrent job and await the future before committing the batch.
-    * The caller MUST await (ready, not just result) before the batch
-    * body returns, even on failure: a dangling write racing a replay's
-    * rewrite of the same batch=N paths would corrupt the index. The
+    * The caller MUST await it before the batch body returns, even on
+    * failure (clusterBatch's drain rule, `Streaming.drainAfter`): a
+    * dangling write racing a replay's rewrite of the same batch=N paths
+    * would corrupt the index. The
     * plain [[mergeAndIndex]] awaits internally and keeps the
     * index-written-on-return contract. */
   private[graft] def mergeAndIndexStaged(clusters: org.apache.spark.sql.DataFrame,

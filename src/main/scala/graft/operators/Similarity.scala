@@ -389,21 +389,21 @@ object Similarity {
     adcRank(codesByM, adcTable(cb, queryVec), qnorm, k)
   }
 
-  /** Write a combined IVF+PQ (IVFADC) index: the cells relation carries
-    * ONLY (vec_id, label, codes) — the 4-bit codes replace the raw
-    * float32 vectors, the 64× residency shrink that makes a 100 TB corpus
-    * probe-able — hive-partitioned by IVF cell, plus the nlist centroid
-    * table (cell choice) and the M×K codebook table (ADC reconstruction).
-    * Like [[writeIvfIndex]], the full corpus is touched exactly once. */
   /** Encode a relation into index rows (vec_id, label, codes, cell)
     * against FIXED codebooks + centroids — shared by the bulk writer and
-    * the streaming ingest ([[graft.streaming.Streaming.pqIngest]]). */
+    * the streaming ingest ([[graft.streaming.Streaming.pqBatch]]). */
   def encodeForIndex(emb: DataFrame, cb: DataFrame, cents: DataFrame): DataFrame =
     pqEncode(emb, cb)
       .join(assignCells(emb, cents), Seq("vec_id"))
       .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
       .select(col("vec_id"), col("label"), col("codes"), col("cell"))
 
+  /** Write a combined IVF+PQ (IVFADC) index: the cells relation carries
+    * ONLY (vec_id, label, codes) — the 4-bit codes replace the raw
+    * float32 vectors, the 64× residency shrink that makes a 100 TB corpus
+    * probe-able — hive-partitioned by IVF cell, plus the nlist centroid
+    * table (cell choice) and the M×K codebook table (ADC reconstruction).
+    * Like [[writeIvfIndex]], the full corpus is touched exactly once. */
   def writeIvfPqIndex(emb: DataFrame, indexDir: String, nlist: Int = 16,
       pqIters: Int = 2, trainIters: Int = 0): Unit = {
     val cents = if (trainIters > 0) trainCentroids(emb, nlist, trainIters)

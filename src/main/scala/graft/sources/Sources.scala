@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
   * `SentimentResults` contract (db/dynamodb.go:17-20,34,201). Parquet at
   * rest; at scale these are partitioned directories whose PK-dedup runs
   * per micro-batch (25-row write chunking is a connector concern —
-  * Streaming.foreachBatchSink).
+  * [[graft.streaming.Streaming.foreachBatchSink]]).
   */
 object Sources {
 

@@ -1,10 +1,13 @@
 package graft.streaming
 
 import graft.schema.Models
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 
 /** Streaming surface SQ1–SQ10 (SURVEY.md §2.2) + SQ11 stream-stream interval join.
   *
@@ -140,20 +143,8 @@ object Streaming {
     * its content_id tracking map (utils/message_tracking.go:11-22) with
     * unbounded state — this is the bounded-state equivalent. */
   def intervalJoin(clicks: DataFrame, purchases: DataFrame,
-      watermark: String = "1 hour", horizonSec: Long = 3600L): DataFrame = {
-    val c = clicks.select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
-    val p = purchases.select(col("user_id").as("p_user_id"),
-        col("event_id").as("purchase_id"), col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", watermark)
-    c.join(p,
-        col("user_id") === col("p_user_id") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $horizonSec SECONDS"))
-      .select(col("user_id"), col("click_id"), col("click_ts"),
-        col("purchase_id"), col("purchase_ts"), col("value"))
-  }
+      watermark: String = "1 hour", horizonSec: Long = 3600L): DataFrame =
+    intervalJoinOf(clicks, purchases, watermark, horizonSec, "inner")
 
   /** SQ11's LEFT OUTER sibling: every click row eventually emits — joined
     * to each qualifying purchase within the horizon, or null-padded once
@@ -166,7 +157,11 @@ object Streaming {
     * a stopped stream leaves still-in-horizon clicks pending
     * (spec-pinned with a watermark-advancing sentinel batch). */
   def intervalJoinOuter(clicks: DataFrame, purchases: DataFrame,
-      watermark: String = "1 hour", horizonSec: Long = 3600L): DataFrame = {
+      watermark: String = "1 hour", horizonSec: Long = 3600L): DataFrame =
+    intervalJoinOf(clicks, purchases, watermark, horizonSec, "leftOuter")
+
+  private def intervalJoinOf(clicks: DataFrame, purchases: DataFrame,
+      watermark: String, horizonSec: Long, joinType: String): DataFrame = {
     val c = clicks.select(col("user_id"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", watermark)
@@ -177,7 +172,7 @@ object Streaming {
         col("user_id") === col("p_user_id") &&
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $horizonSec SECONDS"),
-        "leftOuter")
+        joinType)
       .select(col("user_id"), col("click_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"), col("value"))
   }
@@ -189,39 +184,6 @@ object Streaming {
     df.groupBy(col("topic"))
       .agg(count(lit(1)).as("n"),
         avg(col("sentiment_score")).as("mean_score"))
-
-  /** SQ6 (custom-state variant) — keep-first dedup with an explicit state
-    * TTL via flatMapGroupsWithState + event-time timeout: the state entry
-    * for a key is dropped once the watermark passes its timeout, exactly
-    * the Valkey `EXPIRE 86400` contract (valkey_client.go:130). Use when
-    * dropDuplicatesWithinWatermark's semantics aren't enough (e.g. custom
-    * per-key TTLs or emit-on-expiry). Works on a keyed string dataset. */
-  def dedupFirstStateful(df: DataFrame, keyCol: String, tsCol: String,
-      watermark: String = "24 hours"): DataFrame = {
-    import df.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val keyed = df
-      .withWatermark(tsCol, watermark)
-      .select(col(keyCol).cast("string").as("k"),
-        to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("payload"),
-        col(tsCol).as("event_ts"))
-      .as[(String, String, java.sql.Timestamp)]
-    keyed
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (String, String)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (key, rows, state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else if (state.exists) Iterator.empty // duplicate within TTL
-          else {
-            val first = rows.minBy(_._3.getTime)
-            state.update(first._3.getTime)
-            state.setTimeoutTimestamp(first._3.getTime, watermark)
-            Iterator.single((key, first._2))
-          }
-      }
-      .toDF("k", "payload")
-  }
 
   // ------------------------------------------------------------------
   // Sinks
@@ -240,6 +202,22 @@ object Streaming {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
 
+  /** The one checkpointed micro-batch lane every sink below is built
+    * on: `body` runs once per micro-batch with its batch id, and the
+    * checkpoint commit log records the batch only after `body` returns —
+    * source progress commits AFTER sink success. A body that throws
+    * leaves the batch uncommitted, so a restart from the same checkpoint
+    * replays it; bodies that write only their own `batch=N` paths
+    * (overwrite) are therefore idempotent at-least-once. The `*Batch`
+    * functions below are such bodies — `batchLane(s, ckpt)(sketchBatch(_,
+    * dir, _))` — and stay public so a spec can replay one batch id. */
+  def batchLane(stream: DataFrame, checkpoint: String, trigger: Trigger = DefaultTrigger)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(body)
+
   /** K3/K4 — foreachBatch sink writing in sub-batches of `insertBatch`
     * rows (reference DB write chunking, 25, utils/batching.go:11) through
     * an arbitrary writer. Batch-id based idempotence: the writer receives
@@ -252,22 +230,19 @@ object Streaming {
     * is never collected to the driver — a large batch at 100 TB-ingest
     * rates would OOM a driver-side sink. */
   def foreachBatchSink(df: DataFrame, checkpoint: String, insertBatch: Int = 25)(
-      writer: (Long, Seq[org.apache.spark.sql.Row]) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(DefaultTrigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (n, w) = (insertBatch, writer) // serialize only what the task needs
-        batch.rdd.foreachPartition { it =>
-          it.grouped(n).foreach(rows => w(batchId, rows.toSeq))
-        }
+      writer: (Long, Seq[Row]) => Unit): DataStreamWriter[Row] =
+    batchLane(df, checkpoint) { (batch, batchId) =>
+      val (n, w) = (insertBatch, writer) // serialize only what the task needs
+      batch.rdd.foreachPartition { it =>
+        it.grouped(n).foreach(rows => w(batchId, rows.toSeq))
       }
+    }
 
   /** M1 — health-gated foreachBatch sink (reference
     * monitoring/ai_healthchecks.go:12-48; consumer gating at
     * summary_consumer.go:67-71): the batch body runs only when `healthy()`
-    * reports true. While unhealthy the gate polls `maxTries` times with
-    * `backoffMs` between probes; if the backend stays down the batch
+    * reports true. While unhealthy the gate probes at most `maxTries`
+    * times in all, `backoffMs` apart; if the backend stays down the batch
     * FAILS with an exception — Structured Streaming then does NOT write
     * the batch's commit-log entry, so a later restart reprocesses the
     * SAME batch from the checkpoint. Gating therefore never skips or
@@ -275,68 +250,60 @@ object Streaming {
     * reference pauses consumption on failed healthchecks the same way). */
   def healthGatedSink(df: DataFrame, checkpoint: String, healthy: () => Boolean,
       maxTries: Int = 3, backoffMs: Long = 100, trigger: Trigger = DefaultTrigger)(
-      body: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        var tries = 1
-        while (!healthy() && tries < maxTries) { Thread.sleep(backoffMs); tries += 1 }
-        if (!healthy())
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    batchLane(df, checkpoint, trigger) { (batch, batchId) =>
+      var tries = 1
+      while (!healthy()) {
+        if (tries >= maxTries)
           throw new IllegalStateException(
             s"backend unhealthy after $maxTries probes; failing batch $batchId for retry")
-        body(batch, batchId)
+        Thread.sleep(backoffMs); tries += 1
       }
+      body(batch, batchId)
+    }
 
-  /** Streaming near-dup ingest: every micro-batch is deduped against the
-    * persistent LSH band index ([[graft.operators.Dedup.incrementalNearDup]])
-    * and the kept docs land under `keptDir/batch=N` — per-batch overwrite
-    * paths, so checkpoint-recovery replays rewrite rather than duplicate
+  /** Streaming near-dup ingest, one micro-batch: the batch is deduped
+    * against the persistent LSH band index
+    * ([[graft.operators.Dedup.incrementalNearDup]]) and the kept docs
+    * land under `keptDir/batch=N` — per-batch overwrite paths, so
+    * checkpoint-recovery replays rewrite rather than duplicate
     * (idempotent at-least-once, the reference's true end-to-end contract).
     * This is T7's cross-run dedup upgraded from exact post-id equality to
     * MinHash-LSH near-dup — the arrival-time dedup a 100 TB training-data
     * ingest needs (the kept corpus is never re-clustered, only probed). */
-  def nearDupIngest(stream: DataFrame, indexDir: String, keptDir: String,
-      checkpoint: String, threshold: Double = 0.7,
-      trigger: Trigger = DefaultTrigger): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val kept = graft.operators.Dedup.incrementalNearDup(batch, indexDir, threshold, batchId)
-        kept.write.mode("overwrite").parquet(s"$keptDir/batch=$batchId")
-      }
+  def nearDupBatch(batch: DataFrame, indexDir: String, keptDir: String,
+      batchId: Long, threshold: Double = 0.7): Unit =
+    graft.operators.Dedup.incrementalNearDup(batch, indexDir, threshold, batchId)
+      .write.mode("overwrite").parquet(s"$keptDir/batch=$batchId")
 
-  /** Streaming ANN-index maintenance — the vector counterpart of
-    * [[nearDupIngest]]: each arriving embedding micro-batch is encoded
+  /** Streaming ANN-index maintenance, one micro-batch — the vector
+    * counterpart of [[nearDupBatch]]: the arriving embeddings are encoded
     * against the index's FROZEN codebooks and centroid table (trained once
     * at bulk-build time by [[graft.operators.Similarity.writeIvfPqIndex]] —
     * the standard IVFADC operating mode: retraining is an offline rebuild,
-    * never an ingest-path concern) and written to its own versioned cells
+    * never an ingest-path concern) and written to their own versioned cells
     * path `cells/batch=1+id/cell=K`. A replayed micro-batch overwrites the
     * same path from the same input — idempotent at-least-once. Probes
     * ([[graft.operators.Similarity.ivfPqProbe]]) see new vectors on their
     * next run: partition discovery unions every batch directory and cell
     * pruning applies across all of them. */
-  def pqIngest(stream: DataFrame, indexDir: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val cb = s.read.parquet(s"$indexDir/codebooks")
-        val cents = s.read.parquet(s"$indexDir/centroids")
-        graft.operators.Similarity.encodeForIndex(batch, cb, cents)
-          .write.partitionBy("cell").mode("overwrite")
-          .parquet(s"$indexDir/cells/batch=${batchId + 1}")
-      }
+  def pqBatch(batch: DataFrame, indexDir: String, batchId: Long): Unit = {
+    val s = batch.sparkSession
+    val cb = s.read.parquet(s"$indexDir/codebooks")
+    val cents = s.read.parquet(s"$indexDir/centroids")
+    graft.operators.Similarity.encodeForIndex(batch, cb, cents)
+      .write.partitionBy("cell").mode("overwrite")
+      .parquet(s"$indexDir/cells/batch=${batchId + 1}")
+  }
 
-  /** Streaming cluster maintenance — the retain-and-track counterpart of
-    * [[nearDupIngest]]: each micro-batch merges into the near-dup cluster
-    * table ([[graft.operators.Dedup.mergeClusters]], closure update on a
+  /** Streaming cluster maintenance, one micro-batch — the
+    * retain-and-track counterpart of [[nearDupBatch]]: the batch merges
+    * into the near-dup cluster table
+    * ([[graft.operators.Dedup.mergeClusters]], closure update on a
     * batch-sized micro-graph) and then indexes itself
     * ([[graft.operators.Dedup.indexBatch]]) so later batches can probe it.
+    * Composed pipelines ([[curateAndClusterIngest]]) run it on a derived
+    * frame inside their own batch body.
     *
     * The cluster table is stored as VERSIONED FULL SNAPSHOTS
     * (`clustersDir/batch=N`): each batch reads the latest snapshot below
@@ -349,22 +316,7 @@ object Streaming {
     * a production deployment at 100 TB ingest cadence would swap the
     * storage for a merge-on-read table format (the merge DELTA — new rows
     * + the bounded relabel map — is what mergeClusters actually computes)
-    * while keeping this exact dataflow. */
-  def clusterIngest(stream: DataFrame, indexDir: String, clustersDir: String,
-      checkpoint: String, threshold: Double = 0.8,
-      trigger: Trigger = DefaultTrigger,
-      reliableCheckpointDir: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        clusterBatch(batch, indexDir, clustersDir, batchId, threshold, reliableCheckpointDir)
-      }
-
-  /** One [[clusterIngest]] micro-batch — public (like [[curateBatch]])
-    * so recovery semantics are directly testable by replaying a batch
-    * id, and so composed pipelines ([[curateAndClusterIngest]]) can run
-    * it on a derived frame inside their own foreachBatch.
+    * while keeping this exact dataflow.
     *
     * (r12 note: carrying the prior snapshot in memory across batches —
     * localCheckpoint + reuse instead of re-reading batch=N-1 parquet —
@@ -390,7 +342,7 @@ object Streaming {
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
       Dedup.compactIndex(spark, indexDir, excludeBatch = Some(batchId))
     val prior = latestClusterSnapshot(spark, clustersDir, belowBatch = batchId)
-      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, cluster BIGINT")))
     // reliableCheckpointDir: pass on a real cluster so a lost executor
     // mid-propagation recomputes instead of failing the micro-batch.
@@ -402,24 +354,15 @@ object Streaming {
     // write below runs as a concurrent job — three independent writes,
     // one serial slot. Replay stays correct for ANY subset of batch=N
     // outputs a crash leaves (every read here excludes batch N and every
-    // write is an overwrite of its own batch=N path); the await below
+    // write is an overwrite of its own batch=N path); the drain
     // guarantees all three are durable before the checkpoint commits.
     val (merged, idxF) = Dedup.mergeAndIndexStaged(prior, batch, indexDir, batchId,
       threshold, reliableCheckpointDir)
-    var snapshotFailed: Throwable = null
-    try merged.write.mode("overwrite").parquet(s"$clustersDir/batch=$batchId")
-    catch { case t: Throwable => snapshotFailed = t; throw t }
-    finally {
-      // ALWAYS drain the in-flight index writes before leaving the batch
-      // body — a dangling write racing a replay would corrupt the index —
-      // and surface their failure when the snapshot write succeeded.
-      scala.concurrent.Await.ready(idxF, scala.concurrent.duration.Duration.Inf)
-      if (snapshotFailed == null) idxF.value.get.get
-    }
+    drainAfter(idxF)(merged.write.mode("overwrite").parquet(s"$clustersDir/batch=$batchId"))
   }
 
   /** The full streaming curation pipeline a training-data ingest
-    * deploys: [[curateIngest]] CHAINED into [[clusterIngest]] as one
+    * deploys: [[curateBatch]] CHAINED into [[clusterBatch]] as one
     * composed micro-batch job. Each batch is gated (exact
     * decontamination + seeded canonicalization + Gopher quality), the
     * kept docs land under `keptDir/batch=N`, and the SAME kept docs then
@@ -439,102 +382,50 @@ object Streaming {
       fpDir: String, keptDir: String, indexDir: String, clustersDir: String,
       checkpoint: String, threshold: Double = 0.8,
       trigger: Trigger = DefaultTrigger,
-      reliableCheckpointDir: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] = {
+      reliableCheckpointDir: Option[String] = None): DataStreamWriter[Row] = {
     val eval = evalArtifacts(evalDocs, reliableCheckpointDir) // once per stream, not per batch
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Staged curate: both gate writes (kept + fp store) run IN
-        // FLIGHT while the cluster half starts from the CACHED kept
-        // frame — the same materialized rows the kept write is putting
-        // under batch=N, so the halves cannot diverge (one
-        // materialization feeds both sinks; a mid-batch recompute is
-        // deterministic over the same inputs). Recovery keeps the
-        // parquet as the contract: a replayed batch re-derives the same
-        // kept set and rewrites it, and the standalone-replay path
-        // (CurateIngestSpec) clusters straight from the written parquet.
-        val st = curateBatchStaged(batch, eval, fpDir, keptDir, batchId)
-        var clusterFailed: Throwable = null
-        try clusterBatch(st.kept, indexDir, clustersDir, batchId, threshold,
-          reliableCheckpointDir)
-        catch { case t: Throwable => clusterFailed = t; throw t }
-        finally {
-          // drain the in-flight gate writes before the checkpoint commits
-          // (and before a failure triggers a replay that rewrites their
-          // paths), then release the batch caches
-          scala.concurrent.Await.ready(st.writes, scala.concurrent.duration.Duration.Inf)
-          st.release()
-          if (clusterFailed == null) st.writes.value.get.get
-        }
-      }
+    batchLane(stream, checkpoint, trigger) { (batch, batchId) =>
+      // Staged curate: both gate writes (kept + fp store) run IN
+      // FLIGHT while the cluster half starts from the CACHED kept
+      // frame — the same materialized rows the kept write is putting
+      // under batch=N, so the halves cannot diverge (one
+      // materialization feeds both sinks; a mid-batch recompute is
+      // deterministic over the same inputs). Recovery keeps the
+      // parquet as the contract: a replayed batch re-derives the same
+      // kept set and rewrites it, and the standalone-replay path
+      // (CurateIngestSpec) clusters straight from the written parquet.
+      val st = curateBatchStaged(batch, eval, fpDir, keptDir, batchId)
+      // the gate writes drain before the checkpoint commits (and before
+      // a failure triggers a replay that rewrites their paths); the
+      // batch caches are released after them
+      try drainAfter(st.writes)(
+        clusterBatch(st.kept, indexDir, clustersDir, batchId, threshold, reliableCheckpointDir))
+      finally st.release()
+    }
   }
 
-  /** One-call streaming curation — the ingest-time composition of the
-    * batch corpus_manifest verdict, for the parts that are exact and
-    * stateless-or-append-only at arrival time:
-    *
-    *  1. EXACT decontamination against a bounded eval set: any doc
-    *     sharing a 3-gram shingle with `evalDocs` drops. This is the
-    *     equi-join semantics of text_contamination, not the bloom
-    *     approximation ([[decontamGate]]) — eval sets are fixed bounded
-    *     artifacts, so their distinct shingle hashes broadcast.
-    *  2. Exact-duplicate canonicalization: first-seen (source, fp) wins —
-    *     in-batch by min doc_id, cross-batch against the persistent
-    *     fingerprint store under `fpDir` (T5's sha-keyed dedup at
-    *     corpus-curation semantics). The store is additionally SEEDED
-    *     with the eval set's fingerprints: an eval doc's exact duplicate
-    *     can never be kept, independent of the contamination/quality
-    *     gates that happen to also catch it at the current thresholds
-    *     (a ≥3-token exact dup shares every shingle; a shorter one
-    *     fails the Gopher top-token gate — but neither masking is a
-    *     contract).
-    *  3. Gopher repetition-quality gate — the SAME
-    *     [[graft.Qh.GopherDupMilli]]/[[graft.Qh.GopherTopMilli]]
-    *     constants text_repetition and corpus_manifest interpolate.
-    *
-    * Kept docs land under `keptDir/batch=N`, fresh fingerprints under
-    * `fpDir/batch=N` — per-batch overwrite paths with the store read
-    * EXCLUDING the current batch id, so a checkpoint-recovery replay
-    * rewrites its own output from its own input instead of duplicating
-    * or self-matching (the [[nearDupIngest]] contract). CurateIngestSpec
-    * asserts the kept set ≡ the batch manifest's
-    * canonical ∧ quality ∧ ¬contaminated verdict on the same corpus, and
-    * replay idempotence.
-    *
-    * Near-dup clustering and splits are deliberately NOT gated here:
-    * they are retain-and-track surfaces ([[clusterIngest]]) whose
-    * verdicts can change as clusters grow — a keep/drop decision at
-    * arrival time would not be replay-stable. Chain this gate's output
-    * into clusterIngest for the full curation pipeline. */
-  def curateIngest(stream: DataFrame, evalDocs: DataFrame, fpDir: String,
-      keptDir: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger,
-      reliableCheckpointDir: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val eval = evalArtifacts(evalDocs, reliableCheckpointDir) // once per stream, not per batch
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curateBatch(batch, eval, fpDir, keptDir, batchId)
-      }
+  /** The drain rule of a batch body that leaves writes in flight: ALWAYS
+    * await `writes` before leaving — a dangling write racing a replay's
+    * rewrite of the same batch=N paths would corrupt the outputs — then
+    * rethrow `body`'s failure if it failed, else surface the writes'. */
+  private[graft] def drainAfter(writes: Future[Unit])(body: => Unit): Unit = {
+    try body
+    catch { case t: Throwable => Await.ready(writes, Duration.Inf); throw t }
+    Await.result(writes, Duration.Inf)
   }
 
-  /** One [[curateIngest]] micro-batch — public so recovery semantics are
-    * directly testable (CurateIngestSpec replays a batch id). */
   /** Batch-invariant eval-set artifacts for [[curateBatch]]: the eval
     * docs' distinct shingle hashes and (source, fp) fingerprints. The
     * eval set is a FIXED bounded artifact passed to every micro-batch,
-    * so the ingest entry points compute this ONCE per stream instead of
-    * re-aggregating the eval docs in every foreachBatch — two fewer
-    * shuffle jobs per batch at an identical kept set (the r10
-    * lane-amortization pass).
+    * so a stream computes this ONCE instead of re-aggregating the eval
+    * docs in every batch body — two fewer shuffle jobs per batch at an
+    * identical kept set (the r10 lane-amortization pass).
     *
     * Durability (r11, the ADVICE fix): localCheckpoint blocks live on
     * executors — on a real cluster, losing the executor holding them
     * fails EVERY subsequent micro-batch (lineage is truncated, so
     * recompute is impossible) until the query is externally restarted.
-    * When `reliableCheckpointDir` is set (the same option clusterIngest
+    * When `reliableCheckpointDir` is set (the same option clusterBatch
     * threads to the merge path for the same hazard), the artifacts are
     * checkpointed to reliable storage instead: a lost executor re-reads
     * from the DFS. Local mode / tests keep the zero-setup
@@ -564,16 +455,49 @@ object Streaming {
     EvalArtifacts(sh, fps, !sh.isEmpty, !fps.isEmpty)
   }
 
-  /** Single-shot form (tests, one-off batches): derives the eval
-    * artifacts in place. Streaming entry points precompute them. */
-  def curateBatch(batch: DataFrame, evalDocs: DataFrame, fpDir: String,
-      keptDir: String, batchId: Long): Unit =
-    curateBatch(batch, evalArtifacts(evalDocs), fpDir, keptDir, batchId)
-
+  /** Streaming curation, one micro-batch — the ingest-time composition
+    * of the batch corpus_manifest verdict, for the parts that are exact
+    * and stateless-or-append-only at arrival time. `eval` is computed
+    * once per stream by [[evalArtifacts]].
+    *
+    *  1. EXACT decontamination against a bounded eval set: any doc
+    *     sharing a 3-gram shingle with the eval docs drops. This is the
+    *     equi-join semantics of text_contamination, not the bloom
+    *     approximation ([[decontamGate]]) — eval sets are fixed bounded
+    *     artifacts, so their distinct shingle hashes broadcast.
+    *  2. Exact-duplicate canonicalization: first-seen (source, fp) wins —
+    *     in-batch by min doc_id, cross-batch against the persistent
+    *     fingerprint store under `fpDir` (T5's sha-keyed dedup at
+    *     corpus-curation semantics). The store is additionally SEEDED
+    *     with the eval set's fingerprints: an eval doc's exact duplicate
+    *     can never be kept, independent of the contamination/quality
+    *     gates that happen to also catch it at the current thresholds
+    *     (a ≥3-token exact dup shares every shingle; a shorter one
+    *     fails the Gopher top-token gate — but neither masking is a
+    *     contract).
+    *  3. Gopher repetition-quality gate — the SAME
+    *     [[graft.Qh.GopherDupMilli]]/[[graft.Qh.GopherTopMilli]]
+    *     constants text_repetition and corpus_manifest interpolate.
+    *
+    * Kept docs land under `keptDir/batch=N`, fresh fingerprints under
+    * `fpDir/batch=N` — per-batch overwrite paths with the store read
+    * EXCLUDING the current batch id, so a checkpoint-recovery replay
+    * rewrites its own output from its own input instead of duplicating
+    * or self-matching (the [[nearDupBatch]] contract). CurateIngestSpec
+    * asserts the kept set ≡ the batch manifest's
+    * canonical ∧ quality ∧ ¬contaminated verdict on the same corpus, and
+    * replay idempotence.
+    *
+    * Near-dup clustering and splits are deliberately NOT gated here:
+    * they are retain-and-track surfaces ([[clusterBatch]]) whose
+    * verdicts can change as clusters grow — a keep/drop decision at
+    * arrival time would not be replay-stable.
+    * [[curateAndClusterIngest]] chains this gate into clusterBatch for
+    * the full curation pipeline. */
   def curateBatch(batch: DataFrame, eval: EvalArtifacts, fpDir: String,
       keptDir: String, batchId: Long, compactEvery: Int = CompactEvery): Unit = {
     val st = curateBatchStaged(batch, eval, fpDir, keptDir, batchId, compactEvery)
-    try scala.concurrent.Await.result(st.writes, scala.concurrent.duration.Duration.Inf)
+    try Await.result(st.writes, Duration.Inf)
     finally st.release()
   }
 
@@ -585,7 +509,7 @@ object Streaming {
     * batch's caches (call after awaiting `writes` AND after the last
     * consumer of `kept`). */
   private[graft] final case class StagedCurate(kept: DataFrame,
-      writes: scala.concurrent.Future[Unit], release: () => Unit)
+      writes: Future[Unit], release: () => Unit)
 
   /** STAGED form of [[curateBatch]] for per-batch action overlap in the
     * composed lane: BOTH writes (kept set + fingerprint store) launch
@@ -595,10 +519,9 @@ object Streaming {
     * The handed-off cache cannot diverge from the written parquet: one
     * materialization feeds both (a cache-evicted partition recomputes
     * from deterministic lineage over the same inputs). The caller MUST
-    * await `writes` (ready, not just result) before its batch body
-    * returns, even on failure — a dangling write racing a replay's
-    * rewrite of the same batch=N paths would corrupt the outputs — and
-    * then call `release()`. [[curateBatch]] does both internally. */
+    * drain `writes` ([[drainAfter]]) before its batch body returns, even
+    * on failure, and then call `release()`. [[curateBatch]] does both
+    * internally. */
   private[graft] def curateBatchStaged(batch: DataFrame, eval: EvalArtifacts,
       fpDir: String, keptDir: String, batchId: Long,
       compactEvery: Int = CompactEvery): StagedCurate = {
@@ -668,11 +591,11 @@ object Streaming {
       .select("doc_id", "source", "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     implicit val ec: scala.concurrent.ExecutionContext = graft.Qh.ioEc
-    val keptF = scala.concurrent.Future {
+    val keptF = Future {
       keptOut.write.mode("overwrite").parquet(s"$keptDir/batch=$batchId")
     }
     // ALL fresh fingerprints persist, kept or not (see above).
-    val fpF = scala.concurrent.Future {
+    val fpF = Future {
       // stamp BEFORE the write: a crash in between leaves a stamped
       // marker-only dir (readFpStore's explicit schema reads it empty),
       // not current-fold data that requireHashVersion would refuse
@@ -684,7 +607,7 @@ object Streaming {
       () => { fresh.unpersist(blocking = false); keptOut.unpersist(blocking = false); () })
   }
 
-  /** Persistent fingerprint store reader for [[curateIngest]]: hive
+  /** Persistent fingerprint store reader for [[curateBatch]]: hive
     * batch=N partitions, rows from `excludeBatch` filtered out so a
     * replayed micro-batch never dedups against its own previous write.
     * Refuses a mid-swap tree (interrupted [[compactFpStore]]) LOUDLY —
@@ -712,7 +635,7 @@ object Streaming {
 
   /** Compact the fingerprint store's per-batch dirs into one reserved
     * `batch=-1` generation — the [[graft.operators.Dedup.compactIndex]]
-    * analog for [[curateIngest]]'s exact-dup store, which otherwise
+    * analog for [[curateBatch]]'s exact-dup store, which otherwise
     * accumulates one directory per micro-batch forever (the same
     * unbounded-metadata growth the band index had). Same two call
     * shapes and the same crash-safe swap protocol: maintenance
@@ -779,7 +702,7 @@ object Streaming {
     }
   }
 
-  /** Record-level contract verdicts for [[contractGate]]: append a
+  /** Record-level contract verdicts for [[contractBatch]]: append a
     * `reason` column naming the FIRST failed check (null = clean).
     * Checks are the record-level half of q67's table battery —
     * completeness (user_id), value domain (event_type ∈ `domain`),
@@ -814,26 +737,14 @@ object Streaming {
   }
 
   /** Streaming data-quality gate (the q67 contract battery at ingest
-    * time): every micro-batch is split into accepted rows
+    * time), one micro-batch: the batch is split into accepted rows
     * (`acceptedDir/batch=N`) and quarantined rows with their failure
     * reason (`quarantineDir/batch=N`) — accepted ∪ quarantine ≡ input,
     * disjoint, so NOTHING is silently dropped: bad records stay
     * replayable once the upstream bug is fixed (the dead-letter-queue
     * shape every production ingest needs). Per-batch overwrite paths
     * make checkpoint-recovery replays rewrite rather than duplicate
-    * (the [[nearDupIngest]] idempotence contract). */
-  def contractGate(stream: DataFrame, domain: Seq[String], maxValueC: Long,
-      acceptedDir: String, quarantineDir: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        contractBatch(batch, domain, maxValueC, acceptedDir, quarantineDir, batchId)
-      }
-
-  /** One [[contractGate]] micro-batch — public so recovery semantics are
-    * directly testable (the [[curateBatch]] precedent). */
+    * (the [[nearDupBatch]] idempotence contract). */
   def contractBatch(batch: DataFrame, domain: Seq[String], maxValueC: Long,
       acceptedDir: String, quarantineDir: String, batchId: Long): Unit = {
     val v = recordChecks(batch, domain, maxValueC).persist()
@@ -845,28 +756,17 @@ object Streaming {
     } finally { v.unpersist(); () }
   }
 
-  /** Streaming sketch maintenance — the ingest half of q61's
-    * build-once/merge-cheap contract: every micro-batch appends its
-    * per-(event_type, day) HLL user sketches (plus exact event counts)
-    * under `sketchDir/batch=N`, and ANY later rollup window is a cheap
-    * union of those 12-KB states ([[sketchTotals]]) instead of a
-    * re-scan of the raw stream. HLL union is a register-wise max — a
-    * commutative, idempotent lattice join — so the read-side estimate
-    * is independent of batch boundaries and merge order; per-batch
-    * overwrite paths keep checkpoint-recovery replays idempotent (the
-    * [[nearDupIngest]] contract). At 100 TB this is how a distinct-users
-    * dashboard stays O(types × days × 12 KB) while the event stream is
-    * unbounded. */
-  def sketchIngest(stream: DataFrame, sketchDir: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sketchBatch(batch, sketchDir, batchId)
-      }
-
-  /** One [[sketchIngest]] micro-batch (public for replay tests). */
+  /** Streaming sketch maintenance, one micro-batch — the ingest half of
+    * q61's build-once/merge-cheap contract: the batch's per-(event_type,
+    * day) HLL user sketches (plus exact event counts) land under
+    * `sketchDir/batch=N`, and ANY later rollup window is a cheap union of
+    * those 12-KB states ([[sketchTotals]]) instead of a re-scan of the
+    * raw stream. HLL union is a register-wise max — a commutative,
+    * idempotent lattice join — so the read-side estimate is independent
+    * of batch boundaries and merge order; per-batch overwrite paths keep
+    * checkpoint-recovery replays idempotent (the [[nearDupBatch]]
+    * contract). At 100 TB this is how a distinct-users dashboard stays
+    * O(types × days × 12 KB) while the event stream is unbounded. */
   def sketchBatch(batch: DataFrame, sketchDir: String, batchId: Long): Unit =
     batch
       .select(col("event_type"), date_trunc("day", col("ts")).cast("date").as("day"),
@@ -887,9 +787,10 @@ object Streaming {
         sum(col("n_events")).as("n_events"))
       .orderBy("event_type")
 
-  /** Streaming materialized-join maintenance — the ingest half of q90's
-    * delta-join algebra. Each micro-batch of fact rows (orders shape:
-    * `o_orderkey, o_custkey, o_totalprice`) is joined against the
+  /** Streaming materialized-join maintenance, one micro-batch — the
+    * ingest half of q90's delta-join algebra. Each micro-batch of fact
+    * rows (orders shape: `o_orderkey, o_custkey, o_totalprice`) is
+    * joined against the
     * CURRENT dim snapshot under `dimDir` and materialized under
     * `viewDir/batch=N`; the view is the union of batch partitions, and
     * the q90 algebra guarantees it equals the one-shot join of
@@ -899,7 +800,7 @@ object Streaming {
     * its own micro-batch (the streaming-enrichment contract; full
     * history tracking is q51's SCD2, not this). Per-batch overwrite
     * paths keep checkpoint-recovery replays idempotent (the
-    * [[nearDupIngest]] contract) — with the explicit caveat that a
+    * [[nearDupBatch]] contract) — with the explicit caveat that a
     * REPLAYED batch re-reads the dim snapshot as of RECOVERY time, so
     * replay is byte-identical only while the dim is unchanged between
     * the original run and the recovery; if the dim moved in between,
@@ -907,17 +808,6 @@ object Streaming {
     * arrival-time-consistent, just a later arrival). At scale each batch is one
     * broadcast/shuffle join of BATCH-sized facts — the unbounded fact
     * history is never re-joined. */
-  def ivmJoinIngest(stream: DataFrame, dimDir: String, viewDir: String,
-      checkpoint: String, trigger: Trigger = DefaultTrigger)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivmJoinBatch(batch, dimDir, viewDir, batchId)
-      }
-
-  /** One [[ivmJoinIngest]] micro-batch (public for replay tests). */
   def ivmJoinBatch(batch: DataFrame, dimDir: String, viewDir: String,
       batchId: Long): Unit = {
     val dim = batch.sparkSession.read.parquet(dimDir)
@@ -937,30 +827,20 @@ object Streaming {
       .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_c"))
       .orderBy("c_mktsegment")
 
-  /** Streaming distribution-drift monitor — q97's ingest half. Each
-    * micro-batch's value histogram (the q97 fixed 20-bucket cent grid)
-    * is materialized under `histDir/batch=N`; the LIVE distribution is
+  /** Streaming distribution-drift monitor, one micro-batch — q97's
+    * ingest half. Each micro-batch's value histogram (the q97 fixed
+    * 20-bucket cent grid: cents div 1000 clamped to [0, 19]) is
+    * materialized under `histDir/batch=N`; the LIVE distribution is
     * the per-bucket SUM across batch partitions (counts are a
     * commutative monoid, so the read side is batch-boundary- and
-    * merge-order-independent, the [[sketchIngest]] lattice argument),
+    * merge-order-independent, the [[sketchBatch]] lattice argument),
     * and [[driftStatus]]/[[driftAlarm]] compare it against a frozen
     * reference histogram as exact total-variation ppm. Per-batch
     * overwrite paths keep checkpoint-recovery replays idempotent (the
-    * [[nearDupIngest]] contract). At 100 TB the store is
+    * [[nearDupBatch]] contract). At 100 TB the store is
     * O(batches × 20 rows) and the unbounded stream is never re-scanned
     * — the drift gate a training pipeline leaves running between
     * corpus refreshes, now with per-micro-batch freshness. */
-  def driftIngest(stream: DataFrame, histDir: String, checkpoint: String,
-      trigger: Trigger = DefaultTrigger): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftBatch(batch, histDir, batchId)
-      }
-
-  /** One [[driftIngest]] micro-batch (public for replay tests): the
-    * q97 bucketing — cents div 1000 clamped to [0, 19]. */
   def driftBatch(batch: DataFrame, histDir: String, batchId: Long): Unit =
     batch
       .select(graft.Qh.cents(col("value")).as("c"))
@@ -1017,7 +897,7 @@ object Streaming {
     * (documented trade; a late-tolerant variant would watermark+buffer,
     * the [[intervalJoin]] class). Batch ≡ stream at any split under the
     * ordered-feed contract is spec-pinned (StreamPathSpec), like
-    * [[ivmJoinIngest]]/[[driftIngest]].
+    * [[ivmJoinBatch]]/[[driftBatch]].
     *
     * Scale: state is 2 small tuples PER USER KEY EVER SEEN when
     * `idleTtl = None` (the default) — fine for bounded keyspaces, but on

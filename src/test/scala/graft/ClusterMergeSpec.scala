@@ -69,10 +69,9 @@ class ClusterMergeSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_cling_").toFile.getAbsolutePath
     val ms = MemoryStream[CorpusDoc](spark)
     def runOnce(): Unit = {
-      val q = Streaming.clusterIngest(
-        ms.toDF().withColumn("source", lit("src0")),
-        s"$root/index", s"$root/clusters", s"$root/ckpt",
-        trigger = Trigger.AvailableNow()).start()
+      val q = Streaming.batchLane(ms.toDF().withColumn("source", lit("src0")),
+          s"$root/ckpt", Trigger.AvailableNow())(
+        Streaming.clusterBatch(_, s"$root/index", s"$root/clusters", _)).start()
       q.awaitTermination()
     }
     // batch 0: two near-dup pairs + a singleton; batch 1: a doc that

@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.Trigger
 case class CEvent(event_id: Long, ts: Timestamp, user_id: Option[Long],
     event_type: String, value: Double)
 
-/** Streaming data-quality gate ([[Streaming.contractGate]]): the q67
+/** Streaming data-quality gate ([[Streaming.contractBatch]]): the q67
   * expectation battery applied record-level at ingest — accepted and
   * quarantined rows partition the input, reasons are deterministic,
   * replays rewrite instead of duplicating. */
@@ -36,8 +36,8 @@ class ContractGateSpec extends SparkSpec {
       CEvent(5, ts(5), Some(13), "purchase", 2000000.0),   // above range
       CEvent(6, ts(6), Some(14), "click", 7.0),            // dup pair: first kept
       CEvent(6, ts(7), Some(15), "click", 8.0)))           // dup pair: quarantined
-    val q = Streaming.contractGate(ms.toDF(), Domain, MaxC,
-      s"$root/ok", s"$root/dlq", s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+    val q = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.contractBatch(_, Domain, MaxC, s"$root/ok", s"$root/dlq", _)).start()
     q.awaitTermination()
 
     val ok = spark.read.parquet(s"$root/ok")
@@ -60,8 +60,8 @@ class ContractGateSpec extends SparkSpec {
 
     val ms = MemoryStream[CEvent](spark)
     ms.addData(fixture)
-    val start = () => Streaming.contractGate(ms.toDF(), Domain, MaxC,
-      s"$root/ok", s"$root/dlq", s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+    val start = () => Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.contractBatch(_, Domain, MaxC, s"$root/ok", s"$root/dlq", _)).start()
     val q0 = start(); q0.awaitTermination()
 
     val streamOk = spark.read.parquet(s"$root/ok")

@@ -10,7 +10,8 @@ import org.apache.spark.sql.streaming.Trigger
 /** Top-level for Encoder derivation (see [[Doc]]). */
 case class CDoc(doc_id: Long, source: String, text: String)
 
-/** One-call streaming curation gate ([[Streaming.curateIngest]]):
+/** Streaming curation gate ([[Streaming.curateBatch]] on
+  * [[Streaming.batchLane]]):
   * decontamination + exact canonicalization + quality, replay-idempotent,
   * equivalent to the batch corpus_manifest verdict on the same corpus. */
 class CurateIngestSpec extends SparkSpec {
@@ -25,8 +26,9 @@ class CurateIngestSpec extends SparkSpec {
 
     val ms = MemoryStream[CDoc](spark)
     ms.addData(corpus.as[CDoc].collect().toSeq)
-    val q = Streaming.curateIngest(ms.toDF(), evalDocs, s"$root/fp", s"$root/kept",
-      s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+    val eval = Streaming.evalArtifacts(evalDocs) // once per stream
+    val q = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.curateBatch(_, eval, s"$root/fp", s"$root/kept", _)).start()
     q.awaitTermination()
     val streamKept = spark.read.parquet(s"$root/kept")
       .select("doc_id").as[Long].collect().toSeq.sorted
@@ -57,8 +59,9 @@ class CurateIngestSpec extends SparkSpec {
       CDoc(2, "s", evalText + " plus some extra trailing context"),
       CDoc(3, "s", Seq.fill(40)("spam").mkString(" ")),
       CDoc(4, "s", evalText)))
-    val start = () => Streaming.curateIngest(ms.toDF(), evalDocs, s"$root/fp",
-      s"$root/kept", s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+    val eval = Streaming.evalArtifacts(evalDocs) // once per stream
+    val start = () => Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.curateBatch(_, eval, s"$root/fp", s"$root/kept", _)).start()
     val q0 = start(); q0.awaitTermination()
     val kept0 = spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
     assert(kept0 == Seq(1L), s"batch 0 kept $kept0")
@@ -91,7 +94,7 @@ class CurateIngestSpec extends SparkSpec {
       CDoc(14, "s", "an entirely novel narrative mentioning watermarks checkpoints and state stores"),
       CDoc(15, "s", evalText))
       .toDF("doc_id", "source", "text")
-    Streaming.curateBatch(replayBatch, evalDocs, s"$root/fp", s"$root/kept", 1L)
+    Streaming.curateBatch(replayBatch, eval, s"$root/fp", s"$root/kept", 1L)
     val keptReplay = spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
     assert(keptReplay == Seq(1L, 14L), s"replay kept $keptReplay")
   }
@@ -180,8 +183,7 @@ class CurateIngestSpec extends SparkSpec {
     val b0 = Seq(CDoc(1, "s", good1)).toDF("doc_id", "source", "text")
     val b1 = Seq(CDoc(2, "s", good2), CDoc(12, "s", good1)).toDF("doc_id", "source", "text")
     val b2 = Seq(CDoc(3, "s", good3), CDoc(13, "s", good2)).toDF("doc_id", "source", "text")
-    val evalDocs = b0.limit(0)
-    val eval = Streaming.evalArtifacts(evalDocs)
+    val eval = Streaming.evalArtifacts(b0.limit(0))
     def run(root: String, every: Int): Seq[Long] = {
       Seq(b0, b1, b2).zipWithIndex.foreach { case (b, i) =>
         Streaming.curateBatch(b, eval, s"$root/fp", s"$root/kept", i.toLong, every)
@@ -207,12 +209,12 @@ class CurateIngestSpec extends SparkSpec {
     assert(new java.io.File(s"$rootB/fp").renameTo(new java.io.File(s"$rootB/fp.old")))
     val e = intercept[IllegalStateException] {
       Streaming.curateBatch(Seq(CDoc(99, "s", good1)).toDF("doc_id", "source", "text"),
-        evalDocs, s"$rootB/fp", s"$rootB/kept", 3L)
+        eval, s"$rootB/fp", s"$rootB/kept", 3L)
     }
     assert(e.getMessage.contains("compactFpStore"), s"mid-swap store must not read as empty: ${e.getMessage}")
     Streaming.compactFpStore(spark, s"$rootB/fp")
     Streaming.curateBatch(Seq(CDoc(99, "s", good1)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$rootB/fp", s"$rootB/kept", 3L)
+      eval, s"$rootB/fp", s"$rootB/kept", 3L)
     // doc 99 duplicates good1 → must still dedup against the recovered store
     assert(spark.read.parquet(s"$rootB/kept").select("doc_id").as[Long].collect().toSeq.sorted == off)
   }
@@ -267,22 +269,23 @@ class CurateIngestSpec extends SparkSpec {
     // leftover `.new` and complete.
     val good = "a perfectly reasonable document with plenty of distinct informative tokens"
     val root = Files.createTempDirectory("graft_fpcrash_pre_").toString
-    val evalDocs = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    val eval = Streaming.evalArtifacts(
+      Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text"))
     Streaming.curateBatch(Seq(CDoc(1, "s", good)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 0L)
+      eval, s"$root/fp", s"$root/kept", 0L)
     val neu = new java.io.File(s"$root/fp.new/batch=-1")
     assert(neu.mkdirs())
     java.nio.file.Files.write(neu.toPath.resolve("part-stale.parquet"), "stale".getBytes)
     // pre-recovery reads serve the live store: the dup of doc 1 drops
     Streaming.curateBatch(Seq(CDoc(11, "s", good)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 1L)
+      eval, s"$root/fp", s"$root/kept", 1L)
     assert(spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
       == Seq(1L), "a pre-rename crash must leave dedup serving the intact live store")
     Streaming.compactFpStore(spark, s"$root/fp") // discards stale .new
     assert(!new java.io.File(s"$root/fp.new").exists(), "fp.new must be cleaned up")
     assert(!new java.io.File(s"$root/fp.old").exists(), "fp.old must be cleaned up")
     Streaming.curateBatch(Seq(CDoc(21, "s", good)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 2L)
+      eval, s"$root/fp", s"$root/kept", 2L)
     assert(spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
       == Seq(1L), "post-recovery dedup must still match the pre-crash store")
   }
@@ -294,16 +297,17 @@ class CurateIngestSpec extends SparkSpec {
     // original back, ignoring the orphaned `.new`.
     val good = "another wholly original text mentioning shuffles partitions and adaptive execution"
     val root = Files.createTempDirectory("graft_fpcrash_mid_").toString
-    val evalDocs = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    val eval = Streaming.evalArtifacts(
+      Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text"))
     Streaming.curateBatch(Seq(CDoc(1, "s", good)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 0L)
+      eval, s"$root/fp", s"$root/kept", 0L)
     assert(new java.io.File(s"$root/fp").renameTo(new java.io.File(s"$root/fp.old")))
     val neu = new java.io.File(s"$root/fp.new/batch=-1")
     assert(neu.mkdirs())
     java.nio.file.Files.write(neu.toPath.resolve("part-candidate.parquet"), "gen".getBytes)
     val e = intercept[IllegalStateException] {
       Streaming.curateBatch(Seq(CDoc(11, "s", good)).toDF("doc_id", "source", "text"),
-        evalDocs, s"$root/fp", s"$root/kept", 1L)
+        eval, s"$root/fp", s"$root/kept", 1L)
     }
     assert(e.getMessage.contains("compactFpStore"),
       s"mid-swap store must not read as empty: ${e.getMessage}")
@@ -311,7 +315,7 @@ class CurateIngestSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/fp.new").exists(), "fp.new must be cleaned up")
     assert(!new java.io.File(s"$root/fp.old").exists(), "fp.old must be cleaned up")
     Streaming.curateBatch(Seq(CDoc(11, "s", good)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 1L)
+      eval, s"$root/fp", s"$root/kept", 1L)
     assert(spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
       == Seq(1L), "the recovered store must still dedup the duplicate")
   }
@@ -340,14 +344,15 @@ class CurateIngestSpec extends SparkSpec {
     val q1 = start(); q1.awaitTermination()
     // mid-stream recovery replay: rerun batch 1's composed body directly
     // (same inputs, same batch id) — both halves must rewrite in place
-    Streaming.curateBatch(h2.toDF(), evalDocs, s"$root/fp", s"$root/kept", 1L)
+    val eval = Streaming.evalArtifacts(evalDocs)
+    Streaming.curateBatch(h2.toDF(), eval, s"$root/fp", s"$root/kept", 1L)
     Streaming.clusterBatch(
       spark.read.parquet(s"$root/kept/batch=1"), s"$root/idx", s"$root/clusters", 1L)
 
     // kept set ≡ one batch curateBatch call over the whole corpus
     val streamKept = spark.read.parquet(s"$root/kept")
       .select("doc_id").as[Long].collect().toSet
-    Streaming.curateBatch(corpus, evalDocs, s"$root/bfp", s"$root/bkept", 0L)
+    Streaming.curateBatch(corpus, eval, s"$root/bfp", s"$root/bkept", 0L)
     val batchKept = spark.read.parquet(s"$root/bkept")
       .select("doc_id").as[Long].collect().toSet
     assert(streamKept == batchKept,

@@ -1,12 +1,9 @@
 package graft
 
 import graft.functions.Functions
-import graft.streaming.Streaming
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-/** UDAF, json_repair, and the stateful-dedup custom state operator. */
+/** UDAF and json_repair. */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -85,22 +82,5 @@ class FunctionsSpec extends SparkSpec {
         Functions.jsonRepairDeclarative(dirty).as("d"))
       .filter(col("n") =!= col("d")).count()
     assert(diff == 0L)
-  }
-
-  test("dedupFirstStateful: keep-first per key across micro-batches, state TTL via watermark") {
-    val ms = MemoryStream[Ev](spark)
-    val out = Streaming.dedupFirstStateful(ms.toDF(), "event_id", "ts")
-    val q = out.writeStream.format("memory").queryName("fmgws_dedup")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00")
-    ms.addData(Ev(1, t(5), 1, "click", 1.0), Ev(2, t(6), 1, "click", 2.0))
-    q.processAllAvailable()
-    ms.addData(Ev(1, t(7), 1, "click", 9.0)) // duplicate key within TTL
-    q.processAllAvailable()
-    ms.addData(Ev(3, t(10), 2, "buy", 3.0))
-    q.processAllAvailable()
-    q.stop()
-    val keys = spark.table("fmgws_dedup").select("k").as[String].collect().sorted.toSeq
-    assert(keys == Seq("1", "2", "3"), s"got $keys")
   }
 }

@@ -180,12 +180,12 @@ class IncrementalDedupSpec extends SparkSpec {
     val ms = MemoryStream[Doc](spark)
     // two adds → two micro-batches under AvailableNow
     ms.addData(Seq(Doc(1, alpha, t(1)), Doc(2, beta, t(2))))
-    val q1 = Streaming.nearDupIngest(ms.toDF(), s"$root/index", s"$root/kept",
-      s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+    val q1 = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.nearDupBatch(_, s"$root/index", s"$root/kept", _)).start()
     q1.awaitTermination()
     ms.addData(Seq(Doc(3, alpha, t(10)), Doc(4, "entirely novel narrative about watermarks and state stores", t(11))))
-    val q2 = Streaming.nearDupIngest(ms.toDF(), s"$root/index", s"$root/kept",
-      s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+    val q2 = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.nearDupBatch(_, s"$root/index", s"$root/kept", _)).start()
     q2.awaitTermination()
     val kept = spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq.sorted
     assert(kept == Seq(1L, 2L, 4L), s"kept $kept")

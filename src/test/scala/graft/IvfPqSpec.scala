@@ -118,8 +118,9 @@ class IvfPqSpec extends SparkSpec {
     val ms = MemoryStream[EmbRow](spark)
     ms.addData(late.select($"vec_id", $"label", $"embedding")
       .as[EmbRow].collect().toSeq)
-    val q = graft.streaming.Streaming.pqIngest(ms.toDF(), dir, s"$root/ckpt",
-      trigger = Trigger.AvailableNow()).start()
+    val S = graft.streaming.Streaming
+    val q = S.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      S.pqBatch(_, dir, _)).start()
     q.awaitTermination()
 
     val idx = spark.read.parquet(s"$dir/cells")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.Trigger
 case class SEvent(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double)
 
-/** Streaming HLL sketch maintenance ([[Streaming.sketchIngest]]): the
+/** Streaming HLL sketch maintenance ([[Streaming.sketchBatch]]): the
   * ingest half of q61 — daily states appended per batch, any window
   * answered by a cheap union, batch-boundary-invariant, replay-safe. */
 class SketchIngestSpec extends SparkSpec {
@@ -35,8 +35,8 @@ class SketchIngestSpec extends SparkSpec {
       val root = Files.createTempDirectory(s"graft_sketch_$tag").toFile.getAbsolutePath
       val ms = MemoryStream[SEvent](spark)
       all.grouped(split).foreach(g => ms.addData(g))
-      val q = Streaming.sketchIngest(ms.toDF(), s"$root/sk", s"$root/ckpt",
-        trigger = Trigger.AvailableNow()).start()
+      val q = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+        Streaming.sketchBatch(_, s"$root/sk", _)).start()
       q.awaitTermination()
       val est = Streaming.sketchTotals(spark, s"$root/sk").collect()
         .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("approx_users")).toMap
@@ -57,8 +57,8 @@ class SketchIngestSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_sketch_rp").toFile.getAbsolutePath
     val ms = MemoryStream[SEvent](spark)
     ms.addData(all)
-    val q = Streaming.sketchIngest(ms.toDF(), s"$root/sk", s"$root/ckpt",
-      trigger = Trigger.AvailableNow()).start()
+    val q = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.sketchBatch(_, s"$root/sk", _)).start()
     q.awaitTermination()
     val before = Streaming.sketchTotals(spark, s"$root/sk").collect().toSeq.toString
     // recovery path: batch 0 re-processes the same input

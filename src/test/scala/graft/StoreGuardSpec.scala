@@ -77,26 +77,27 @@ class StoreGuardSpec extends SparkSpec {
   }
 
   test("fp store: unstamped refuses; stamped store round-trips through compactFpStore") {
-    val evalDocs = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    val eval = Streaming.evalArtifacts(
+      Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text"))
     // unstamped store with valid columns
     val badRoot = java.nio.file.Files.createTempDirectory("graft_hv_fp_bad_").toString
     Seq(("s", 123L)).toDF("source", "fp").write.parquet(s"$badRoot/fp/batch=0")
     val e = intercept[IllegalStateException] {
       Streaming.curateBatch(Seq((1L, "s", doc)).toDF("doc_id", "source", "text"),
-        evalDocs, s"$badRoot/fp", s"$badRoot/kept", 1L)
+        eval, s"$badRoot/fp", s"$badRoot/kept", 1L)
     }
     assert(e.getMessage.contains("hash-fold version"), s"got: ${e.getMessage}")
     // stamped store: curateBatch stamps on write; compaction preserves it
     val root = java.nio.file.Files.createTempDirectory("graft_hv_fp_ok_").toString
     Streaming.curateBatch(Seq((1L, "s", doc)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 0L)
+      eval, s"$root/fp", s"$root/kept", 0L)
     assert(new java.io.File(s"$root/fp/_graft_hash_v").exists(), "curateBatch must stamp the store")
     Streaming.compactFpStore(spark, s"$root/fp")
     assert(new java.io.File(s"$root/fp/_graft_hash_v").exists(),
       "the compaction swap must carry the stamp")
     // and the duplicate still dedups against the compacted store
     Streaming.curateBatch(Seq((11L, "s", doc)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 1L)
+      eval, s"$root/fp", s"$root/kept", 1L)
     assert(spark.read.parquet(s"$root/kept").select("doc_id").as[Long].collect().toSeq
       == Seq(1L))
   }
@@ -117,9 +118,10 @@ class StoreGuardSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_hv_fp_marker_").toString
     new java.io.File(s"$root/fp").mkdirs()
     Qh.stampHashVersion(spark, s"$root/fp")
-    val evalDocs = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    val eval = Streaming.evalArtifacts(
+      Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text"))
     Streaming.curateBatch(Seq((1L, "s", doc)).toDF("doc_id", "source", "text"),
-      evalDocs, s"$root/fp", s"$root/kept", 0L)
+      eval, s"$root/fp", s"$root/kept", 0L)
     assert(spark.read.parquet(s"$root/kept").count() == 1,
       "marker-only fp store must behave as an empty store")
   }
@@ -148,6 +150,38 @@ class StoreGuardSpec extends SparkSpec {
       scala.concurrent.duration.Duration(10, "s"))
   }
 
+  // Streaming.drainAfter, the rule of a batch body that leaves writes in
+  // flight: always await them, rethrow the body's failure, otherwise
+  // surface the writes' failure.
+  private def drainCase(write: => Unit)(body: => Unit): (Option[Throwable], Boolean) = {
+    implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.global
+    val writeDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writes = scala.concurrent.Future[Unit] {
+      try write finally writeDone.set(true)
+    }
+    val raised = scala.util.Try(Streaming.drainAfter(writes)(body)).failed.toOption
+    (raised, writeDone.get())
+  }
+
+  test("drainAfter: a failing body waits for the sleeping write, then raises its own failure") {
+    val (raised, writeDone) = drainCase {
+      Thread.sleep(800); throw new RuntimeException("write failure")
+    }(throw new RuntimeException("body failure"))
+    assert(writeDone, "the body's failure left before the in-flight write completed")
+    assert(raised.map(_.getMessage).contains("body failure"), s"raised $raised")
+  }
+
+  test("drainAfter: a succeeding body surfaces the write's failure") {
+    val (raised, writeDone) = drainCase(throw new RuntimeException("write failure"))(())
+    assert(writeDone)
+    assert(raised.map(_.getMessage).contains("write failure"), s"raised $raised")
+  }
+
+  test("drainAfter: body and write both succeed, nothing is raised") {
+    val (raised, writeDone) = drainCase(Thread.sleep(200))(())
+    assert(writeDone && raised.isEmpty, s"raised $raised")
+  }
+
   test("setReliableCheckpointDir: differing pre-set dir warns loudly; same-dir re-set is a silent no-op") {
     val dirA = java.nio.file.Files.createTempDirectory("graft_ckpt_a_").toString
     val dirB = java.nio.file.Files.createTempDirectory("graft_ckpt_b_").toString
@@ -169,7 +203,7 @@ class StoreGuardSpec extends SparkSpec {
         "same-dir re-set must keep the existing UUID subdir")
       assert(!errBuf.toString.contains("WARNING"), s"same-dir re-set must not warn: $errBuf")
       // differing dir: warn + last-wins (the documented session-global hazard,
-      // e.g. two concurrent curateIngest streams with different reliable dirs)
+      // e.g. two concurrent curation streams with different reliable dirs)
       Qh.setReliableCheckpointDir(spark, dirB)
       val out = errBuf.toString
       assert(out.contains("WARNING") && out.contains("SESSION-GLOBAL"),

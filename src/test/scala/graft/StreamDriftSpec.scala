@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.Streaming
 
-/** Streaming distribution-drift monitor (`Streaming.driftIngest`) —
+/** Streaming distribution-drift monitor (`Streaming.driftBatch`) —
   * q97's stream twin: the maintained live histogram must equal the
   * one-shot histogram at ANY batch split (counts are a commutative
   * monoid), replays must be idempotent, and the TV verdict must read
@@ -32,8 +32,8 @@ class StreamDriftSpec extends SparkSpec {
   private def ingest(root: String, batches: Seq[Seq[Ev]]): Unit = {
     val ms = MemoryStream[Ev](spark)
     batches.foreach(ms.addData(_))
-    val q = Streaming.driftIngest(ms.toDF(), s"$root/hist", s"$root/ckpt",
-      trigger = Trigger.AvailableNow()).start()
+    val q = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.driftBatch(_, s"$root/hist", _)).start()
     q.awaitTermination()
   }
 

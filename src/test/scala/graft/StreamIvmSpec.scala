@@ -10,7 +10,7 @@ import graft.streaming.Streaming
 case class SOrder(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
     o_totalprice: Double, o_orderdate: Timestamp, o_orderpriority: String)
 
-/** Streaming materialized-join maintenance (`Streaming.ivmJoinIngest`) —
+/** Streaming materialized-join maintenance (`Streaming.ivmJoinBatch`) —
   * the stream twin of q90's delta-join algebra: the per-batch maintained
   * view must equal the one-shot join at ANY batch split, replays must be
   * idempotent, and a dim update between batches must bind with
@@ -42,8 +42,8 @@ class StreamIvmSpec extends SparkSpec {
       writeDim(s"$root/dim")
       val ms = MemoryStream[SOrder](spark)
       all.grouped(split).foreach(g => ms.addData(g))
-      val q = Streaming.ivmJoinIngest(ms.toDF(), s"$root/dim", s"$root/view",
-        s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+      val q = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+        Streaming.ivmJoinBatch(_, s"$root/dim", s"$root/view", _)).start()
       q.awaitTermination()
       val got = Streaming.ivmJoinView(spark, s"$root/view")
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -57,8 +57,8 @@ class StreamIvmSpec extends SparkSpec {
     writeDim(s"$root/dim")
     val ms = MemoryStream[SOrder](spark)
     ms.addData(all)
-    val q = Streaming.ivmJoinIngest(ms.toDF(), s"$root/dim", s"$root/view",
-      s"$root/ckpt", trigger = Trigger.AvailableNow()).start()
+    val q = Streaming.batchLane(ms.toDF(), s"$root/ckpt", Trigger.AvailableNow())(
+      Streaming.ivmJoinBatch(_, s"$root/dim", s"$root/view", _)).start()
     q.awaitTermination()
     val before = Streaming.ivmJoinView(spark, s"$root/view")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap

@@ -69,6 +69,24 @@ class StreamingSpec extends SparkSpec {
     val dupes = events ++ Seq(Ev(1, ts(5), 1, "click", 1.0), Ev(3, ts(65), 2, "click", 3.0))
     val out = streamed(dupes, Streaming.dedupWithinWatermark(_, Seq("event_id")), mode = "append")
     assert(out.count() == events.size)
+
+    // keep-first across three micro-batches: a key's later copy (other
+    // value, later ts, inside the 24 h watermark) never emits
+    val ms = MemoryStream[Ev](spark)
+    val name = s"q${System.nanoTime()}"
+    val q = Streaming.dedupWithinWatermark(ms.toDF(), Seq("event_id"))
+      .writeStream.format("memory").queryName(name).outputMode("append")
+      .trigger(Trigger.ProcessingTime(0)).start()
+    ms.addData(Ev(1, ts(5), 1, "click", 1.0), Ev(2, ts(6), 1, "click", 2.0))
+    q.processAllAvailable()
+    ms.addData(Ev(1, ts(7), 1, "click", 9.0))
+    q.processAllAvailable()
+    ms.addData(Ev(3, ts(10), 2, "buy", 3.0))
+    q.processAllAvailable()
+    q.stop()
+    val kept = spark.table(name).select("event_id", "value").as[(Long, Double)]
+      .collect().sorted.toSeq
+    assert(kept == Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)), s"got $kept")
   }
 
   test("SQ8 router: strict >1024 threshold fans out to two branches") {
@@ -205,8 +223,10 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[Ev](spark)
     ms.addData(events)
     val healthy = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val probes = new java.util.concurrent.atomic.AtomicInteger()
     val out = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    def start() = Streaming.healthGatedSink(ms.toDF(), s"$dir/ckpt", () => healthy.get(),
+    def start() = Streaming.healthGatedSink(ms.toDF(), s"$dir/ckpt",
+        () => { probes.incrementAndGet(); healthy.get() },
         maxTries = 2, backoffMs = 10, trigger = Trigger.AvailableNow()) { (b, _) =>
       b.collect().foreach(r => out.add(r.getAs[Long]("event_id")))
     }.start()
@@ -215,6 +235,7 @@ class StreamingSpec extends SparkSpec {
     val q1 = start()
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] { q1.awaitTermination() }
     assert(out.isEmpty, "no rows may reach the sink while unhealthy")
+    assert(probes.get() == 2, s"the failed attempt probes exactly maxTries = 2 times, not ${probes.get()}")
 
     // backend recovers: restart from the SAME checkpoint reprocesses the
     // failed batch — gating delayed the data, never dropped it
@@ -242,6 +263,31 @@ class StreamingSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     assert(probes.get() >= 2, "gate must have re-probed after the first unhealthy answer")
     assert(out.asScala.toSeq.sorted == events.map(_.event_id).sorted)
+  }
+
+  test("foreachBatch appears in src/main/scala only inside Streaming.batchLane") {
+    // Every checkpointed micro-batch sink is built on batchLane, so the
+    // commit-after-sink contract has one header; a second
+    // writeStream → foreachBatch copy fails this sweep. Comments and
+    // the foreachBatchSink name do not count.
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val lines = (f: java.io.File) => scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+    val hits = for {
+      f <- sources(new java.io.File("src/main/scala"))
+      (line, i) <- lines(f).zipWithIndex
+      code = line.trim.split("//", 2)(0)
+      if !code.startsWith("*") && !code.startsWith("/*")
+      if """\bforeachBatch\b""".r.findFirstIn(code).isDefined
+    } yield (f.getPath, i + 1)
+    val file = "src/main/scala/graft/streaming/Streaming.scala"
+    val src = lines(new java.io.File(file))
+    val from = src.indexWhere(_.contains("def batchLane(")) + 1
+    val to = src.indexWhere(_.trim.isEmpty, from)
+    assert(from > 0 && hits.size == 1 && hits.forall(h =>
+      h._1 == file && h._2 > from && h._2 <= to),
+      s"foreachBatch outside Streaming.batchLane (lines $from-$to): ${hits.mkString("; ")}")
   }
 
   test("SQ3 late data beyond the watermark is dropped from the aggregate") {

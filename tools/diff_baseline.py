@@ -22,7 +22,8 @@ host) still exceeds both. The anchor is kept as a reported witness.
 
 Exit code 1 on any surviving regression or run failure; exit code 2
 when the run and the baseline were taken at different scale factors
-(the last path component of their "sf" fields differs), because such a
+(the last path component of their "sf" fields differs) or, when both
+record one, at different core counts ("cpus"), because such a
 comparison says nothing about the code. Remember the
 documented adjudication rule before filing a regression: one min-of-3
 run is noise — re-run the flagged queries min-of-9 on a quiet host.
@@ -126,6 +127,11 @@ def main() -> int:
     if sf_base and sf_run and sf_base != sf_run:
         print(f"REFUSED: the run is at {sf_run} ({run['sf']}) but the baseline "
               f"is at {sf_base} ({base['sf']}); re-run at the baseline's scale factor")
+        return 2
+    cpus_base, cpus_run = base.get("cpus"), run.get("cpus")
+    if cpus_base is not None and cpus_run is not None and cpus_base != cpus_run:
+        print(f"REFUSED: the run used {cpus_run} cores but the baseline {cpus_base}; "
+              f"re-run with SPARK_GRAFT_CPUS={cpus_base}")
         return 2
     try:
         r = diff(base, run, threshold)

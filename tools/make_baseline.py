@@ -25,6 +25,7 @@ def main():
     out = {
         "recorded": tag,
         "sf": bench.get("sf"),
+        "cpus": bench.get("cpus"),
         "unit": "sec",
         "total_secs": bench.get("value"),
         "anchor_query": "q28a_jaccard_pairs",

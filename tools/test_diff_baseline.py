@@ -25,6 +25,10 @@ Case 6: a run taken at another scale factor than the baseline (the
 last path component of "sf" differs) is refused with exit code 2 and a
 message naming both, not diffed; the same scale factor under another
 directory is diffed as usual.
+
+Case 7: a run taken at another core count than the baseline (both
+carry "cpus") is refused with exit code 2 and a message naming both;
+the same count, or a side without "cpus", is diffed as usual.
 """
 import json
 import os
@@ -129,7 +133,31 @@ def main() -> int:
         p = cli("/data/sf0.1/")
         assert p.returncode == 0, (p.returncode, p.stdout)
 
-    print("test_diff_baseline: 6/6 cases pass")
+    # Case 7: the command line refuses a cross-core-count comparison.
+    with tempfile.TemporaryDirectory() as tmp:
+        def cli_cpus(base_cpus, run_cpus):
+            b = dict(base)
+            if base_cpus is not None:
+                b["cpus"] = base_cpus
+            path = os.path.join(tmp, "baseline.json")
+            with open(path, "w") as fh:
+                json.dump(b, fh)
+            line = dict(run, metric="total", sf="/data/sf0.1")
+            if run_cpus is not None:
+                line["cpus"] = run_cpus
+            return subprocess.run([sys.executable, tool, path], input=json.dumps(line),
+                                  capture_output=True, text=True)
+        p = cli_cpus(4, 32)
+        assert p.returncode == 2, (p.returncode, p.stdout)
+        assert "32" in p.stdout and "4" in p.stdout, p.stdout
+        p = cli_cpus(4, 4)
+        assert p.returncode == 0, (p.returncode, p.stdout)
+        p = cli_cpus(None, 32)
+        assert p.returncode == 0, (p.returncode, p.stdout)
+        p = cli_cpus(4, None)
+        assert p.returncode == 0, (p.returncode, p.stdout)
+
+    print("test_diff_baseline: 7/7 cases pass")
     return 0
 
 
